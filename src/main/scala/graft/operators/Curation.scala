@@ -281,7 +281,7 @@ object Curation {
     * threshold meets the target (run a wider sweep, don't guess). */
   def pickCalibratedThreshold(spark: org.apache.spark.sql.SparkSession,
       path: String, minWeightFrac: Double): Double = {
-    val ok = spark.read.parquet(path)
+    val ok = LakeRead.parquet(spark, path)
       .select(col("threshold"), col("weight_frac")).collect()
       .filter(_.getDouble(1) >= minWeightFrac).map(_.getDouble(0))
     require(ok.nonEmpty,
@@ -464,7 +464,7 @@ object Curation {
       dstPath: String): Unit = {
     val spark = incDf.sparkSession
     import spark.implicits._
-    val stored = spark.read.parquet(srcPath)
+    val stored = LakeRead.parquet(spark, srcPath)
       .select(col("b"), col("rc"), col("tc")).orderBy(col("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val buckets = stored.length

@@ -306,7 +306,7 @@ object Dedup {
       idCol: String, path: String, shingleLen: Int = 3, bands: Int = 8,
       rowsPerBand: Int = 2, bucketCap: Int = 2000): Unit = {
     val cut = Lineage.cut(cappedAppendSignatures(survivors, textCol,
-      idCol, survivors.sparkSession.read.parquet(path), shingleLen,
+      idCol, LakeRead.parquet(survivors.sparkSession, path), shingleLen,
       bands, rowsPerBand, bucketCap))
     cut.write.mode("append").parquet(path)
     Lineage.free(cut)
@@ -355,7 +355,7 @@ object Dedup {
       idCol: String, path: String, shingleLen: Int = 3, bands: Int = 8,
       rowsPerBand: Int = 2, minEstJaccard: Double = 0.5,
       bucketCap: Int = 2000): DataFrame =
-    minhashLshLakeStepAt(newDf, newDf.sparkSession.read.parquet(path),
+    minhashLshLakeStepAt(newDf, LakeRead.parquet(newDf.sparkSession, path),
       textCol, idCol, path,
       org.apache.spark.sql.SaveMode.Append, shingleLen, bands,
       rowsPerBand, minEstJaccard, bucketCap)

@@ -18,7 +18,9 @@ import scala.concurrent.duration.Duration
   * still-running sibling writer over the same directories. `Inf` waits
   * are deliberate: these are bounded Spark actions whose failure mode
   * is an exception, not a hang; a finite timeout would turn slow-disk
-  * stalls into spurious corruption-shaped failures.
+  * stalls into spurious corruption-shaped failures. The same holds
+  * when the CALLER is interrupted: the pool is drained before the
+  * interrupt propagates (see [[drain]]).
   */
 private[graft] object DriverPool {
 
@@ -35,7 +37,23 @@ private[graft] object DriverPool {
       // exception), then rethrow the first in-order failure
       fs.foreach(f => Await.ready(f, Duration.Inf))
       fs.map(_.value.get.get)
-    } finally pool.shutdown()
+    } finally drain(pool)
+  }
+
+  /** Shut `pool` down and wait, uninterruptibly, until every task it
+    * accepted has finished — so no writer outlives the call that
+    * started it, even when that call is unwinding from an exception or
+    * an interrupt. An interrupt that arrives during the wait is
+    * re-asserted on the thread afterwards. */
+  def drain(pool: java.util.concurrent.ExecutorService): Unit = {
+    pool.shutdown()
+    var interrupted = false
+    var done = false
+    while (!done)
+      try done = pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
   }
 
   /** Two-job convenience for the common "overlap these two writes"

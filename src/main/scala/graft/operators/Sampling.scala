@@ -666,7 +666,7 @@ object Sampling {
     // (schema-only — a legacy untagged artifact must refuse with the
     // version diagnosis, not break the union's analysis).
     val metas = paths.map { p =>
-      val m = spark.read.parquet(s"$p/sequences_meta")
+      val m = LakeRead.parquet(spark, s"$p/sequences_meta")
       val algo =
         if (m.columns.contains("fold_algo")) col("fold_algo")
         else lit("(untagged pre-v1)")
@@ -692,7 +692,7 @@ object Sampling {
     // dir whose data directory holds ZERO rows produces no group —
     // read back as (0, 0, "(empty)"), the same refusal the per-
     // artifact aggregate's coalesced nulls produced.
-    def seqsOf(p: String) = spark.read.parquet(s"$p/sequences")
+    def seqsOf(p: String) = LakeRead.parquet(spark, s"$p/sequences")
     val got = paths.map(p => seqsOf(p)
         .select(lit(p).as("__dir"), col("n_ids"), col("ids_digest")))
       .reduce(_.unionByName(_))
@@ -817,7 +817,7 @@ object Sampling {
     * inconsistent row set (identity columns must agree across rows). */
   def readEpochManifest(spark: org.apache.spark.sql.SparkSession,
       path: String): EpochManifest = {
-    val rows = spark.read.parquet(path)
+    val rows = LakeRead.parquet(spark, path)
       .select(col("shard"), col("epoch"), col("salt"),
         col("schedule_algo")).collect()
     require(rows.nonEmpty, s"$path holds no epoch-manifest rows")
@@ -1014,7 +1014,7 @@ object Sampling {
         Some(path) // legacy single-dir snapshot (pre-versioning)
       else None
     snapshot.map { dir =>
-      val rows = spark.read.parquet(dir)
+      val rows = LakeRead.parquet(spark, dir)
         .select(col("epoch"), col("shard_rank"), col("seq_rank"))
         .collect()
       require(rows.length == 1,

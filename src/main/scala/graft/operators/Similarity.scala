@@ -841,7 +841,7 @@ object Similarity {
   /** Load the fitted codebook back (bounded: nlist rows). */
   def readSemCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Seq[Double]] =
-    spark.read.parquet(s"$path/codebook").orderBy(col("cell"))
+    LakeRead.parquet(spark, s"$path/codebook").orderBy(col("cell"))
       .collect().map(_.getSeq[Double](1).toSeq).toSeq
 
   /** Job 3 of the incremental SemDeDup contract: fold an increment's
@@ -882,7 +882,7 @@ object Similarity {
       keeperCap: Int = 1000, nassign: Int = 1): Unit = {
     val spark = survivors.sparkSession
     val centroids = readSemCodebook(spark, path)
-    val stored = spark.read.parquet(s"$path/keepers")
+    val stored = LakeRead.parquet(spark, s"$path/keepers")
     require(stored.columns.toSet == Set("cell", "keeper", "kv", "kn",
       "kok"), "keepers must be a writeSemDedupArtifacts table; got " +
       stored.columns.mkString(","))
@@ -920,7 +920,7 @@ object Similarity {
       keeperCap: Int = 1000, nassign: Int = 1): DataFrame = {
     val spark = newDf.sparkSession
     val centroids = readSemCodebook(spark, path)
-    val stored = spark.read.parquet(s"$path/keepers")
+    val stored = LakeRead.parquet(spark, s"$path/keepers")
     semDedupLakeStepAt(newDf, idCol, vecCol, centroids, stored,
       s"$path/keepers", threshold, keepFarthest, keeperCap, nassign)
   }

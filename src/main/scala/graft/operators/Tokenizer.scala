@@ -914,7 +914,7 @@ object Tokenizer {
     * to re-deriving max(token_id) + 1. */
   def readBpeSpecials(spark: org.apache.spark.sql.SparkSession,
       path: String): BpeSpecials = {
-    val metaDf = spark.read.parquet(s"$path/vocab_meta")
+    val metaDf = LakeRead.parquet(spark, s"$path/vocab_meta")
     val meta = metaDf.collect()
     require(meta.length == 1,
       s"vocab meta must hold exactly one row (got ${meta.length})")
@@ -932,10 +932,10 @@ object Tokenizer {
     // once per artifact consumer and its three sequential driver round
     // trips were pure fixed cost
     val two = graft.operators.DriverPool.all[AnyRef](Seq(
-      () => spark.read.parquet(s"$path/specials")
+      () => LakeRead.parquet(spark, s"$path/specials")
         .select(col("name"), col("token_id")).orderBy("token_id")
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq,
-      () => java.lang.Long.valueOf(spark.read.parquet(s"$path/vocab")
+      () => java.lang.Long.valueOf(LakeRead.parquet(spark, s"$path/vocab")
         .agg(max(col("token_id"))).collect().head.getLong(0))))
     val reserved = two.head.asInstanceOf[Seq[(String, Long)]]
     val stored = meta.head.getAs[String]("specials_digest")
@@ -972,11 +972,11 @@ object Tokenizer {
   /** Load a [[writeBpeVocab]] artifact, digest- and count-verified. */
   def readBpeVocab(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val rows = spark.read.parquet(s"$path/vocab")
+    val rows = LakeRead.parquet(spark, s"$path/vocab")
       .select(col("token_id"), col("token"), col("is_base"))
       .orderBy("token_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
-    val meta = spark.read.parquet(s"$path/vocab_meta").collect()
+    val meta = LakeRead.parquet(spark, s"$path/vocab_meta").collect()
     require(meta.length == 1,
       s"vocab meta must hold exactly one row (got ${meta.length})")
     val stored = meta.head.getString(1)
@@ -1074,10 +1074,10 @@ object Tokenizer {
     * of encoding under a silently different vocabulary. */
   def readBpeModel(spark: org.apache.spark.sql.SparkSession,
       path: String): BpeModel = {
-    val merges = spark.read.parquet(s"$path/merges")
+    val merges = LakeRead.parquet(spark, s"$path/merges")
       .orderBy("step").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val metaDf = spark.read.parquet(s"$path/meta")
+    val metaDf = LakeRead.parquet(spark, s"$path/meta")
     val meta = metaDf.collect()
     require(meta.length == 1,
       s"bpe model meta must hold exactly one row (got ${meta.length})")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.Sampling
+import graft.operators.{LakeRead, Sampling}
 
 /** The SEQUENCE LAKE — versioned landings of the trainer-batch
   * artifact ([[graft.operators.Sampling.writeSequences]]) across a
@@ -232,7 +232,7 @@ object SequenceLake {
     StreamLakeIngest.compactDirIsolatedWith(spark, root,
       dirs => {
         srcDirs = dirs
-        dirs.map(d => spark.read.parquet(s"$d/sequences"))
+        dirs.map(d => LakeRead.parquet(spark, s"$d/sequences"))
           .reduce(_.unionByName(_))
       },
       (df, path) => {
@@ -241,7 +241,7 @@ object SequenceLake {
         // were one driver job apiece, pure fixed cost, guide §1.2)
         val metaRows = srcDirs.map { d =>
           import org.apache.spark.sql.functions.{col, lit}
-          spark.read.parquet(s"$d/sequences_meta")
+          LakeRead.parquet(spark, s"$d/sequences_meta")
             .select(lit(d).as("__dir"), col("n_sequences"),
               col("n_ids"), col("digest"), col("fold_algo"))
         }.reduce(_.unionByName(_)).collect()

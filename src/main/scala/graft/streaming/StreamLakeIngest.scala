@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{Curation, Dedup, Lineage, Similarity, TextOps}
+import graft.operators.{Curation, Dedup, DriverPool, LakeRead, Lineage,
+  Similarity, TextOps}
 
 /** STREAMING LAKE INGEST — the full incremental curation contract
   * (decontamination → exact dedup → near-dup dedup → semantic dedup →
@@ -116,7 +117,7 @@ object StreamLakeIngest {
     * owns that contract. */
   private def parallelInits(spark: SparkSession,
       jobs: Seq[() => Unit]): Unit = {
-    graft.operators.DriverPool.all[Unit](jobs)
+    DriverPool.all[Unit](jobs)
     ()
   }
 
@@ -153,7 +154,7 @@ object StreamLakeIngest {
           .map(_.toString).sorted.toSeq
     }
     require(subs.nonEmpty, s"$dir holds no lake state — run initLake")
-    spark.read.parquet(subs.toIndexedSeq: _*)
+    LakeRead.parquet(spark, subs.toIndexedSeq: _*)
   }
 
   /** The reader-isolation pointer: `_live_v<version>` (newest version
@@ -263,7 +264,7 @@ object StreamLakeIngest {
   private def compactDirIsolated(spark: SparkSession,
       dir: String): Unit =
     compactDirIsolatedWith(spark, dir,
-      dirs => spark.read.parquet(dirs: _*),
+      dirs => LakeRead.parquet(spark, dirs: _*),
       (df, path) => df.write.mode("overwrite").parquet(path))
 
   /** [[compactDirIsolated]] with pluggable read/union and write — the
@@ -385,7 +386,7 @@ object StreamLakeIngest {
 
   private def compactDir(spark: SparkSession, dir: String): Unit =
     compactDirWith(spark, dir,
-      dirs => spark.read.parquet(dirs: _*),
+      dirs => LakeRead.parquet(spark, dirs: _*),
       (df, path) => df.write.mode("overwrite").parquet(path))
 
   /** The generic listing-protocol compaction (staging manifest,
@@ -511,7 +512,10 @@ object StreamLakeIngest {
     * crash-replay ones the layout already guarantees: a fold-in that
     * fails after a later stage started leaves only batch-id-derived
     * Overwrite directories behind, which the replayed batch rewrites
-    * verbatim. Results are byte-identical to the sequential form. */
+    * verbatim. When a stage throws, every fold-in already started is
+    * drained before the exception escapes, so a caller that replays
+    * the batch never races a still-running fold over the same
+    * directories. Results are byte-identical to the sequential form. */
   private def fiveStages(batch: DataFrame, lakeRoot: String,
       textCol: String, idCol: String, vecCol: String, batchId: Long,
       p: Params): DataFrame = {
@@ -524,7 +528,7 @@ object StreamLakeIngest {
     try {
       // 1. decontamination — stateless probe of the immutable artifact
       val contaminated = Dedup.contaminatedDocsFromArtifact(batch,
-          spark.read.parquet(s"$lakeRoot/bench_windows"), textCol, idCol,
+          LakeRead.parquet(spark, s"$lakeRoot/bench_windows"), textCol, idCol,
           p.windowLen)
         .select(col("id").as(idCol))
       val s1 = batch.join(contaminated, Seq(idCol), "left_anti")
@@ -548,7 +552,7 @@ object StreamLakeIngest {
       val semDir = s"$lakeRoot/sem"
       val (s4, fold4) = Similarity.semDedupLakeStepDeferred(s3, idCol,
         vecCol, Similarity.readSemCodebook(spark, semDir),
-        spark.read.parquet(keepersBefore(spark, semDir, batchId)),
+        LakeRead.parquet(spark, keepersBefore(spark, semDir, batchId)),
         s"$semDir/keepers_b$batchId", p.semThreshold,
         keeperCap = p.keeperCap, nassign = p.nassign,
         dedupWithinIncrement = true)
@@ -566,7 +570,7 @@ object StreamLakeIngest {
       Await.result(f4, Duration.Inf) // fold4 reads s4's blocks
       Lineage.free(s4)
       admitted
-    } finally pool.shutdown()
+    } finally DriverPool.drain(pool)
   }
 
   /** Drive a stream of (idCol, textCol, vecCol) rows through the
@@ -727,7 +731,7 @@ object StreamLakeIngest {
     // 6. DSIR gate against the newest model snapshot this batch may see
     val modelPath = versionBefore(spark, s"$lakeRoot/dsir", "model",
       batchId)
-    val model = spark.read.parquet(modelPath)
+    val model = LakeRead.parquet(spark, modelPath)
       .select(col("b"), col("lr_micro")).orderBy("b").collect()
     require(model.length == sp.dsirBuckets &&
       model.head.getLong(0) == 0L,
@@ -739,7 +743,7 @@ object StreamLakeIngest {
     // 7. token-budget gate: prior ledger + within-batch running sum in
     // doc_id order per source (bounded: increment-sized window, ledger
     // is one row per source and broadcasts)
-    val prior = spark.read.parquet(
+    val prior = LakeRead.parquet(spark,
       versionBefore(spark, s"$lakeRoot/budget", "used", batchId))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(sourceCol)).orderBy(col(idCol))
@@ -769,7 +773,7 @@ object StreamLakeIngest {
       .groupBy("source").agg(sum(col("tokens")).as("tokens"))
     // both final writes read the materialized `admitted` cut and land
     // in independent directories — overlapped (round 20, guide §2.6)
-    graft.operators.DriverPool.both(
+    DriverPool.both(
       ledger.repartition(1).write.mode("overwrite")
         .parquet(s"$lakeRoot/budget/used_b$batchId"),
       admitted.write.mode("overwrite")

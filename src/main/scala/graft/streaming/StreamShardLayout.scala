@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{Lineage, Sampling}
+import graft.operators.{LakeRead, Lineage, Sampling}
 
 /** STREAMING SHARD LAYOUT — the incremental twin of the batch
   * corpus→shards arc ([[graft.operators.Sampling.shardAssign]] +
@@ -56,7 +56,7 @@ object StreamShardLayout {
   }
 
   private def readCursor(spark: SparkSession, path: String): Long = {
-    val rows = spark.read.parquet(path).select(col("total_weight"))
+    val rows = LakeRead.parquet(spark, path).select(col("total_weight"))
       .collect()
     require(rows.length == 1,
       s"$path is not a one-row cursor snapshot (${rows.length} rows)")
@@ -278,7 +278,7 @@ object StreamShardLayout {
     val incs = liveDirs(fs, root)
     require(incs.nonEmpty,
       s"$layoutRoot/manifest holds no increments — run appendIncrement")
-    incs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    incs.map(LakeRead.parquet(spark, _)).reduce(_.unionByName(_))
       .groupBy(col("shard"))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col(weightCol)).as(weightCol),
@@ -296,21 +296,11 @@ object StreamShardLayout {
     * appendIncrement before the empty-batch skip) holds only _SUCCESS
     * and would fail schema inference for every later read. */
   private def readLayoutDirs(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
       dirs: Seq[String]): DataFrame = {
-    def hasData(d: String): Boolean = {
-      val it = fs.listFiles(new Path(d), true)
-      var found = false
-      while (!found && it.hasNext) {
-        val n = it.next().getPath.getName
-        found = !n.startsWith("_") && !n.startsWith(".")
-      }
-      found
-    }
-    val live = dirs.filter(hasData)
+    val live = dirs.flatMap(LakeRead.ifData(spark, _))
     require(live.nonEmpty,
       s"no parquet data under any of: ${dirs.mkString(", ")}")
-    live.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    live.reduce(_.unionByName(_))
   }
 
   /** The live directory set of one layout-family subroot (`layout/`,
@@ -376,14 +366,11 @@ object StreamShardLayout {
     * ingest runs — the component's designed consumer — must use
     * [[compactLayoutIsolated]] instead (this plain variant refuses a
     * pointer-maintained layout, exactly like the lakes). */
-  def compactLayout(spark: SparkSession, layoutRoot: String): Unit = {
-    val root = new Path(s"$layoutRoot/layout")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def compactLayout(spark: SparkSession, layoutRoot: String): Unit =
     StreamLakeIngest.compactDirWith(spark, s"$layoutRoot/layout",
-      dirs => readLayoutDirs(spark, fs, dirs),
+      dirs => readLayoutDirs(spark, dirs),
       (df, path) => df.write.mode("overwrite").partitionBy("shard")
         .parquet(path))
-  }
 
   /** READER-ISOLATED compaction — the `_live_v<k>` pointer-generation
     * protocol ([[StreamLakeIngest.compactIsolated]]'s, shared code)
@@ -411,7 +398,7 @@ object StreamShardLayout {
     if (foldable(root))
       StreamLakeIngest.compactDirIsolatedWith(spark,
         s"$layoutRoot/layout",
-        dirs => readLayoutDirs(spark, fs, dirs),
+        dirs => readLayoutDirs(spark, dirs),
         (df, path) => df.write.mode("overwrite").partitionBy("shard")
           .parquet(path))
     // the MANIFEST increments fold through the same pointer protocol
@@ -423,7 +410,7 @@ object StreamShardLayout {
     if (foldable(new Path(s"$layoutRoot/manifest")))
       StreamLakeIngest.compactDirIsolatedWith(spark,
         s"$layoutRoot/manifest",
-        dirs => readLayoutDirs(spark, fs, dirs),
+        dirs => readLayoutDirs(spark, dirs),
         (df, path) => df.write.mode("overwrite").parquet(path))
     // LANDED TOKENS ([[appendTokens]]) ride the same protocol: the
     // pack reads them per closed shard, so their listing cost curve
@@ -431,7 +418,7 @@ object StreamShardLayout {
     if (foldable(new Path(s"$layoutRoot/tokens")))
       StreamLakeIngest.compactDirIsolatedWith(spark,
         s"$layoutRoot/tokens",
-        dirs => readLayoutDirs(spark, fs, dirs),
+        dirs => readLayoutDirs(spark, dirs),
         (df, path) => df.write.mode("overwrite").partitionBy("shard")
           .parquet(path))
   }
@@ -457,7 +444,7 @@ object StreamShardLayout {
     // lakes, and the same remedy: periodic compaction of CLOSED
     // shards into a base generation, offline, never moving the open
     // one.
-    readLayoutDirs(spark, fs, incs)
+    readLayoutDirs(spark, incs)
   }
 
   /** Pack the CLOSED shards of a streamed layout into fixed-length
@@ -519,7 +506,7 @@ object StreamShardLayout {
     require(dirs.nonEmpty,
       s"$layoutRoot/layout holds no increments — run appendIncrement")
     val open = openShard(fs, dirs)
-    val closed = readLayoutDirs(spark, fs, dirs)
+    val closed = readLayoutDirs(spark, dirs)
       .select(col(idCol), col("shard").cast("long").as("shard"),
         col("offset"))
       .where(col("shard") >= fromShard && col("shard") < open)
@@ -577,7 +564,7 @@ object StreamShardLayout {
       s"layout shards ${missing.toSeq.sorted.mkString(",")} have no " +
         "landed tokens — an ingest batch skipped appendTokens; " +
         "packing would silently drop their documents")
-    val toksRaw = readLayoutDirs(spark, fs, tokenDirs)
+    val toksRaw = readLayoutDirs(spark, tokenDirs)
       .select(col(idCol), col(posCol), col(tokenCol),
         col("shard").cast("long").as("shard"), col("offset"))
       .where(col("shard") >= fromShard && col("shard") < open)
@@ -616,13 +603,13 @@ object StreamShardLayout {
       val manDirs = liveDirs(fs, new Path(s"$layoutRoot/manifest"))
       val nLayoutDocs =
         if (manDirs.nonEmpty)
-          manDirs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+          manDirs.map(LakeRead.parquet(spark, _)).reduce(_.unionByName(_))
             .where(col("shard").cast("long") >= fromShard &&
               col("shard").cast("long") < open)
             .agg(coalesce(sum(col("n_docs")), lit(0L)))
             .collect().head.getLong(0)
         else // legacy layout without manifests: count the layout data
-          readLayoutDirs(spark, fs, layoutDirs)
+          readLayoutDirs(spark, layoutDirs)
             .select(col(idCol), col("shard").cast("long").as("shard"))
             .where(col("shard") >= fromShard && col("shard") < open)
             .count()
