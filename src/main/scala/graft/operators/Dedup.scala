@@ -354,14 +354,18 @@ object Dedup {
   def minhashLshLakeStep(newDf: DataFrame, textCol: String,
       idCol: String, path: String, shingleLen: Int = 3, bands: Int = 8,
       rowsPerBand: Int = 2, minEstJaccard: Double = 0.5,
-      bucketCap: Int = 2000): DataFrame =
-    minhashLshLakeStepAt(newDf, LakeRead.parquet(newDf.sparkSession, path),
-      textCol, idCol, path,
+      bucketCap: Int = 2000): DataFrame = {
+    val (survivors, fold) = minhashLshLakeStepDeferred(newDf,
+      LakeRead.parquet(newDf.sparkSession, path), textCol, idCol, path,
       org.apache.spark.sql.SaveMode.Append, shingleLen, bands,
       rowsPerBand, minEstJaccard, bucketCap)
+    fold()
+    survivors
+  }
 
   /** The fused step against an EXPLICIT visible-state frame, folding
-    * into an EXPLICIT target directory — the micro-batch form used by
+    * into an EXPLICIT target directory, with the signature fold-in
+    * returned as a deferred thunk — the micro-batch form used by
     * [[graft.streaming.StreamLakeIngest]], where the signature lake is
     * a directory of per-increment subdirectories: the caller passes
     * the union of every increment EXCEPT the current one as `refSigs`
@@ -369,8 +373,11 @@ object Dedup {
     * so replaying a failed micro-batch recomputes from the same
     * visible state and rewrites its own contribution instead of
     * appending a duplicate (exactly-once without a transaction log).
-    * Semantics otherwise identical to [[minhashLshLakeStep]], which
-    * delegates here with (flat read of `path`, `path`, Append).
+    * [[minhashLshLakeStep]] runs it with (flat read of `path`, `path`,
+    * Append) and folds at once. The thunk reads the survivors' cut
+    * blocks and the step's tracked banded rows, so it must complete
+    * before the caller frees the survivors (the tracked rows live
+    * until `releaseIntermediates`); see [[exactLakeStepDeferred]].
     *
     * `dedupWithinIncrement` additionally removes WITHIN-increment
     * near-dups (larger id of every banded pair at `minEstJaccard` —
@@ -379,24 +386,6 @@ object Dedup {
     * signing pass. The cross-only default matches the batch cycles
     * (q200/q203), whose increments are pre-deduped corpus thirds; a
     * micro-batch from a live stream has no such guarantee. */
-  def minhashLshLakeStepAt(newDf: DataFrame, refSigs: DataFrame,
-      textCol: String, idCol: String, writePath: String,
-      writeMode: org.apache.spark.sql.SaveMode, shingleLen: Int = 3,
-      bands: Int = 8, rowsPerBand: Int = 2, minEstJaccard: Double = 0.5,
-      bucketCap: Int = 2000,
-      dedupWithinIncrement: Boolean = false): DataFrame = {
-    val (survivors, fold) = minhashLshLakeStepDeferred(newDf, refSigs,
-      textCol, idCol, writePath, writeMode, shingleLen, bands,
-      rowsPerBand, minEstJaccard, bucketCap, dedupWithinIncrement)
-    fold()
-    survivors
-  }
-
-  /** [[minhashLshLakeStepAt]] with the signature fold-in returned as a
-    * deferred thunk — see [[exactLakeStepDeferred]]; the thunk reads
-    * the survivors' cut blocks and the step's tracked banded rows, so
-    * it must complete before the caller frees the survivors (the
-    * tracked rows live until `releaseIntermediates`). */
   private[graft] def minhashLshLakeStepDeferred(newDf: DataFrame,
       refSigs: DataFrame, textCol: String, idCol: String,
       writePath: String, writeMode: org.apache.spark.sql.SaveMode,
@@ -551,26 +540,14 @@ object Dedup {
 
   /** Jobs 2+3 of the EXACT lake contract fused for the micro-batch
     * layout: dedup the increment against the caller-assembled visible
-    * hash lake, write the SURVIVORS' hashes to `foldDir` (Overwrite —
-    * an increment-owned subdirectory, so replaying the same
-    * micro-batch rewrites its own contribution; see
-    * [[minhashLshLakeStepAt]] for the exactly-once argument), and
-    * return the survivors eagerly materialized (the one evaluation
-    * feeds both the fold-in write and the caller's next stage).
-    * The returned cut frame is the caller's to [[Lineage.free]]. */
-  def exactLakeStepAt(newDf: DataFrame, refHashes: DataFrame,
-      textCol: String, idCol: String, foldDir: String): DataFrame = {
-    val (survivors, fold) = exactLakeStepDeferred(newDf, refHashes,
-      textCol, idCol, foldDir)
-    fold()
-    survivors
-  }
-
-  /** [[exactLakeStepAt]] with the fold-in write returned as a DEFERRED
-    * thunk instead of run inline — the streamed chain overlaps it with
-    * the next stage's compute (guide §2.6). The thunk reads the
-    * returned survivors' materialized blocks: it MUST complete before
-    * the caller frees them. */
+    * hash lake and return the survivors eagerly materialized, with the
+    * write of the SURVIVORS' hashes to `foldDir` (Overwrite — an
+    * increment-owned subdirectory, so replaying the same micro-batch
+    * rewrites its own contribution; see [[minhashLshLakeStepDeferred]]
+    * for the exactly-once argument) returned as a DEFERRED thunk — the
+    * streamed chain overlaps it with the next stage's compute (guide
+    * §2.6). The thunk reads the returned survivors' materialized
+    * blocks: it MUST complete before the caller frees them. */
   private[graft] def exactLakeStepDeferred(newDf: DataFrame,
       refHashes: DataFrame, textCol: String, idCol: String,
       foldDir: String): (DataFrame, () => Unit) = {

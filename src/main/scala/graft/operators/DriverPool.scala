@@ -11,8 +11,7 @@ import scala.concurrent.duration.Duration
   * identical to the sequential form by construction (the jobs share no
   * data dependency).
   *
-  * Failure contract (round-20, closes the r19 ADVICE finding on
-  * `parallelInits`): EVERY job is awaited to completion — success or
+  * Failure contract (round 20): EVERY job is awaited to completion — success or
   * failure — BEFORE the first failure (in submission order) is
   * rethrown, so a caller that catches and retries can never race a
   * still-running sibling writer over the same directories. `Inf` waits

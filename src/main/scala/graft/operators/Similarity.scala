@@ -921,49 +921,37 @@ object Similarity {
     val spark = newDf.sparkSession
     val centroids = readSemCodebook(spark, path)
     val stored = LakeRead.parquet(spark, s"$path/keepers")
-    semDedupLakeStepAt(newDf, idCol, vecCol, centroids, stored,
-      s"$path/keepers", threshold, keepFarthest, keeperCap, nassign)
+    val (survivors, fold) = semDedupLakeStepDeferred(newDf, idCol,
+      vecCol, centroids, stored, s"$path/keepers", threshold,
+      keepFarthest, keeperCap, nassign)
+    fold()
+    survivors
   }
 
   /** The fused semantic step against an EXPLICIT stored-keeper frame
-    * and an EXPLICIT output snapshot directory — the micro-batch form
-    * used by [[graft.streaming.StreamLakeIngest]]: because the keeper
-    * table is a capped rank-merge REWRITE (not an append), the
-    * streaming layout versions it as one snapshot per micro-batch; the
-    * caller passes the latest snapshot OLDER than the current batch as
+    * and an EXPLICIT output snapshot directory, with the keeper-snapshot
+    * rewrite returned as a deferred thunk — the micro-batch form used
+    * by [[graft.streaming.StreamLakeIngest]]: because the keeper table
+    * is a capped rank-merge REWRITE (not an append), the streaming
+    * layout versions it as one snapshot per micro-batch; the caller
+    * passes the latest snapshot OLDER than the current batch as
     * `stored` and the batch's own snapshot directory as `outDir`, so a
     * replay recomputes from the same visible state and rewrites its
     * own snapshot (exactly-once without a transaction log; the
     * snapshot is O(nlist × keeperCap) regardless of corpus size, so a
-    * per-batch rewrite never scales with the lake).
-    * [[semDedupLakeStep]] delegates here with (read keepers, same
-    * keepers dir) — the in-place batch form.
+    * per-batch rewrite never scales with the lake). The thunk's merge
+    * plan reads `stored` and the survivors' cut blocks, so it must
+    * complete before the caller frees the survivors or rewrites
+    * `stored`'s directory; the in-place batch form
+    * [[semDedupLakeStep]] (read keepers, same keepers dir) therefore
+    * runs it at once.
     *
     * `dedupWithinIncrement` additionally removes WITHIN-increment
     * near-dups (larger id of every same-cell pair at `threshold`
     * cosine — pair-based, so chains hold) from the SAME assignment
     * rows — no second assignment pass. Cross-only default matches the
     * batch cycles (q201/q204); see [[graft.operators.Dedup
-    * .minhashLshLakeStepAt]] for the rationale. */
-  def semDedupLakeStepAt(newDf: DataFrame, idCol: String,
-      vecCol: String, centroids: Seq[Seq[Double]], stored: DataFrame,
-      outDir: String, threshold: Double, keepFarthest: Boolean = true,
-      keeperCap: Int = 1000, nassign: Int = 1,
-      dedupWithinIncrement: Boolean = false): DataFrame = {
-    val (survivors, fold) = semDedupLakeStepDeferred(newDf, idCol,
-      vecCol, centroids, stored, outDir, threshold, keepFarthest,
-      keeperCap, nassign, dedupWithinIncrement)
-    fold()
-    survivors
-  }
-
-  /** [[semDedupLakeStepAt]] with the keeper-snapshot rewrite returned
-    * as a deferred thunk — safe ONLY for the streaming form where
-    * `outDir` is a FRESH versioned snapshot (never the directory
-    * `stored` reads): the thunk's merge plan reads `stored` and the
-    * survivors' cut blocks, so it must complete before the caller
-    * frees the survivors or rewrites `stored`'s directory. The
-    * in-place batch form keeps the inline call above. */
+    * .minhashLshLakeStepDeferred]] for the rationale. */
   private[graft] def semDedupLakeStepDeferred(newDf: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[Seq[Double]],
       stored: DataFrame, outDir: String, threshold: Double,

@@ -15,8 +15,8 @@ import graft.operators.{LakeRead, Sampling}
   * layout compaction was built to kill, one directory over (a year of
   * hourly polls is ~9k artifact directories, each a separate parquet
   * read). [[appendSequences]] names each poll's artifact
-  * `inc_b<pollId>` so the shared [[StreamLakeIngest]] pointer
-  * protocol applies verbatim:
+  * `inc_b<pollId>` so the shared [[LakeDir]] pointer protocol
+  * applies verbatim:
   *
   *  - [[readSequenceLake]] resolves the live pointer (base + newer
   *    increments) and verifies EVERY live artifact against its own
@@ -64,7 +64,7 @@ object SequenceLake {
     * first-landing.) */
   def appendSequences(seqs: DataFrame, root: String, pollId: Long,
       groupCol: Option[String] = None): Unit = {
-    val inc = s"$root/inc_b$pollId"
+    val inc = LakeDir.inc(root, pollId)
     val metaP = new Path(s"$inc/sequences_meta")
     val fs = metaP.getFileSystem(
       seqs.sparkSession.sparkContext.hadoopConfiguration)
@@ -80,7 +80,7 @@ object SequenceLake {
   def readSequenceLake(spark: SparkSession, root: String): DataFrame = {
     val rootP = new Path(root)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = StreamShardLayout.liveDirs(fs, rootP)
+    val dirs = LakeDir.live(fs, rootP)
     require(dirs.nonEmpty,
       s"$root holds no landed sequence artifacts — land one with " +
         "appendSequences")
@@ -127,31 +127,16 @@ object SequenceLake {
     // increment does NOT advance the watermark and the replay
     // OVERWRITES it under the same id — self-healing, no skipped
     // shards, no cursor file to tear.
-    val landedShards = StreamShardLayout.liveDirs(fs, seqRootP)
-      .flatMap { d =>
-        val seqDir = new Path(s"$d/sequences")
-        val committed =
-          fs.exists(new Path(s"$d/sequences_meta/_SUCCESS"))
-        if (!committed || !fs.exists(seqDir)) Seq.empty
-        else fs.listStatus(seqDir).filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .collect { case n if n.startsWith("shard=") =>
-            n.stripPrefix("shard=").toLong }.toSeq
-      }
+    val landedShards = LakeDir.shards(fs, LakeDir.live(fs, seqRootP)
+      .filter(d => fs.exists(new Path(s"$d/sequences_meta/_SUCCESS")) &&
+        fs.exists(new Path(s"$d/sequences")))
+      .map(d => s"$d/sequences"))
     val from = if (landedShards.isEmpty) 0L else landedShards.max + 1
     // open shard of the LAYOUT (same metadata-only read)
-    val layoutP = new Path(s"$layoutRoot/layout")
-    val open = {
-      val dirs = StreamShardLayout.liveDirs(fs, layoutP)
-      require(dirs.nonEmpty,
-        s"$layoutRoot/layout holds no increments — run appendIncrement")
-      dirs.flatMap { d =>
-        fs.listStatus(new Path(d)).filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .collect { case n if n.startsWith("shard=") =>
-            n.stripPrefix("shard=").toLong }
-      }.max
-    }
+    val layoutDirs = LakeDir.live(fs, new Path(s"$layoutRoot/layout"))
+    require(layoutDirs.nonEmpty,
+      s"$layoutRoot/layout holds no increments — run appendIncrement")
+    val open = StreamShardLayout.openShard(fs, layoutDirs)
     if (open <= from) None
     else {
       val packed = StreamShardLayout.packLandedShards(spark,
@@ -213,23 +198,24 @@ object SequenceLake {
   }
 
   /** READER-ISOLATED compaction of closed poll artifacts — the
-    * [[StreamLakeIngest]] `_live_v<k>` staged-fold protocol (shared
-    * code), with the sequence artifact's TWO-TABLE shape threaded
-    * through the callbacks: the fold unions the source `sequences/`
+    * [[LakeDir.compact]] `_live_v<k>` staged-fold protocol, with the
+    * sequence artifact's TWO-TABLE shape threaded through the
+    * callbacks: the fold unions the source `sequences/`
     * tables, and the staged generation's `sequences_meta` is written
     * by re-attesting the folded rows AND required equal to the
     * commutative fold of the source metas — a mismatch means the fold
     * itself corrupted data and the compaction refuses before the
     * pointer ever swaps. Run between polls (the single-maintainer
     * contract the other lakes carry); readers holding either pointer
-    * generation stay consistent throughout. */
+    * generation stay consistent throughout. A lake with a single live
+    * poll has nothing to fold and is left as it is. */
   def compactSequenceLake(spark: SparkSession, root: String,
       groupCol: Option[String] = None): Unit = {
     // the reader callback runs before the writer inside ONE protocol
     // invocation — capturing its dir list is how the writer learns
     // which source metas to fold
     var srcDirs: Seq[String] = Seq.empty
-    StreamLakeIngest.compactDirIsolatedWith(spark, root,
+    LakeDir.compact(spark, root,
       dirs => {
         srcDirs = dirs
         dirs.map(d => LakeRead.parquet(spark, s"$d/sequences"))

@@ -116,8 +116,8 @@ object StreamShardLayout {
       idCol: String, weightCol: String, batchId: Long,
       assign: Long => (DataFrame, Long, Long)): DataFrame = {
     val spark = batch.sparkSession
-    val cursorPath = StreamLakeIngest.versionBefore(spark,
-      s"$layoutRoot/cursor", "cursor", batchId)
+    val cursorPath = LakeDir.versionBefore(spark, s"$layoutRoot/cursor",
+      "cursor", batchId)
     val start = readCursor(spark, cursorPath)
     // the batch's row count and weight ride the running sum's bounded
     // per-partition pass (round 20) — the separate stats aggregate
@@ -136,7 +136,7 @@ object StreamShardLayout {
         // write fans out task-locally with ZERO shuffle (the
         // writeShards shape)
         assigned.write.mode("overwrite").partitionBy("shard")
-          .parquet(s"$layoutRoot/layout/inc_b$batchId"),
+          .parquet(LakeDir.inc(s"$layoutRoot/layout", batchId)),
         assigned.groupBy(col("shard"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col(weightCol)).as(weightCol),
@@ -145,9 +145,9 @@ object StreamShardLayout {
                 col(idCol).cast("string").as("__id")))),
               s => s.getField("__id")), ",").as("ids"))
           .withColumn("batch", lit(batchId))
-          .withColumn("inc", lit(s"inc_b$batchId"))
+          .withColumn("inc", lit(LakeDir.incName(batchId)))
           .write.mode("overwrite")
-          .parquet(s"$layoutRoot/manifest/inc_b$batchId"))
+          .parquet(LakeDir.inc(s"$layoutRoot/manifest", batchId)))
     }
     writeCursor(spark, s"$layoutRoot/cursor/cursor_b$batchId",
       start + batchWeight)
@@ -249,7 +249,7 @@ object StreamShardLayout {
             Seq(idCol))
           .repartition(col("shard"))
           .write.mode("overwrite").partitionBy("shard")
-          .parquet(s"$layoutRoot/tokens/inc_b$batchId")
+          .parquet(LakeDir.inc(s"$layoutRoot/tokens", batchId))
       } finally Lineage.free(toksCut)
     }
   }
@@ -275,7 +275,7 @@ object StreamShardLayout {
     // stays O(1 + new batches) instead of one parquet read per batch
     // forever — the listing curve the layout compaction kills, one
     // directory over
-    val incs = liveDirs(fs, root)
+    val incs = LakeDir.live(fs, root)
     require(incs.nonEmpty,
       s"$layoutRoot/manifest holds no increments — run appendIncrement")
     incs.map(LakeRead.parquet(spark, _)).reduce(_.unionByName(_))
@@ -303,124 +303,56 @@ object StreamShardLayout {
     live.reduce(_.unionByName(_))
   }
 
-  /** The live directory set of one layout-family subroot (`layout/`,
-    * `manifest/`, `tokens/` — all three share the increment naming
-    * and the [[compactLayoutIsolated]] pointer protocol):
-    * POINTER-RESOLVED when a `_live_v<k>` generation exists (the
-    * pointer's base plus every newer increment — a mid-promote race
-    * cannot exist); listing-mode otherwise, where `base_v*` names are
-    * EXCLUDED (a generation is visible through its pointer only, so
-    * the first isolated compaction's rename-then-point window never
-    * double-counts). */
-  private[streaming] def liveDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Seq[String] = {
-    if (!fs.exists(root)) return Seq.empty
-    StreamLakeIngest.readLivePointer(fs, root) match {
-      case Some(lp) =>
-        (s"$root/${lp.base}" +:
-          fs.listStatus(root).filter(_.isDirectory)
-            .map(_.getPath.getName)
-            .collect { case n if n.startsWith("inc_b") &&
-                n.stripPrefix("inc_b").toLong > lp.maxFolded =>
-              s"$root/$n" }.toSeq).sorted
-      case None =>
-        fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            (n.startsWith("inc_b") || n == "base") && !n.startsWith("_")
-          }
-          .map(_.toString).sorted.toSeq
-    }
-  }
-
   /** The OPEN (still-receiving-weight) shard id of a layout — the
     * maximum shard across the live increment directories, read from
     * the `shard=N` partition-directory NAMES alone: pure filesystem
     * metadata, no data file opened, no scan job. Loud on an empty or
     * never-appended layout (the silent NPE the agg-based max threw). */
-  private def openShard(fs: org.apache.hadoop.fs.FileSystem,
+  private[streaming] def openShard(fs: org.apache.hadoop.fs.FileSystem,
       dirs: Seq[String]): Long = {
-    val shards = dirs.flatMap { d =>
-      fs.listStatus(new Path(d)).filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("shard=") =>
-          n.stripPrefix("shard=").toLong }
-    }
+    val shards = LakeDir.shards(fs, dirs)
     require(shards.nonEmpty,
       s"no shard=N directories under any of: ${dirs.mkString(", ")}" +
         " — the layout holds no appended rows yet")
     shards.max
   }
 
-  /** Periodic maintenance: fold every CLOSED increment into one
-    * `base` directory — the listing-cost remedy for a long-lived
-    * stream (readLayout otherwise unions one scan per batch), exactly
-    * like the hash/sig lakes' [[StreamLakeIngest.compact]] and
-    * through the SAME crash-resume manifest protocol (shared code).
-    * The newest increment always stays out (it may belong to a
-    * replayable batch); the open shard's rows may split between
-    * `base` and that increment — `offset` carries the order, so
-    * readers never notice. Run BETWEEN batches under the
-    * single-maintainer contract (no concurrent reader during the
-    * promote window); a layout with a LIVE TRAINER reading while
-    * ingest runs — the component's designed consumer — must use
-    * [[compactLayoutIsolated]] instead (this plain variant refuses a
-    * pointer-maintained layout, exactly like the lakes). */
-  def compactLayout(spark: SparkSession, layoutRoot: String): Unit =
-    StreamLakeIngest.compactDirWith(spark, s"$layoutRoot/layout",
-      dirs => readLayoutDirs(spark, dirs),
-      (df, path) => df.write.mode("overwrite").partitionBy("shard")
-        .parquet(path))
-
-  /** READER-ISOLATED compaction — the `_live_v<k>` pointer-generation
-    * protocol ([[StreamLakeIngest.compactIsolated]]'s, shared code)
-    * extended to the partitioned layout, because the layout's natural
-    * consumer is a live trainer streaming shards WHILE ingest runs:
-    * the staged fold renames into a fresh `base_v<k+1>` generation
-    * beside the live dirs, one pointer-file creation swaps readers
-    * atomically, and retired dirs survive until the NEXT compaction's
-    * reap — so a trainer that resolved the old pointer keeps a fully
-    * consistent layout for a whole compaction interval, and one that
-    * resolves the new pointer sees every closed shard exactly once.
-    * Once a pointer exists, [[readLayout]] resolves it and the plain
-    * [[compactLayout]] refuses to run (mode mixing would fold retired
-    * generations back in). */
+  /** READER-ISOLATED compaction of the layout — the `_live_v<k>`
+    * pointer-generation protocol ([[LakeDir.compact]]), because the
+    * layout's natural consumer is a live trainer streaming shards WHILE
+    * ingest runs: the staged fold renames into a fresh `base_v<k+1>`
+    * generation beside the live dirs, one pointer-file creation swaps
+    * readers atomically, and retired dirs survive until the NEXT
+    * compaction's reap — so a trainer that resolved the old pointer
+    * keeps a fully consistent layout for a whole compaction interval,
+    * and one that resolves the new pointer sees every closed shard
+    * exactly once. The newest increment always stays out (it may
+    * belong to a replayable batch); the open shard's rows may split
+    * between the generation and that increment — `offset` carries the
+    * order, so readers never notice. Run it between batches.
+    *
+    * All three families fold, each through its own pointer: `layout/`,
+    * the MANIFEST increments (readShardManifest otherwise unions one
+    * parquet read per batch forever; the rows keep their `batch`
+    * column, so the per-shard order-sensitive digest is unchanged —
+    * spec'd equal before/after), and the LANDED TOKENS
+    * ([[appendTokens]]; the pack reads them per closed shard). A family
+    * with fewer than two live dirs, or none yet, is left as it is. */
   def compactLayoutIsolated(spark: SparkSession,
       layoutRoot: String): Unit = {
-    val root = new Path(s"$layoutRoot/layout")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fold only families with >= 2 live dirs: the protocol keeps the
-    // newest increment out, so a single-increment family has nothing
-    // to fold and the staged rewrite would refuse ("no lake state") —
-    // routine for a young stream (or one whose empty batches landed
-    // no manifest/token increments), so skip instead of raising
-    def foldable(p: Path): Boolean = liveDirs(fs, p).length >= 2
-    if (foldable(root))
-      StreamLakeIngest.compactDirIsolatedWith(spark,
-        s"$layoutRoot/layout",
-        dirs => readLayoutDirs(spark, dirs),
-        (df, path) => df.write.mode("overwrite").partitionBy("shard")
-          .parquet(path))
-    // the MANIFEST increments fold through the same pointer protocol
-    // (readShardManifest otherwise unions one parquet read per batch
-    // forever — the exact listing curve this compaction exists to
-    // kill). Folding is a plain union: the rows keep their `batch`
-    // column, so the per-shard order-sensitive digest (which sorts by
-    // batch) is unchanged — spec'd equal before/after.
-    if (foldable(new Path(s"$layoutRoot/manifest")))
-      StreamLakeIngest.compactDirIsolatedWith(spark,
-        s"$layoutRoot/manifest",
-        dirs => readLayoutDirs(spark, dirs),
-        (df, path) => df.write.mode("overwrite").parquet(path))
-    // LANDED TOKENS ([[appendTokens]]) ride the same protocol: the
-    // pack reads them per closed shard, so their listing cost curve
-    // is the layout's
-    if (foldable(new Path(s"$layoutRoot/tokens")))
-      StreamLakeIngest.compactDirIsolatedWith(spark,
-        s"$layoutRoot/tokens",
-        dirs => readLayoutDirs(spark, dirs),
-        (df, path) => df.write.mode("overwrite").partitionBy("shard")
-          .parquet(path))
+    val fs = new Path(layoutRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val partitioned: (DataFrame, String) => Unit = (df, path) =>
+      df.write.mode("overwrite").partitionBy("shard").parquet(path)
+    val flat: (DataFrame, String) => Unit = (df, path) =>
+      df.write.mode("overwrite").parquet(path)
+    Seq("layout" -> partitioned, "manifest" -> flat,
+        "tokens" -> partitioned)
+      .foreach { case (family, write) =>
+        val dir = s"$layoutRoot/$family"
+        if (fs.exists(new Path(dir)))
+          LakeDir.compact(spark, dir, readLayoutDirs(spark, _), write)
+      }
   }
 
   /** The cumulative layout: every batch's landed assignment, with the
@@ -436,7 +368,7 @@ object StreamShardLayout {
   def readLayout(spark: SparkSession, layoutRoot: String): DataFrame = {
     val root = new Path(s"$layoutRoot/layout")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val incs = liveDirs(fs, root)
+    val incs = LakeDir.live(fs, root)
     require(incs.nonEmpty,
       s"$layoutRoot/layout holds no increments — run appendIncrement")
     // one read per increment root, unioned. The plan grows by one
@@ -502,7 +434,7 @@ object StreamShardLayout {
           "stream every poll (O(corpus)); use packLandedShards, " +
           "whose token side reads the same shard-pruned partitions " +
           "as the layout side (O(newly closed shards))")
-    val dirs = liveDirs(fs, root)
+    val dirs = LakeDir.live(fs, root)
     require(dirs.nonEmpty,
       s"$layoutRoot/layout holds no increments — run appendIncrement")
     val open = openShard(fs, dirs)
@@ -538,8 +470,8 @@ object StreamShardLayout {
     val layoutRootP = new Path(s"$layoutRoot/layout")
     val tokensRootP = new Path(s"$layoutRoot/tokens")
     val fs = layoutRootP.getFileSystem(conf)
-    val layoutDirs = liveDirs(fs, layoutRootP)
-    val tokenDirs = liveDirs(fs, tokensRootP)
+    val layoutDirs = LakeDir.live(fs, layoutRootP)
+    val tokenDirs = LakeDir.live(fs, tokensRootP)
     require(layoutDirs.nonEmpty,
       s"$layoutRoot/layout holds no increments — run appendIncrement")
     require(tokenDirs.nonEmpty,
@@ -550,15 +482,9 @@ object StreamShardLayout {
     // loud contract, two layers. (1) metadata fast-fail: a shard
     // directory present under layout/ but absent under tokens/ means
     // a whole-shard token gap — caught from directory NAMES alone.
-    def shardSet(dirs: Seq[String]): Set[Long] = dirs.flatMap { d =>
-      fs.listStatus(new Path(d)).filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("shard=") =>
-          n.stripPrefix("shard=").toLong }
-    }.toSet
-    val wanted = shardSet(layoutDirs)
+    val wanted = LakeDir.shards(fs, layoutDirs).toSet
       .filter(s => s >= fromShard && s < open)
-    val landed = shardSet(tokenDirs)
+    val landed = LakeDir.shards(fs, tokenDirs).toSet
     val missing = wanted -- landed
     require(missing.isEmpty,
       s"layout shards ${missing.toSeq.sorted.mkString(",")} have no " +
@@ -600,7 +526,7 @@ object StreamShardLayout {
     // unique per landing (the platform-wide id contract), and a
     // zero-weight doc never enters the layout.
     if (verifyCoverage) {
-      val manDirs = liveDirs(fs, new Path(s"$layoutRoot/manifest"))
+      val manDirs = LakeDir.live(fs, new Path(s"$layoutRoot/manifest"))
       val nLayoutDocs =
         if (manDirs.nonEmpty)
           manDirs.map(LakeRead.parquet(spark, _)).reduce(_.unionByName(_))
@@ -749,22 +675,16 @@ object StreamShardLayout {
           // for a direct call but routine here
           val root = new Path(s"$layoutRoot/layout")
           val fs = root.getFileSystem(conf)
-          if (liveDirs(fs, root).nonEmpty)
+          if (LakeDir.live(fs, root).nonEmpty)
             SequenceLake.pollLandedShards(spark, layoutRoot, seqRoot,
               seqLen, sep, idCol, posCol, tokenCol)
         }
         if (compactEvery > 0 &&
             (batchId + 1) % (pollEvery.toLong * compactEvery) == 0) {
-          // fold only families with >= 2 live dirs (something to
-          // fold beyond the kept-out newest increment — the protocol
-          // refuses an increment-less fold, which is routine here)
-          def foldable(p: Path): Boolean = {
-            val fs = p.getFileSystem(conf)
-            liveDirs(fs, p).length >= 2
-          }
-          if (foldable(new Path(s"$layoutRoot/layout")))
-            compactLayoutIsolated(spark, layoutRoot)
-          if (foldable(new Path(seqRoot)))
+          compactLayoutIsolated(spark, layoutRoot)
+          // no sequence lake before the first poll that landed shards
+          val seqP = new Path(seqRoot)
+          if (seqP.getFileSystem(conf).exists(seqP))
             SequenceLake.compactSequenceLake(spark, seqRoot,
               groupCol = Some("shard"))
         }

@@ -14,7 +14,7 @@ import graft.streaming.StreamLakeIngest
   *    increments (the whole design: never O(history));
   *  - the directory-of-increments layout's creeping cost — per-column
   *    subdir count and the visible-state read fan-in — and how much
-  *    [[StreamLakeIngest.compact]] claws back;
+  *    [[StreamLakeIngest.compactIsolated]] claws back;
   *  - a post-compaction batch matches the pre-compaction cadence
   *    (compaction preserves the probe plan, not just the data).
   *
@@ -64,9 +64,11 @@ object ProfLakeIngest {
         "text", "doc_id", "embedding", lake, p)
     }
     println(f"""LAKEINGEST {"phase":"init","sec":$tInit%.1f}""")
-    def nDirs(sub: String): Int =
-      new java.io.File(s"$lake/$sub").listFiles()
-        .count(f => f.isDirectory && !f.getName.startsWith("_"))
+    def nDirs(sub: String): Int = {
+      val p = new org.apache.hadoop.fs.Path(s"$lake/$sub")
+      graft.streaming.LakeDir.live(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).size
+    }
     def runBatch(k: Int, tag: String): Unit = {
       val inc = joined.where(slice === (nInc + k))
       val n = inc.count()
@@ -89,7 +91,7 @@ object ProfLakeIngest {
     // against the immediately-preceding five-stage batch of the same
     // slice size
     for (k <- 0 until nInc - 2) runBatch(k, "")
-    val (_, tc) = sec { StreamLakeIngest.compact(spark, lake) }
+    val (_, tc) = sec { StreamLakeIngest.compactIsolated(spark, lake) }
     println(f"""LAKECOMPACT {"sec":$tc%.1f,""" +
       f""""hash_dirs":${nDirs("hashes")},"sig_dirs":${nDirs("sigs")}}""")
     runBatch(nInc - 2, ""","post_compact":true""")

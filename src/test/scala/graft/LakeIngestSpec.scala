@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamLakeIngest
+import graft.streaming.{LakeDir, StreamLakeIngest}
 import graft.operators.Dedup
 
 /** The streaming lake-ingest loop: every stage of the five-stage chain
@@ -165,52 +165,6 @@ class LakeIngestSpec extends SparkTestBase {
     assert(admittedIds(s"$admitted/inc_b1") == Set(210L))
   }
 
-  test("compaction folds increments into base, keeps the newest " +
-      "(replayable) increment live, and preserves dedup state") {
-    val root = Files.createTempDirectory("lake_compact").toString
-    val lake = s"$root/lake"
-    val admitted = s"$root/admitted"
-    val hist = Seq(IngestDoc(10L, histT10, Array(1f, 0f, 0f)),
-      IngestDoc(12L, histT12, Array(0f, 1f, 0f))).toDF()
-    val bench = Seq((1L, benchT)).toDF("doc_id", "text")
-    StreamLakeIngest.initLake(hist, bench, "text", "doc_id", "vec",
-      lake, p)
-    def runBatch(rows: Seq[IngestDoc], bid: Long): Set[Long] = {
-      val out = StreamLakeIngest.curateIncrement(rows.toDF(), lake,
-        admitted, "text", "doc_id", "vec", bid, p)
-      val ids = out.select("doc_id").collect().map(_.getLong(0)).toSet
-      graft.operators.Lineage.free(out)
-      Dedup.releaseIntermediates()
-      ids
-    }
-    def counts(): (Long, Long) = (
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$lake/hashes").count(),
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$lake/sigs").count())
-    runBatch(batch1, 0L); runBatch(batch2, 1L)
-    val before = counts()
-    StreamLakeIngest.compact(spark, lake)
-    def subdirs(d: String): Set[String] =
-      new java.io.File(d).listFiles().filter(_.isDirectory)
-        .map(_.getName).toSet
-    // inc_b0 folded into base; inc_b1 (newest — a crashed batch 1
-    // would replay and must not see its own fold-in inside base)
-    // stays live
-    assert(subdirs(s"$lake/hashes") == Set("base", "inc_b1"))
-    assert(subdirs(s"$lake/sigs") == Set("base", "inc_b1"))
-    assert(counts() == before)
-    // the compacted lake still dedups: an exact copy of a batch-1
-    // admitted doc and a near-dup of a batch-0 admitted doc both go
-    assert(runBatch(Seq(
-      IngestDoc(302L, t210, Array(0.5f, 0.5f, 0.5f)),
-      IngestDoc(304L, t5.replace("ever see", "never see"),
-        Array(0.5f, -0.5f, 0.5f)),
-      IngestDoc(306L, "entirely novel content and the words are of a " +
-        "new kind that is the hallmark of an original document here",
-        Array(0.6f, -0.6f, -0.6f))), 2L) == Set(306L))
-  }
-
   test("isolated compaction: a reader holding the OLD pointer set " +
       "sees a consistent pre-promote lake through the promote; reap " +
       "is deferred one compaction; plain compact refuses the lake") {
@@ -258,11 +212,6 @@ class LakeIngestSpec extends SparkTestBase {
       IngestDoc(306L, "entirely novel content and the words are of a " +
         "new kind that is the hallmark of an original document here",
         Array(0.6f, -0.6f, -0.6f))), 2L) == Set(306L))
-    // the default compact refuses a pointer-maintained lake
-    val e = intercept[IllegalArgumentException] {
-      StreamLakeIngest.compact(spark, lake)
-    }
-    assert(e.getMessage.contains("compactIsolated"))
     // the SECOND isolated compaction reaps what the first retired
     // (base, inc_b0) and folds {base_v1, inc_b1} — inc_b2 (newest) is
     // excluded from folding, visible via k > maxFolded
@@ -569,91 +518,90 @@ class LakeIngestSpec extends SparkTestBase {
     try w.write(dirs.sorted.mkString("\n") + "\n") finally w.close()
   }
 
-  private def hashCount(hdir: String): Long =
-    spark.read.option("recursiveFileLookup", "true").parquet(hdir)
-      .count()
+  /** The live hash rows, sorted, as a reader resolves them. */
+  private def liveHashes(hdir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(hdir)
+    val dirs = LakeDir.live(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    spark.read.parquet(dirs: _*).select("h").collect()
+      .map(_.getString(0)).toSeq.sorted
+  }
 
   private def subdirsOf(d: String): Set[String] =
     new java.io.File(d).listFiles().filter(_.isDirectory)
       .map(_.getName).toSet
 
-  test("compaction crash-resume: a staged rewrite is DISCARDED when " +
-      "micro-batches committed after the crash — their increments " +
-      "fold in instead of being silently dropped") {
-    val (lake, admitted) = crashFixture()
-    val hdir = s"$lake/hashes"
-    // crash state: batches 0,1 exist; a compaction of {base, inc_b0}
-    // (inc_b1 was newest then — left out) staged fully, never promoted
-    stageCrashedCompaction(hdir, Seq("base", "inc_b0"))
-    // the ingest then committed batch 2 — inc_b1 is no longer newest
-    val out = StreamLakeIngest.curateIncrement(Seq(
-      IngestDoc(401L, "entirely new words arrive after the crash and " +
-        "the lake is of a growing kind so the state must hold here",
-        Array(0.7f, 0.7f, 0f))).toDF(), lake, admitted, "text",
-      "doc_id", "vec", 2L, p)
-    out.count(); graft.operators.Lineage.free(out)
-    Dedup.releaseIntermediates()
-    val before = hashCount(hdir)
-    StreamLakeIngest.compact(spark, lake)
-    // the stale staging (without inc_b1) was discarded and rebuilt
-    // over {base, inc_b0, inc_b1}; inc_b2 (newest) stays live
-    assert(subdirsOf(hdir) == Set("base", "inc_b2"))
-    assert(hashCount(hdir) == before,
-      "post-crash increments' hashes were dropped by a stale staging")
-    // and the lake still dedups against an inc_b1-era hash: an exact
-    // copy of batch-2's t210 (whose hash lives only in inc_b1) goes
-    val chk = StreamLakeIngest.curateIncrement(Seq(
-      IngestDoc(501L, t210, Array(0.9f, -0.3f, 0.2f))).toDF(), lake,
-      admitted, "text", "doc_id", "vec", 3L, p)
-    assert(chk.select("doc_id").collect().isEmpty)
-    graft.operators.Lineage.free(chk)
-    Dedup.releaseIntermediates()
-  }
+  private def dataFiles(d: String): Set[String] =
+    new java.io.File(d).list().filter(_.endsWith(".parquet")).toSet
 
-  test("compaction crash-resume: an interrupted PROMOTE completes " +
-      "(staging is the only copy of already-deleted dirs)") {
+  test("isolated compaction crash-resume: a completed staging with " +
+      "its manifest and no generation yet is promoted as it stands") {
     val (lake, _) = crashFixture()
     val hdir = s"$lake/hashes"
-    val before = hashCount(hdir)
+    val before = liveHashes(hdir)
+    // crash state: the fold of {base, inc_b0} (inc_b1 newest, left
+    // out) staged with its manifest; no base_v1, no pointer
     stageCrashedCompaction(hdir, Seq("base", "inc_b0"))
-    // crash mid-promote: one recorded dir already deleted from disk
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete()
-    }
-    rmrf(new java.io.File(s"$hdir/inc_b0"))
-    StreamLakeIngest.compact(spark, lake)
-    // the resume finished the promote instead of re-staging from the
-    // mutilated live set: no rows lost, layout converged
-    assert(subdirsOf(hdir) == Set("base", "inc_b1"))
-    assert(hashCount(hdir) == before,
-      "half-promoted compaction lost the deleted dir's rows")
+    val staged = dataFiles(s"$hdir/_compact")
+    StreamLakeIngest.compactIsolated(spark, lake)
+    // promoted without re-staging: the generation holds the staged
+    // files, the pointer names it with inc_b0 folded, nothing deleted
+    assert(subdirsOf(hdir) ==
+      Set("base", "inc_b0", "inc_b1", "base_v1"))
+    assert(staged.nonEmpty && dataFiles(s"$hdir/base_v1") == staged)
+    val ptr = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$hdir/_live_v1")), "UTF-8").split("\n")
+    assert(ptr.toSeq == Seq("base_v1", "0"))
+    assert(liveHashes(hdir) == before)
   }
 
-  test("compaction crash-resume: a crash between the rename and the " +
-      "manifest cleanup leaves only a stray underscore file — the " +
-      "next compaction and every reader ignore it") {
-    val (lake, admitted) = crashFixture()
+  test("isolated compaction with an injected write fault: no " +
+      "generation or pointer appears, readers keep the old rows, and " +
+      "a rerun converges to the fault-free run") {
+    val (lake, _) = crashFixture()
+    val (twin, _) = crashFixture()
     val hdir = s"$lake/hashes"
-    val before = hashCount(hdir)
-    // simulate the post-rename crash state: promoted base carrying the
-    // not-yet-deleted manifest file
-    val w = new java.io.FileWriter(s"$hdir/base/_compacted_dirs")
-    try w.write("base\n") finally w.close()
-    assert(hashCount(hdir) == before) // readers skip underscore files
-    // a later batch + compaction proceed normally (the staging check
-    // looks under _compact/, never inside base/)
-    val out = StreamLakeIngest.curateIncrement(Seq(
-      IngestDoc(601L, "wholly novel words after the stray manifest " +
-        "and the state is of a healthy kind so nothing is lost here",
-        Array(0.7f, -0.7f, 0f))).toDF(), lake, admitted, "text",
-      "doc_id", "vec", 2L, p)
-    out.count(); graft.operators.Lineage.free(out)
-    Dedup.releaseIntermediates()
-    val grew = hashCount(hdir)
-    StreamLakeIngest.compact(spark, lake)
-    assert(subdirsOf(hdir) == Set("base", "inc_b2"))
-    assert(hashCount(hdir) == grew)
-    assert(!new java.io.File(s"$hdir/base/_compacted_dirs").exists())
+    val before = liveHashes(hdir)
+    val e = intercept[IllegalStateException] {
+      LakeDir.compact(spark, hdir, dirs => spark.read.parquet(dirs: _*),
+        (df, path) => {
+          df.limit(1).write.mode("overwrite").parquet(path)
+          throw new IllegalStateException("injected: staging write died")
+        })
+    }
+    assert(e.getMessage.startsWith("injected"))
+    // part of the staging landed, its manifest did not
+    assert(dataFiles(s"$hdir/_compact").nonEmpty)
+    assert(!new java.io.File(s"$hdir/_compact/_compacted_dirs").exists())
+    def entries(d: String): Set[String] =
+      new java.io.File(d).list().toSet
+    assert(!entries(hdir).exists(n =>
+      n.startsWith("base_v") || n.startsWith("_live_v")))
+    assert(liveHashes(hdir) == before)
+    StreamLakeIngest.compactIsolated(spark, lake)
+    StreamLakeIngest.compactIsolated(spark, twin)
+    assert(entries(hdir) == entries(s"$twin/hashes"))
+    assert(entries(hdir).contains("base_v1"))
+    assert(liveHashes(hdir) == liveHashes(s"$twin/hashes"))
+    assert(liveHashes(hdir) == before)
+  }
+
+  test("the lake directory format has one owner: no pointer, " +
+      "generation, manifest or shard=N name literal in " +
+      "graft.streaming outside LakeDir.scala") {
+    val names = "\"(_live_v|base_v|_compacted_dirs|shard=)".r
+    val dir = new java.io.File("src/main/scala/graft/streaming")
+    assert(dir.isDirectory, s"$dir not found")
+    val offenders = dir.listFiles().toSeq
+      .filter(f => f.getName.endsWith(".scala") &&
+        f.getName != "LakeDir.scala")
+      .flatMap { f =>
+        val src = new String(Files.readAllBytes(f.toPath), "UTF-8")
+        names.findAllMatchIn(src).map { m =>
+          s"${f.getName}:${src.substring(0, m.start).count(_ == '\n') + 1}"
+        }
+      }
+    assert(offenders.isEmpty,
+      s"name lake directories through LakeDir: ${offenders.mkString(", ")}")
   }
 }

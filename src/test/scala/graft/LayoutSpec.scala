@@ -1136,52 +1136,36 @@ class LayoutSpec extends SparkTestBase {
     graft.operators.Dedup.releaseIntermediates()
   }
 
-  test("compactLayout folds closed increments into base, keeps the " +
-      "newest increment live, and the layout round-trips unchanged") {
-    val docs = (0L until 300L).map(i => (i, (i * 37 + 11) % 50 + 1))
-    val ddf = docs.toDF("doc_id", "n_tokens")
+  test("pointer compaction of a single-increment layout and of a " +
+      "single-poll sequence lake is a no-op") {
+    import graft.operators.Sampling
+    import graft.streaming.SequenceLake
     val root = java.nio.file.Files
-      .createTempDirectory("graft_shardcompact").toString
-    graft.streaming.StreamShardLayout.initLayout(spark, root)
-    (0 to 2).foreach { b =>
-      graft.streaming.StreamShardLayout.appendIncrement(
-        ddf.where($"doc_id" % 3 === b), root, "doc_id", "n_tokens",
-        300L, b.toLong)
-    }
-    def layout(): Set[(Long, Long, Long, Long)] =
-      graft.streaming.StreamShardLayout.readLayout(spark, root)
-        .select($"doc_id", $"n_tokens", $"shard".cast("long"),
-          $"offset")
-        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
-          x.getLong(3))).toSet
-    val before = layout()
-    graft.streaming.StreamShardLayout.compactLayout(spark, root)
-    def subdirs(): Set[String] =
-      new java.io.File(s"$root/layout").listFiles()
-        .filter(_.isDirectory).map(_.getName)
-        .filterNot(_.startsWith("_")).toSet
-    // inc_b0/inc_b1 folded; inc_b2 (newest, replayable) stays live
-    assert(subdirs() == Set("base", "inc_b2"))
-    assert(layout() == before)
-    // the folded layout keeps appending and compacting: batch 3 lands
-    // through the cursor, the next compact folds {base, inc_b2}
-    graft.streaming.StreamShardLayout.appendIncrement(
-      (300L until 350L).map(i => (i, i % 40 + 1))
-        .toDF("doc_id", "n_tokens"),
-      root, "doc_id", "n_tokens", 300L, 3L)
-    val withB3 = layout()
-    graft.streaming.StreamShardLayout.compactLayout(spark, root)
-    assert(subdirs() == Set("base", "inc_b3"))
-    assert(layout() == withB3)
-    // a single-increment root is a no-op, never a loud failure
-    val fresh = java.nio.file.Files
       .createTempDirectory("graft_shardcompact1").toString
-    graft.streaming.StreamShardLayout.initLayout(spark, fresh)
+    graft.streaming.StreamShardLayout.initLayout(spark, root)
     graft.streaming.StreamShardLayout.appendIncrement(
-      ddf.where($"doc_id" < 10), fresh, "doc_id", "n_tokens", 300L, 0L)
-    graft.streaming.StreamShardLayout.compactLayout(spark, fresh)
-    assert(new java.io.File(s"$fresh/layout").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet == Set("inc_b0"))
+      (0L until 10L).map(i => (i, i % 5 + 1)).toDF("doc_id", "n_tokens"),
+      root, "doc_id", "n_tokens", 300L, 0L)
+    def entries(d: String): Set[String] =
+      new java.io.File(d).list().filterNot(_.startsWith(".")).toSet
+    graft.streaming.StreamShardLayout.compactLayoutIsolated(spark, root)
+    assert(entries(s"$root/layout") == Set("inc_b0"))
+    assert(entries(s"$root/manifest") == Set("inc_b0"))
+    val seqRoot = java.nio.file.Files
+      .createTempDirectory("graft_seqlake1").toString
+    val ids = (0L until 3L).flatMap(d => (1L to 5L).map(p =>
+      (d, p, (d * 100 + p).toString))).toDF("doc_id", "pos", "token")
+    SequenceLake.appendSequences(
+      Sampling.packSequences(Sampling.packTokens(ids, seqLen = 4L)),
+      seqRoot, 0L)
+    def snap(): Seq[(Long, String)] =
+      SequenceLake.readSequenceLake(spark, seqRoot)
+        .select($"seq", $"ids_digest").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    val before = snap()
+    SequenceLake.compactSequenceLake(spark, seqRoot)
+    assert(entries(seqRoot) == Set("inc_b0"))
+    assert(snap() == before)
     graft.operators.Dedup.releaseIntermediates()
   }
 
@@ -1228,10 +1212,6 @@ class LayoutSpec extends SparkTestBase {
     assert(readVia(oldView) == before)
     // the new pointer view is the same cumulative layout
     assert(layout() == before)
-    // plain compactLayout refuses the pointer-maintained layout
-    intercept[IllegalArgumentException] {
-      graft.streaming.StreamShardLayout.compactLayout(spark, root)
-    }
     // append one more batch; the NEXT isolated compaction reaps the
     // FIRST round's retired dirs (inc_b0/inc_b1), folds
     // {base_v1, inc_b2} into base_v2 — and v1's generation survives
