@@ -288,28 +288,37 @@ final case class EnergySeries(
     * (period × slot). When the frequency is regular the (period, slot)
     * coordinates are pure timestamp arithmetic — no window, no extra
     * shuffle beyond the pivot's groupBy. */
-  def toPeriodMatrix(periodLength: Int = 24): DataFrame = {
-    val stepped = withStepColumn
-    stepped
+  def toPeriodMatrix(periodLength: Int = 24): DataFrame =
+    periodMatrix(periodLength)._1.orderBy("period")
+
+  /** [[toPeriodMatrix]] unsorted, with the step in seconds that its one
+    * first-two-timestamps action inferred — for driver consumers that
+    * collect the (bounded) matrix and sort it themselves, and need the
+    * step too (plot axis labels). */
+  private[graft] def periodMatrix(periodLength: Int): (DataFrame, Long) = {
+    val (stepped, stepSeconds) = withStep
+    val pm = stepped
       .groupBy((col("__step") / periodLength).cast(LongType).as("period"))
       .pivot(pmod(col("__step"), lit(periodLength)), 0 until periodLength)
       .agg(first(v))
-      .orderBy("period")
+    (pm, stepSeconds)
   }
 
   /** step = ordinal position along the (regular) time axis, derived from
     * timestamp arithmetic against the series start. The first two sorted
     * timestamps give BOTH the origin and the step — one driver action,
     * not an infer-freq action plus a min(ts) aggregate. */
-  private[graft] def withStepColumn: DataFrame = {
+  private[graft] def withStepColumn: DataFrame = withStep._1
+
+  private def withStep: (DataFrame, Long) = {
     val ts = idx.head
     val first2 = df.select(ts).orderBy(ts.asc).limit(2)
       .collect().map(_.getTimestamp(0).getTime / 1000)
     require(first2.length >= 2, "need at least 2 rows to infer frequency")
     val stepSeconds = first2(1) - first2(0)
-    df.withColumn("__step",
+    (df.withColumn("__step",
       ((unix_timestamp(ts) - lit(first2(0))) / lit(stepSeconds))
-        .cast(LongType))
+        .cast(LongType)), stepSeconds)
   }
 
   /** Infer the sampling period from the first timestamps

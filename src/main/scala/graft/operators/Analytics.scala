@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.core.DetAgg
@@ -450,54 +450,73 @@ object Analytics {
 
   /** Classical (moving-average) seasonal decomposition of a keyed
     * regular series — the statsmodels `seasonal_decompose(additive)`
-    * shape: trend = centered 24-slot rolling mean (full windows only),
-    * seasonal = per-(key, slot-of-day) mean of the detrended series
-    * normalized to sum to zero over the day, resid = v − trend −
-    * seasonal. Two keyed window passes + one (key, slot) aggregate —
-    * no iteration, no driver math; every statistic routes through
-    * DetAgg and rounds to 6 so the decomposition is engine-exact.
-    * Rows without a full trend window emit null trend/seasonal/resid
-    * (exactly the statsmodels NaN edge). */
+    * shape: trend = centered `period`-row rolling mean (full windows
+    * only), seasonal = per-(key, slot-of-day) mean of the detrended
+    * series normalized to sum to zero over the period, resid = v −
+    * trend − seasonal. Slots are `hour(ts) % period`, so `period` must
+    * divide 24. Every statistic is a window over ONE hash partitioning
+    * on `keys` — a single shuffle, no self-join, no driver math; sums
+    * route through exact decimals and quotients round to 6 (`q6`), so
+    * the decomposition is engine-exact. Rows without a full trend
+    * window emit null trend/seasonal/resid (exactly the statsmodels NaN
+    * edge). */
   def classicalDecompose(df: DataFrame, tsCol: String, valueCol: String,
       keys: Seq[String], period: Int = 24): DataFrame = {
+    require(period >= 1 && 24 % period == 0,
+      s"period must divide 24 (seasonal slots are the hour of day " +
+        s"modulo period), got $period")
     val k = keys.map(col)
+    val v = col(valueCol)
     val half = period / 2
-    // centered window: period even -> [t-half, t+half-1] (the pandas
-    // convention for even windows with center=True)
-    val wTrend = Window.partitionBy(k: _*).orderBy(col(tsCol))
-      .rowsBetween(-half, half - 1)
-    // quantize via pure-double floor (NOT round()): round() parses the
-    // shortest decimal repr on the JVM but the exact binary in DuckDB,
-    // so a quotient landing within an ulp of a half-boundary diverges
-    // across engines; floor(x·1e6 + 0.5)/1e6 is closed under IEEE
-    // doubles — bit-identical everywhere
-    def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
+    val ahead = period - half - 1
+    // centered window [t-half, t+period-half-1]: `period` rows for any
+    // period; an even period looks half-1 rows ahead (the pandas
+    // convention for even windows with center=True). Its sum and
+    // non-null count are differences of running prefix sums — the
+    // decimal subtraction is exact, so the trend equals the sliding
+    // window sum bit for bit at O(n) adds instead of O(n·period)
+    val w = Window.partitionBy(k: _*).orderBy(col(tsCol))
+    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def frame(prefix: String): Column = {
+      val upper =
+        if (ahead == 0) col(prefix) else lead(col(prefix), ahead).over(w)
+      upper - coalesce(lag(col(prefix), half + 1).over(w), lit(0))
+    }
     val withTrend = df
-      .withColumn("__cnt", count(col(valueCol)).over(wTrend))
-      .withColumn("__trend",
-        when(col("__cnt") === period,
-          r6(sum(col(valueCol).cast(DetAgg.Dec)).over(wTrend)
-            .cast("double") / period)))
+      .withColumns(Map(
+        "__cs" -> coalesce(sum(v.cast(DetAgg.Dec)).over(wRun), lit(0)),
+        "__cc" -> count(v).over(wRun)))
+      .withColumn("__trend", when(frame("__cc") === period,
+        q6(frame("__cs").cast("double") / period)))
       .withColumn("__slot", hour(col(tsCol)) % period)
     // slot means of the detrended series (statsmodels' nanmean over the
-    // trend-complete rows), centered so one period sums to zero; the
-    // (key × period) table is tiny by construction -> broadcast back
-    val detr = r6(col(valueCol) - col("__trend"))
-    val slotMeans = withTrend.where(col("__trend").isNotNull)
-      .groupBy((k :+ col("__slot")): _*)
-      .agg(r6(DetAgg.detAvg(detr)).as("__smean"))
-    val slotAdj = slotMeans.groupBy(k: _*)
-      .agg(r6(DetAgg.detSum(col("__smean")) / count(lit(1))).as("__sbar"))
-    val seasonalTbl = slotMeans.join(slotAdj, keys)
-      .withColumn("__seasonal", r6(col("__smean") - col("__sbar")))
-      .select(k ++ Seq(col("__slot"), col("__seasonal")): _*)
-    withTrend.join(broadcast(seasonalTbl), keys :+ "__slot", "left")
-      .withColumn("seasonal",
-        when(col("__trend").isNotNull, col("__seasonal")))
+    // trend-complete rows), centered so one period sums to zero. The
+    // (keys, slot) and keys windows reuse the hash partitioning on keys,
+    // so neither adds an exchange; one row per slot carries the slot
+    // mean into the centering sum. ANSI division raises on a zero count,
+    // hence the guards.
+    def mean(c: Column, over: WindowSpec): Column = {
+      val n = count(c).over(over)
+      when(n > 0,
+        q6(sum(c.cast(DetAgg.Dec)).over(over).cast("double") / n))
+    }
+    val wSlot = Window.partitionBy((k :+ col("__slot")): _*)
+      .orderBy(col(tsCol))
+    val detr = when(col("__trend").isNotNull, q6(v - col("__trend")))
+    val slotMean = mean(detr,
+      wSlot.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    val centered = withTrend
+      .withColumns(Map("__smean" -> slotMean,
+        "__slot1" -> (row_number().over(wSlot) === 1)))
+      .withColumn("__sbar", mean(when(col("__slot1"), col("__smean")),
+        Window.partitionBy(k: _*)))
+    val seasonal = when(col("__trend").isNotNull,
+      q6(col("__smean") - col("__sbar")))
+    centered.withColumn("seasonal", seasonal)
       .withColumn("resid", when(col("__trend").isNotNull,
-        r6(col(valueCol) - col("__trend") - col("seasonal"))))
-      .select(k ++ Seq(col(tsCol), col(valueCol),
-        col("__trend").as("trend"), col("seasonal"), col("resid")): _*)
+        q6(v - col("__trend") - col("seasonal"))))
+      .select(k ++ Seq(col(tsCol), v, col("__trend").as("trend"),
+        col("seasonal"), col("resid")): _*)
   }
 
   /** Floor-quantization to 6 decimals — pure IEEE-double ops, so both

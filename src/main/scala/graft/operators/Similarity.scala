@@ -894,15 +894,6 @@ object Similarity {
       s"$path/keepers")
   }
 
-  /** Job 2 of the incremental SemDeDup contract: dedup an increment
-    * against pre-built artifacts ([[writeSemDedupArtifacts]]) — the
-    * keeper table is joined as loaded and the codebook drives only the
-    * INCREMENT's assignment; the lake side contributes zero scans
-    * beyond the artifact read (plan-guarded in the spec). Output and
-    * semantics identical to [[semDedupCross]] with the same
-    * parameters (`nassign`/`threshold` may differ per increment;
-    * `keepFarthest`/`keeperCap`/codebook geometry are fixed at write
-    * time, which is exactly the lake contract). */
   /** Jobs 2+3 of the semantic lake contract FUSED — the
     * [[graft.operators.Dedup.minhashLshLakeStep]] analog: assign the
     * increment ONCE (the two-job path assigns it to probe, then
@@ -1003,6 +994,15 @@ object Similarity {
     graft.operators.Lineage.free(cut)
   }
 
+  /** Job 2 of the incremental SemDeDup contract: dedup an increment
+    * against pre-built artifacts ([[writeSemDedupArtifacts]]) — the
+    * keeper table is joined as loaded and the codebook drives only the
+    * INCREMENT's assignment; the lake side contributes zero scans
+    * beyond the artifact read (plan-guarded in the spec). Output and
+    * semantics identical to [[semDedupCross]] with the same
+    * parameters (`nassign`/`threshold` may differ per increment;
+    * `keepFarthest`/`keeperCap`/codebook geometry are fixed at write
+    * time, which is exactly the lake contract). */
   def semDedupCrossFromArtifacts(newDf: DataFrame, keepers: DataFrame,
       centroids: Seq[Seq[Double]], idCol: String, vecCol: String,
       threshold: Double, nassign: Int = 1): DataFrame = {

@@ -309,19 +309,19 @@ object Render {
     * RESOLUTION_NAME xlabel/ylabel drawn unless `axisOff` — the
     * reference's `axis_off=False` default at `:685`; explicit
     * `xlabel`/`ylabel` override the derived defaults as in the
-    * reference). Label derivation is one 3-row driver action
-    * ([[EnergySeries.inferStepSeconds]]), skipped when axisOff. */
+    * reference). The labels take the step that the unstack already
+    * inferred, so the whole plot runs two Spark actions. */
   def plot2d(es: EnergySeries, periodLength: Int = 24,
       vmin: Option[Double] = None, vmax: Option[Double] = None,
       vcenter: Option[Double] = None, cellW: Int = 8, cellH: Int = 8,
       colorbar: Boolean = true, axisOff: Boolean = false,
       xlabel: Option[String] = None,
       ylabel: Option[String] = None): Array[Byte] = {
-    val m = collectMatrix(es, periodLength)
+    val (m, stepSeconds) = collectMatrix(es, periodLength)
     val (xl, yl) =
       if (axisOff) (None, None)
       else {
-        val (dx, dy) = axisLabels(es.inferStepSeconds, periodLength)
+        val (dx, dy) = axisLabels(stepSeconds, periodLength)
         (Some(xlabel.getOrElse(dx)), Some(ylabel.getOrElse(dy)))
       }
     renderMatrix(m, vmin, vmax, vcenter, cellW, cellH, colorbar,
@@ -341,7 +341,8 @@ object Render {
       colorbar: Boolean = true, axisOff: Boolean = false): Array[Byte] = {
     val cols = ef.valueCols
     require(cols.nonEmpty, "frame has no value columns")
-    val mats = cols.map(c => collectMatrix(ef(c), periodLength))
+    val collected = cols.map(c => collectMatrix(ef(c), periodLength))
+    val mats = collected.map(_._1)
     val nS = mats.map(_.map(_.length).max).max
     val nP = mats.map(_.length).max
     val flat = mats.iterator.flatMap(_.iterator.flatten.flatten)
@@ -365,7 +366,7 @@ object Render {
     val unitsLabel = ef.unitsMap.values.headOption.map(_.raw)
     val labels =
       if (axisOff) None
-      else Some(axisLabels(ef(cols.head).inferStepSeconds, periodLength))
+      else Some(axisLabels(collected.head._2, periodLength))
     val left = if (labels.isDefined) YLabelW + YTickW else 0
     val cbW = if (colorbar) 18 else 0
     val cbGap = if (colorbar) 8 else 0
@@ -636,13 +637,13 @@ object Render {
       cellW: Int = 8, plotH: Int = 96,
       kind: String = "polygon"): Array[Byte] = kind match {
     case "polygon" =>
-      renderRidges(collectMatrix(es, periodLength), vmin, vmax, cellW,
+      renderRidges(collectMatrix(es, periodLength)._1, vmin, vmax, cellW,
         plotH, title = es.name)
     case "surface" =>
-      renderSurface(collectMatrix(es, periodLength), vmin, vmax,
+      renderSurface(collectMatrix(es, periodLength)._1, vmin, vmax,
         title = es.name)
     case "contour" =>
-      renderContour(collectMatrix(es, periodLength), vmin, vmax,
+      renderContour(collectMatrix(es, periodLength)._1, vmin, vmax,
         title = es.name)
     case other =>
       throw new IllegalArgumentException(
@@ -708,14 +709,19 @@ object Render {
       Some(p)
     }
 
-  /** Distributed unstack → driver collect of the plot-sized matrix. */
+  /** Distributed unstack → driver collect of the plot-sized matrix,
+    * with the step seconds the unstack inferred. The rows sort by period
+    * on the driver (nulls first, as `orderBy` would): the collect is
+    * plot-bounded, and a distributed sort would add a range-sampling
+    * job. */
   private def collectMatrix(es: EnergySeries,
-      periodLength: Int): Array[Array[Option[Double]]] = {
-    val pm = es.toPeriodMatrix(periodLength)
-    val rows = pm.orderBy("period").collect()
-    rows.map { r =>
+      periodLength: Int): (Array[Array[Option[Double]]], Long) = {
+    val (pm, stepSeconds) = es.periodMatrix(periodLength)
+    val rows = pm.collect()
+      .sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    (rows.map { r =>
       (1 until r.length).map(i =>
         if (r.isNullAt(i)) None else Some(r.getDouble(i))).toArray
-    }
+    }, stepSeconds)
   }
 }

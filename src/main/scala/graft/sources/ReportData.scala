@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{EnergyFrame, EnergySeries}
 import graft.units.{MultipleUnitsError, UnitRegistry}
 
@@ -52,11 +53,41 @@ object ReportData {
     * Returns the single unit string, or the override. */
   private def resolveUnits(df: DataFrame, unitsOverride: Option[String])
       : Option[String] = unitsOverride.orElse {
-    val distinct = df.select("Units").distinct().limit(3).collect().map(_.getString(0))
+    singleUnit(df.select("Units").distinct().limit(3).collect()
+      .map(_.getString(0)).toSeq)
+  }
+
+  private def singleUnit(distinct: Seq[String]): Option[String] = {
     if (distinct.length > 1)
-      throw new MultipleUnitsError(
-        s"The DataFrame contains mixed units: ${distinct.mkString(", ")}")
+      throw new MultipleUnitsError("The DataFrame contains mixed units: " +
+        distinct.take(3).mkString(", "))
     distinct.headOption
+  }
+
+  /** Spark's ascending string order: nulls first, then binary UTF-8. */
+  private val SparkStringOrder: Ordering[Option[UTF8String]] =
+    Ordering.Option((a: UTF8String, b: UTF8String) => a.compareTo(b))
+
+  /** The frame variant's discovery: ONE distinct action over whichever
+    * of `Units`/`KeyValue` is still unknown feeds both the mixed-unit
+    * guard (checked first) and the pivot keys, sorted as
+    * `orderBy("KeyValue")` would sort them; no action when both are
+    * given. */
+  private def discoverFrame(df: DataFrame, unitsOverride: Option[String],
+      keyValues: Seq[String]): (Option[String], Seq[String]) = {
+    val unknown = (if (unitsOverride.isEmpty) Seq("Units") else Nil) ++
+      (if (keyValues.isEmpty) Seq("KeyValue") else Nil)
+    val rows =
+      if (unknown.isEmpty) Array.empty[Row]
+      else df.select(unknown.map(col): _*).distinct().collect()
+    def values(c: String): Seq[String] =
+      rows.map(_.getString(unknown.indexOf(c))).toSeq.distinct
+    val unit = unitsOverride.orElse(singleUnit(values("Units")))
+    val keys =
+      if (keyValues.nonEmpty) keyValues
+      else values("KeyValue")
+        .sortBy(k => Option(k).map(UTF8String.fromString))(SparkStringOrder)
+    (unit, keys)
   }
 
   /** Series variant (`energypandas.py:231-309`). `aggFunc=None` keeps the
@@ -160,11 +191,7 @@ object ReportData {
       toUnits: Option[String] = None,
       keyValues: Seq[String] = Seq.empty
   ): EnergyFrame = {
-    val unit = resolveUnits(df, units)
-    val keys =
-      if (keyValues.nonEmpty) keyValues
-      else df.select("KeyValue").distinct().orderBy("KeyValue")
-        .collect().map(_.getString(0)).toSeq
+    val (unit, keys) = discoverFrame(df, units, keyValues)
 
     // one shuffle: pivot cells (deterministic mean per key, see DetAgg) +
     // date parts together. The date parts are constant within a TimeIndex,

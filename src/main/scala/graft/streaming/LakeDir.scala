@@ -85,13 +85,12 @@ private[graft] object LakeDir {
     * `base` plus every increment. `base_v*` names are visible through
     * their pointer only, so a reader racing the first compaction's
     * rename-then-point window never counts a generation twice. */
-  private def liveNames(fs: FileSystem, root: Path,
-      except: Option[Long]): Seq[String] = {
-    val entries = fs.listStatus(root)
+  private def liveNames(entries: Array[FileStatus],
+      pointer: Option[LivePointer], except: Option[Long]): Seq[String] = {
     val dirs = entries.filter(_.isDirectory).map(_.getPath.getName)
       .toSeq
     val incs = dirs.flatMap(incId).filterNot(except.contains)
-    (pointerIn(fs, root, entries) match {
+    (pointer match {
       case Some(lp) =>
         lp.base +: incs.filter(_ > lp.maxFolded).map(incName)
       case None     => dirs.filter(_ == "base") ++ incs.map(incName)
@@ -104,7 +103,11 @@ private[graft] object LakeDir {
   def live(fs: FileSystem, root: Path,
       except: Option[Long] = None): Seq[String] =
     if (!fs.exists(root)) Seq.empty
-    else liveNames(fs, root, except).map(n => s"$root/$n")
+    else {
+      val entries = fs.listStatus(root)
+      liveNames(entries, pointerIn(fs, root, entries), except)
+        .map(n => s"$root/$n")
+    }
 
   /** The shard ids named by the `shard=N` partition directories
     * directly under `dirs` — filesystem metadata only, no data file
@@ -152,14 +155,17 @@ private[graft] object LakeDir {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path))
       throw new java.io.FileNotFoundException(s"$dir holds no lake")
-    val liveSet = liveNames(fs, path, None)
+    // one listing and one pointer read serve the live set and the reap:
+    // nothing below writes before the reap has run
+    val entries = fs.listStatus(path)
+    val prior = pointerIn(fs, path, entries)
+    val liveSet = liveNames(entries, prior, None)
     if (liveSet.length < 2) return
     val staging = new Path(path, "_compact")
     val manifest = new Path(staging, Manifest)
-    val prior = pointerIn(fs, path, fs.listStatus(path))
     // 1. REAP what the previous promote retired
     prior.foreach { lp =>
-      fs.listStatus(path).map(_.getPath).foreach { p =>
+      entries.map(_.getPath).foreach { p =>
         val n = p.getName
         val retiredDir = !n.startsWith("_") && !n.startsWith(".") &&
           n != lp.base && !incId(n).exists(_ > lp.maxFolded)
