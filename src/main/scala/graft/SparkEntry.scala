@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{DetAgg, EnergyFrame, EnergySeries}
-import graft.operators.{Analytics, AsofJoin, Dedup, Discretize, Multimodal, RangeJoin, Sampling, Similarity, TextOps, WindowOps}
+import graft.operators.{Analytics, AsofJoin, Dedup, Discretize, Lineage, Multimodal, RangeJoin, Sampling, Similarity, TextOps, WindowOps}
 import graft.sources.ReportData
 import graft.streaming.{StatefulSessions, StreamOps}
 import graft.units.UnitRegistry
@@ -83,7 +83,7 @@ object SparkEntry {
     * per-source token-budget admission), shared by the pipeline query
     * (q215) and the corpus-to-shards capstone (q225). Each stage is
     * the already-certified operator; the selection frame persists once
-    * (tracked) because three downstream stages read it. */
+    * (kept) because three downstream stages read it. */
   private def selectionPipeline(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val filtered = docs.where(col("n_chars") >= 200)
@@ -93,7 +93,7 @@ object SparkEntry {
     val sel = graft.operators.Curation.dsirSelect(survivors, "text",
       "doc_id", isTarget = col("lang") === "en",
       buckets = 1024, k = 200)
-    val selDocs = graft.operators.Dedup.tracked(
+    val selDocs = Lineage.keep(
       survivors.join(sel.select("doc_id"), Seq("doc_id"), "left_semi"))
     val m = graft.operators.Tokenizer.bpeMerges(selDocs, "text",
         merges = 8).orderBy("step").collect()
@@ -175,7 +175,7 @@ object SparkEntry {
     // CONSUMES all three at sink time, reads the cache instead of
     // re-running the decon probe, the PPJoin, and the cosine cross
     // (the r19 plan audit: q221 was re-scanning all three chains).
-    val contaminated = Dedup.tracked(Dedup.contaminatedDocs(inc, bench,
+    val contaminated = Lineage.keep(Dedup.contaminatedDocs(inc, bench,
       "text", "doc_id", windowLen = 50).select(col("id").as("doc_id")))
     val s1 = cut(inc.join(contaminated, Seq("doc_id"), "left_anti"))
     val s2 = cut(Dedup.exactCrossFromArtifacts(s1,
@@ -187,7 +187,7 @@ object SparkEntry {
       .unionByName(hist.select(col("doc_id"), col("text")))
     val pairs = Dedup.ngramJaccardPairsPrefix(pool, "text", "doc_id",
       shingleLen = 3, minJaccard = 0.5, docFreqCap = 1000)
-    val rem3 = Dedup.tracked(pairs.select(
+    val rem3 = Lineage.keep(pairs.select(
       when(pmod(col("a"), lit(2)) === 1 &&
           pmod(col("b"), lit(2)) === 0, col("a"))
         .when(pmod(col("b"), lit(2)) === 1, col("b"))
@@ -203,7 +203,7 @@ object SparkEntry {
     val s3b = s3.select(col("doc_id").as("b"), lit(1).as("__b3"))
     val ha = hist.select(col("doc_id").as("a"), lit(1).as("__ah"))
     val hb = hist.select(col("doc_id").as("b"), lit(1).as("__bh"))
-    val rem4 = Dedup.tracked(cp.join(s3a, Seq("a"), "left")
+    val rem4 = Lineage.keep(cp.join(s3a, Seq("a"), "left")
       .join(s3b, Seq("b"), "left")
       .join(ha, Seq("a"), "left").join(hb, Seq("b"), "left")
       .select(
@@ -1125,8 +1125,8 @@ object SparkEntry {
       // cached: the decontamination scan (window explode + semi-join) is
       // read by the pair build, the representative join, and the filter
       // chain — recomputing it per consumer tripled the query
-      val clean = train.join(contaminated, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val clean = Lineage.keep(
+        train.join(contaminated, Seq("doc_id"), "left_anti"))
       val pairs = Dedup.ngramJaccardPairsPrefix(clean, "text", "doc_id",
         shingleLen = 3, minJaccard = 0.5, docFreqCap = 1000)
       val comp = Dedup.duplicateComponents(pairs, "a", "b")
@@ -1474,11 +1474,10 @@ object SparkEntry {
       // the edge set feeds FOUR plan branches (e1/e2/e3 + the edge
       // count); without the persist each branch re-runs the whole
       // inverted-index pair build (measured 4.6 s vs 2.4 s at sf0.1).
-      // Bench/Verify clearCache() releases it between queries.
-      val e = Dedup.sharedSubstringPairs(t(s, dir, "documents"), "text",
-        "doc_id", windowLen = 50, minShared = 1, docFreqCap = 1000)
-        .select(col("a"), col("b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // Bench/Verify release it between queries.
+      val e = Lineage.keep(Dedup.sharedSubstringPairs(
+        t(s, dir, "documents"), "text", "doc_id", windowLen = 50,
+        minShared = 1, docFreqCap = 1000).select(col("a"), col("b")))
       val e1 = e.select(col("a").as("x"), col("b").as("y"))
       val e2 = e.select(col("a").as("y"), col("b").as("z"))
       val e3 = e.select(col("a").as("x"), col("b").as("z"))
@@ -2336,8 +2335,8 @@ object SparkEntry {
         minEstJaccard = 0.35)
       // exact should-detect set; the PPJoin side feeds the plan twice
       // (admitted-survivor derivation + the gate's pair filter), so
-      // it is tracked-persisted to evaluate once
-      val exact = Dedup.tracked(Dedup.ngramJaccardPairsPrefix(docs,
+      // it is kept to evaluate once
+      val exact = Lineage.keep(Dedup.ngramJaccardPairsPrefix(docs,
         "text", "doc_id", shingleLen = 3, minJaccard = 0.5,
         docFreqCap = 1000))
       val ta = pmod(col("a"), lit(3))
@@ -2386,7 +2385,7 @@ object SparkEntry {
         emb.where(third === 2), s.read.parquet(s"$lake/keepers"), cb,
         "vec_id", "embedding", threshold = 0.4, nassign = 3)
       // exact cosine pairs feed the plan twice — persist once
-      val exact = Dedup.tracked(Similarity.cosineNearDupPairs(emb,
+      val exact = Lineage.keep(Similarity.cosineNearDupPairs(emb,
         "vec_id", "embedding", threshold = 0.4))
       val ta = pmod(col("a"), lit(3))
       val tb = pmod(col("b"), lit(3))
@@ -2430,7 +2429,7 @@ object SparkEntry {
         rowsPerBand = 2, minEstJaccard = 0.35)
       val removed2 = docs.where(third === 2).select(col("doc_id"))
         .join(surv2.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      val exact = Dedup.tracked(Dedup.ngramJaccardPairsPrefix(docs,
+      val exact = Lineage.keep(Dedup.ngramJaccardPairsPrefix(docs,
         "text", "doc_id", shingleLen = 3, minJaccard = 0.5,
         docFreqCap = 1000))
       val ta = pmod(col("a"), lit(3))
@@ -2469,7 +2468,7 @@ object SparkEntry {
         "vec_id", "embedding", lake, threshold = 0.4, nassign = 3)
       val removed2 = emb.where(third === 2).select(col("vec_id"))
         .join(surv2.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      val exact = Dedup.tracked(Similarity.cosineNearDupPairs(emb,
+      val exact = Lineage.keep(Similarity.cosineNearDupPairs(emb,
         "vec_id", "embedding", threshold = 0.4))
       val ta = pmod(col("a"), lit(3))
       val tb = pmod(col("b"), lit(3))
@@ -2617,7 +2616,7 @@ object SparkEntry {
         minEstJaccard = 0.35, nlist = 8, nassign = 3)
       graft.streaming.StreamLakeIngest.initLake(hist, bench, "text",
         "doc_id", "embedding", lake, p)
-      val admitted = Dedup.tracked(
+      val admitted = Lineage.keep(
         graft.streaming.StreamLakeIngest.curateIncrement(inc, lake,
           s"$lake/admitted", "text", "doc_id", "embedding", 0L, p))
       val removed = inc.select(col("doc_id"))
@@ -2678,7 +2677,7 @@ object SparkEntry {
       graft.streaming.StreamLakeIngest.initLakeFull(hist, bench,
         "text", "doc_id", "embedding", col("lang") === "en", lake, p,
         sp)
-      val admitted = Dedup.tracked(
+      val admitted = Lineage.keep(
         graft.streaming.StreamLakeIngest.curateIncrementFull(inc, lake,
           s"$lake/admitted", "text", "doc_id", "embedding", "source",
           0L, p, sp))
@@ -3338,7 +3337,7 @@ object SparkEntry {
     // DSIR selection (top-200 vs the English target) -> BPE learned ON
     // THE SELECTION -> per-source token-budget admission. Each stage
     // is the already-certified operator; the selection frame persists
-    // once (tracked) because three downstream stages read it.
+    // once (kept) because three downstream stages read it.
     "q215_selection_pipeline" -> ((s, dir) =>
       selectionPipeline(s, dir)),
     // ---- CAPSTONE corpus-to-shards: the q215 chain's admitted set
@@ -3968,7 +3967,7 @@ object SparkEntry {
     "q275_trainer_arc" -> ((s, dir) => {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val base = t(s, dir, "documents")
-      val docs = Dedup.tracked(base.select(col("doc_id"),
+      val docs = Lineage.keep(base.select(col("doc_id"),
         size(split(trim(col("text")), "\\s+")).cast("long")
           .as("n_tokens")))
       val toksAll = base.select(col("doc_id"),
@@ -4038,7 +4037,7 @@ object SparkEntry {
     // that shows where the pretok mode buys its win (the 'punct'
     // lang's don't/co-op docs stop paying byte-level fertility).
     "q277_pretok_fertility" -> ((s, dir) => {
-      val pc = Dedup.tracked(punctCorpus(s, dir))
+      val pc = Lineage.keep(punctCorpus(s, dir))
       def learn(pt: Boolean) = graft.operators.Tokenizer.bpeMerges(
           pc, "text", merges = 8, byteFallback = true, pretok = pt)
         .orderBy("step").collect()
@@ -4219,7 +4218,7 @@ object SparkEntry {
     // platform arc streamed end to end with an exact oracle.
     // SIDE-EFFECTING like the lakes.
     "q240_selection_shard_stream" -> ((s, dir) => {
-      val sel = Dedup.tracked(selectionPipeline(s, dir)
+      val sel = Lineage.keep(selectionPipeline(s, dir)
         .select(col("doc_id"), col("n_tokens")))
       val root =
         s"$LakeRoot/${dir.replaceAll("[^A-Za-z0-9]", "_")}_selshards"
@@ -4243,7 +4242,7 @@ object SparkEntry {
     // selection, two appends through the weight cursor.
     // SIDE-EFFECTING like the lakes.
     "q244_stream_shard_manifest" -> ((s, dir) => {
-      val sel = Dedup.tracked(selectionPipeline(s, dir)
+      val sel = Lineage.keep(selectionPipeline(s, dir)
         .select(col("doc_id"), col("n_tokens")))
       val root =
         s"$LakeRoot/${dir.replaceAll("[^A-Za-z0-9]", "_")}_manshards"

@@ -294,13 +294,18 @@ final case class EnergySeries(
   /** [[toPeriodMatrix]] unsorted, with the step in seconds that its one
     * first-two-timestamps action inferred — for driver consumers that
     * collect the (bounded) matrix and sort it themselves, and need the
-    * step too (plot axis labels). */
-  private[graft] def periodMatrix(periodLength: Int): (DataFrame, Long) = {
+    * step too (plot axis labels). With several `valueCols` (columns of
+    * `df` sharing its time index) one pivot aggregates them all: after
+    * `period`, column `1 + slot * valueCols.size + j` holds column j's
+    * value at that slot. */
+  private[graft] def periodMatrix(periodLength: Int,
+      valueCols: Seq[String] = Seq(valueCol)): (DataFrame, Long) = {
     val (stepped, stepSeconds) = withStep
+    val firsts = valueCols.map(c => first(col(c)))
     val pm = stepped
       .groupBy((col("__step") / periodLength).cast(LongType).as("period"))
       .pivot(pmod(col("__step"), lit(periodLength)), 0 until periodLength)
-      .agg(first(v))
+      .agg(firsts.head, firsts.tail: _*)
     (pm, stepSeconds)
   }
 

@@ -357,7 +357,7 @@ object Analytics {
     val base = docs.select(col(idCol).as("doc_id"),
       split(trim(col(textCol)), "\\s+").as("w"))
     val words = base.select(explode(col("w")).as("word"))
-    val uni = Dedup.tracked(words.groupBy("word")
+    val uni = Lineage.keep(words.groupBy("word")
       .agg(count(lit(1)).as("c")))
     val tot = uni.agg(sum(col("c")).cast("double").as("t"))
     val bi = base.where(size(col("w")) >= 2)

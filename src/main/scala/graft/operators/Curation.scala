@@ -128,7 +128,7 @@ object Curation {
     val base = df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // positioned gram hashes: wordShingles index k = start position k
     // (both branches below read them — persist like the pair streams)
-    val posGrams = Dedup.tracked(base.select(col("doc_id"),
+    val posGrams = Lineage.keep(base.select(col("doc_id"),
       posexplode(transform(Dedup.wordShingles(col("text"), n),
         g => xxhash64(g))).as(Seq("pos", "gram"))))
     val dupGrams = posGrams.groupBy("gram")
@@ -189,7 +189,7 @@ object Curation {
     val nseg = ceil(size(words).cast("double") / k).cast("int")
     // (doc, idx, segment, hash) occurrences; read twice (canonical
     // aggregate + keep join), so persist like the other pair streams
-    val occ = Dedup.tracked(base.select(col("doc_id"),
+    val occ = Lineage.keep(base.select(col("doc_id"),
         posexplode(transform(sequence(lit(0), nseg - 1),
           b => array_join(slice(words, b * k + 1, lit(k)), " ")))
           .as(Seq("idx", "seg")))
@@ -231,7 +231,7 @@ object Curation {
     val bin = thresholds.foldLeft(lit(0)) { (acc, t) =>
       acc + when(col(scoreCol) >= t, 1).otherwise(0)
     }
-    val bins = Dedup.tracked(df
+    val bins = Lineage.keep(df
       .select(bin.as("__bin"), col(weightCol).as("__w"))
       .groupBy("__bin")
       .agg(count(lit(1)).as("__docs"), sum(col("__w")).as("__wsum")))

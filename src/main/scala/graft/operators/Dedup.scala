@@ -16,35 +16,11 @@ import org.apache.spark.sql.types._
   */
 object Dedup {
 
-  // ---- persist lifecycle -------------------------------------------------
-  // Several operators persist an intermediate both sides of a self-join
-  // read (columnar cache beats recompute and localCheckpoint; see the
-  // per-site comments). Every persist goes through tracked(), so callers
-  // have an explicit paired release: consume the returned pairs, then
-  // releaseIntermediates(). Bench/Verify (and long-lived sessions) call it
-  // between queries; leaving entries cached is never required for
-  // correctness.
-  private val persistedIntermediates =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private[graft] def tracked(df: DataFrame): DataFrame =
-    persistedIntermediates.synchronized {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persistedIntermediates += p
-      p
-    }
-
-  /** Unpersist every intermediate cached by dedup/similarity operators
-    * since the last release (the paired release for their internal
-    * `persist`s). Routed through [[Lineage.free]] because the CC
-    * operators track lineage-CUT frames here too, and a bare
-    * `Dataset.unpersist` cannot reclaim those (checkpointed blocks are
-    * not CacheManager entries). */
-  def releaseIntermediates(): Unit =
-    persistedIntermediates.synchronized {
-      persistedIntermediates.foreach(Lineage.free)
-      persistedIntermediates.clear()
-    }
+  /** Free every intermediate registered outside any open
+    * [[Lineage.scope]] (the root scope) — Bench/Verify and long-lived
+    * sessions call it between queries; leaving entries cached is never
+    * required for correctness. */
+  def releaseIntermediates(): Unit = Lineage.releaseRoot()
 
   /** Aggregation-partition count from plan-stats bytes: one task per
     * ~4 MB of source, clamped to [defaultParts, 4096]. Pure so both
@@ -65,7 +41,7 @@ object Dedup {
     * compact pre-explode input bytes — the 100x probe measured 7.4 GB
     * of hash-agg spill (and a 15x time ratio on a 10x corpus) on the
     * shared-substring family from exactly this blind spot. One
-    * single-row action on the (tracked, tiny) per-key document-
+    * single-row action on the (kept, tiny) per-key document-
     * frequency aggregate buys the true fan-out, and the postings are
     * re-bucketed so each task emits roughly `PairTaskBytes` of pairs.
     * Returns the postings unchanged when the session default already
@@ -173,12 +149,12 @@ object Dedup {
     // broadcast side). At cluster scale this is "write signatures out,
     // then join" — here persist() is the single-job equivalent (columnar
     // cache; measured 6× faster than localCheckpoint's row-serialized
-    // blocks). Release path: Dedup.releaseIntermediates() after the pairs
-    // are consumed (Bench/Verify do).
+    // blocks). Released with the caller's Lineage scope after the pairs
+    // are consumed.
     // skew guard: window-count per bucket (one shuffle on the join key,
     // whose partitioning the self-join below then reuses) and drop
     // oversized buckets before they can go quadratic
-    val banded = tracked(bandedSignatures(df, textCol, idCol, shingleLen,
+    val banded = Lineage.keep(bandedSignatures(df, textCol, idCol, shingleLen,
       bands, rowsPerBand, Some(bucketCap)))
     val l = banded.select(col("band"), col("bucket"),
       col("id").as("a"), col("sig").as("sig_a"))
@@ -235,7 +211,7 @@ object Dedup {
     * lake's internal near-dups were already resolved; re-pairing them
     * is the quadratic-in-history cost this operator exists to avoid).
     * At 100 TB the ref side's banded signatures are written to a table
-    * once and reused every increment; the in-job `tracked` persist of
+    * once and reused every increment; the in-job `kept` persist of
     * the ref side is that contract's single-job equivalent.
     *
     * `bucketCap` bounds the REFERENCE side per (band, bucket) — the
@@ -375,9 +351,9 @@ object Dedup {
     * appending a duplicate (exactly-once without a transaction log).
     * [[minhashLshLakeStep]] runs it with (flat read of `path`, `path`,
     * Append) and folds at once. The thunk reads the survivors' cut
-    * blocks and the step's tracked banded rows, so it must complete
-    * before the caller frees the survivors (the tracked rows live
-    * until `releaseIntermediates`); see [[exactLakeStepDeferred]].
+    * blocks and the step's kept banded rows, so both must stay live
+    * until it completes — they belong to the caller's
+    * [[Lineage.scope]]; see [[exactLakeStepDeferred]].
     *
     * `dedupWithinIncrement` additionally removes WITHIN-increment
     * near-dups (larger id of every banded pair at `minEstJaccard` —
@@ -397,7 +373,7 @@ object Dedup {
       "refSigs must hold a writeBandedSignatures table " +
         s"(id, sig, band, bucket); got ${refSigs.columns.mkString(",")}")
     val numHashes = bands * rowsPerBand
-    val bn = tracked(bandedSignatures(newDf, textCol, idCol, shingleLen,
+    val bn = Lineage.keep(bandedSignatures(newDf, textCol, idCol, shingleLen,
       bands, rowsPerBand, None))
     val crossRemoved = bandedCrossRaw(bn, refSigs, numHashes)
       .where(col("est_jaccard") >= minEstJaccard)
@@ -624,7 +600,7 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "block")
     val bw = org.apache.spark.sql.expressions.Window
       .partitionBy("band", "block")
-    val blocked = tracked(blockedAll
+    val blocked = Lineage.keep(blockedAll
       .withColumn("__n", count(lit(1)).over(bw))
       .where(col("__n") <= blockCap).drop("__n"))
     val l = blocked.select(col("band"), col("block"),
@@ -674,7 +650,7 @@ object Dedup {
     // whose 128-distinct-keys-per-partial sort fallback spilled 3.6 GB
     // at the 100x probe on this df-count; flat primitive keys keep the
     // whole chain in codegen'd HashAggregate / shuffled hash joins
-    val inverted = tracked(windowHashes(df, textCol, idCol, windowLen)
+    val inverted = Lineage.keep(windowHashes(df, textCol, idCol, windowLen)
       .select(col("id"), col("w.h1").as("h1"), col("w.h2").as("h2")))
     // size the df-count aggregation by the SCAN size: window keys are
     // singleton-dominated, so partial aggregation combines nothing and
@@ -690,7 +666,7 @@ object Dedup {
     val defaultParts =
       df.sparkSession.sessionState.conf.numShufflePartitions
     val aggParts = aggPartsFor(statBytes, defaultParts)
-    val eligibleDf = tracked(inverted
+    val eligibleDf = Lineage.keep(inverted
       .repartition(aggParts, col("h1"), col("h2"))
       .groupBy("h1", "h2")
       .agg(count(lit(1)).as("__df"))
@@ -698,16 +674,16 @@ object Dedup {
     val eligible = eligibleDf.select(col("h1"), col("h2"))
     val base = inverted.join(eligible.hint("SHUFFLE_HASH"),
       Seq("h1", "h2"), "left_semi")
-    val sized = tracked(pairStreamParts(eligibleDf, "__df")
+    val sized = Lineage.keep(pairStreamParts(eligibleDf, "__df")
       .map(p => base.repartition(p, col("h1"), col("h2"))).getOrElse(base))
     val l = sized.select(col("h1"), col("h2"), col("id").as("a"))
     val r = sized.select(col("h1"), col("h2"), col("id").as("b"))
-    // the pair list itself is tracked: like the CC label tables, it is
+    // the pair list itself is kept: like the CC label tables, it is
     // the unit every consumer fans out over (component grouping,
     // leakage audits, keep/drop filters), and it is orders of magnitude
     // smaller than the window stream that produced it — caching caps
     // the expensive candidate join at one evaluation per pipeline
-    tracked(l.join(r.hint("SHUFFLE_HASH"), Seq("h1", "h2"))
+    Lineage.keep(l.join(r.hint("SHUFFLE_HASH"), Seq("h1", "h2"))
       .where(col("a") < col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared))
@@ -729,7 +705,7 @@ object Dedup {
   def editDistancePairs(df: DataFrame, textCol: String, idCol: String,
       maxDist: Int = 5, prefixLen: Int = 64, bandWidth: Int = 8,
       anchorLen: Int = 8, blockCap: Int = 1000): DataFrame = {
-    val base = tracked(df.select(col(idCol).as("id"),
+    val base = Lineage.keep(df.select(col(idCol).as("id"),
       substring(col(textCol), 1, prefixLen).as("p"),
       expr(s"length($textCol) div $bandWidth").as("band"),
       substring(col(textCol), 1, anchorLen).as("anchor")))
@@ -827,17 +803,17 @@ object Dedup {
       transform(sequence(lit(1), n - (k - 1)),
         i => md5(col(textCol).substr(i, lit(k)))))
       .otherwise(array().cast(ArrayType(StringType)))
-    // the gram array is materialized (tracked) BEFORE the winnow pass:
+    // the gram array is materialized (kept) BEFORE the winnow pass:
     // referencing an aliased pipeline column inside an HOF lambda
     // re-evaluates it per element — O(n²) md5 calls without the cache
-    val withGrams = tracked(df.select(col(idCol).as("id"), grams.as("g")))
-    val fps = tracked(withGrams.select(col("id"),
+    val withGrams = Lineage.keep(df.select(col(idCol).as("id"), grams.as("g")))
+    val fps = Lineage.keep(withGrams.select(col("id"),
       when(size(col("g")) >= w,
         array_distinct(transform(sequence(lit(1), size(col("g")) - (w - 1)),
           j => array_min(slice(col("g"), j, lit(w))))))
         .otherwise(array().cast(ArrayType(StringType))).as("fps")))
     val inverted = fps.select(col("id"), explode(col("fps")).as("fp"))
-    val eligibleDf = tracked(inverted.groupBy("fp")
+    val eligibleDf = Lineage.keep(inverted.groupBy("fp")
       .agg(count(lit(1)).as("__df"))
       .where(col("__df") >= 2 && col("__df") <= docFreqCap))
     val eligible = eligibleDf.select(col("fp"))
@@ -941,7 +917,7 @@ object Dedup {
     // too expensive to evaluate per branch — cache-population races
     // between sibling scans in one job would still double-compute it,
     // so an explicit count() pins the cache in a single sequential job
-    val p = tracked(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
+    val p = Lineage.keep(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
     p.count()
     // eager lineage CUT (not bare persist): every round's plan embeds
     // its inputs' logical plans, so with a heavyweight pair pipeline
@@ -952,7 +928,6 @@ object Dedup {
     val edges = Lineage.cut(p
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
-    persistedIntermediates.synchronized { persistedIntermediates += edges }
     // label sum as the convergence scalar — exact decimal accumulation so
     // 64-bit ids can never wrap the sum into a false fixpoint; an empty
     // vertex set (no pairs at all) sums to null → zero, converging
@@ -982,7 +957,6 @@ object Dedup {
       prevSum = nextSum
       i += 1
     }
-    persistedIntermediates.synchronized { persistedIntermediates += labels }
     labels
   }
 
@@ -1010,10 +984,10 @@ object Dedup {
     // same materialize-once discipline as [[duplicateComponents]]: the
     // node set reads `pairs` twice and the initial edge canon a third
     // time — one count() makes pair generation a single job
-    val p = tracked(pairs.select(a.as("__pa"), b.as("__pb")))
+    val p = Lineage.keep(pairs.select(a.as("__pa"), b.as("__pb")))
     p.count()
     val pa = col("__pa"); val pb = col("__pb")
-    val nodes = tracked(p.select(pa.as("id"))
+    val nodes = Lineage.keep(p.select(pa.as("id"))
       .union(p.select(pb.as("id"))).distinct())
     def canon(d: DataFrame): DataFrame = d.distinct()
     // pair-sensitive set fingerprint: Σ xxhash64(lo, hi) distinguishes
@@ -1068,7 +1042,6 @@ object Dedup {
     val labels = nodes.join(edges, nodes("id") === edges("hi"), "left")
       .groupBy(col("id")).agg(min(col("lo")).as("__p"))
       .select(col("id"), coalesce(col("__p"), col("id")).as("component"))
-    persistedIntermediates.synchronized { persistedIntermediates += edges }
     labels
   }
 
@@ -1106,7 +1079,7 @@ object Dedup {
   def ngramJaccardPairsPrefix(df: DataFrame, textCol: String, idCol: String,
       shingleLen: Int = 3, minJaccard: Double = 0.5,
       docFreqCap: Int = Int.MaxValue): DataFrame = {
-    val shingled = tracked(df.select(col(idCol).as("id"),
+    val shingled = Lineage.keep(df.select(col(idCol).as("id"),
       wordShinglesDistinct(col(textCol), shingleLen).as("sh")))
     val ex = shingled.where(size(col("sh")) > 0)
       .select(col("id"), size(col("sh")).as("n_sh"),
@@ -1127,7 +1100,7 @@ object Dedup {
     // buffer is the document's own shingle set (bounded by doc length),
     // never a posting list, so document frequency skew cannot blow it up
     val kept = ex.join(dfreq, "shingle")
-    val perDoc = tracked(kept
+    val perDoc = Lineage.keep(kept
       .groupBy("id", "n_sh")
       .agg(array_sort(collect_list(struct(col("df"), col("shingle"))))
         .as("ranked")))
@@ -1213,7 +1186,7 @@ object Dedup {
     // re-evaluate the whole split→transform pipeline per branch —
     // measured 5× the single-pass cost. At cluster scale this is
     // "materialize the shingle set once", the standard index-build step.
-    val shingled = tracked(df.select(col(idCol).as("id"),
+    val shingled = Lineage.keep(df.select(col(idCol).as("id"),
       wordShinglesDistinct(col(textCol), shingleLen).as("sh")))
     val docs = shingled.withColumn("n_sh", size(col("sh")))
     val inverted = docs.select(col("id"), col("n_sh"),
@@ -1227,7 +1200,7 @@ object Dedup {
     // groupBy below share the hash partitioning on `shingle`, so the
     // pruning costs one extra (small) exchange, not a re-shuffle of the
     // full index.
-    val eligibleDf = tracked(inverted.groupBy("shingle")
+    val eligibleDf = Lineage.keep(inverted.groupBy("shingle")
       .agg(count(lit(1)).as("__df"))
       .where(col("__df") >= 2 && col("__df") <= docFreqCap))
     val eligible = eligibleDf.select(col("shingle"))

@@ -124,14 +124,12 @@ object Discretize {
     // is a full-scan job (a global min-2 reads every partition), and
     // without the cache the series' upstream plan — often an
     // aggregation over a raw table — re-evaluates for the period pivot.
-    // One fill, two consumers; released by the session's between-queries
-    // clearCache like the `long` cache below.
-    val base = series.copy(df = series.df
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val long = base.withStepColumn
+    // One fill, two consumers; both caches belong to the caller's
+    // Lineage scope.
+    val base = series.copy(df = Lineage.keep(series.df))
+    val long = Lineage.keep(base.withStepColumn
       .withColumn("__period", (col("__step") / periodLength).cast(LongType))
-      .withColumn("__slot", pmod(col("__step"), lit(periodLength)).cast(IntegerType))
-      .cache()
+      .withColumn("__slot", pmod(col("__step"), lit(periodLength)).cast(IntegerType)))
 
     val slotCols = (0 until periodLength).map(s => s"s$s")
     val matrix = long.groupBy("__period")
@@ -176,21 +174,19 @@ object Discretize {
     // cache the input frame before the step-inference collect (see
     // discretize): the melt below re-reads it once PER VALUE COLUMN,
     // so without the cache the upstream plan evaluates |cols|+1 times
-    val fdf = frame.df
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fdf = Lineage.keep(frame.df)
     val long = cols.map(c => fdf.select(col(ts), lit(c).as("__col"),
         col(c).cast("double").as("__v"))).reduce(_ unionByName _)
     val firstTs = fdf.select(col(ts)).orderBy(col(ts).asc).limit(2)
       .collect().map(_.getTimestamp(0).getTime / 1000)
     require(firstTs.length >= 2, "need at least 2 rows")
     val stepSeconds = firstTs(1) - firstTs(0)
-    val stamped = long.withColumn("__step",
+    val stamped = Lineage.keep(long.withColumn("__step",
         ((unix_timestamp(col(ts)) - lit(firstTs(0))) / lit(stepSeconds))
           .cast(LongType))
       .withColumn("__period", (col("__step") / periodLength).cast(LongType))
       .withColumn("__slot", pmod(col("__step"), lit(periodLength))
-        .cast(IntegerType))
-      .cache()
+        .cast(IntegerType)))
 
     val assigned: DataFrame =
       if (noTypicalPeriods <= 1)

@@ -20,18 +20,24 @@ import scala.concurrent.duration.Duration
   * stalls into spurious corruption-shaped failures. The same holds
   * when the CALLER is interrupted: the pool is drained before the
   * interrupt propagates (see [[drain]]).
+  *
+  * Each job runs in its caller's [[Lineage]] scope (handed over
+  * explicitly, not inherited through the thread), so what a job cuts or
+  * keeps is freed with the caller's unit of work — and, since the pool
+  * drains before anything escapes, never while a job still reads it.
   */
 private[graft] object DriverPool {
 
   def all[A](jobs: Seq[() => A], maxThreads: Int = 4): Seq[A] = {
     if (jobs.isEmpty) return Seq.empty
     if (jobs.lengthCompare(1) == 0) return Seq(jobs.head())
+    val scope = Lineage.current
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(jobs.size, maxThreads))
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
     try {
-      val fs = jobs.map(j => Future(j()))
+      val fs = jobs.map(j => Future(Lineage.within(scope)(j())))
       // drain the pool FIRST (Await.ready never throws the job's
       // exception), then rethrow the first in-order failure
       fs.foreach(f => Await.ready(f, Duration.Inf))
@@ -55,10 +61,10 @@ private[graft] object DriverPool {
     if (interrupted) Thread.currentThread().interrupt()
   }
 
-  /** Two-job convenience for the common "overlap these two writes"
-    * call sites. */
-  def both(a: => Unit, b: => Unit): Unit = {
-    all[Unit](Seq(() => a, () => b))
-    ()
+  /** Two-job convenience for the common "overlap these two" call
+    * sites: both results, in argument order. */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val r = all[Any](Seq(() => a, () => b))
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,15 +11,11 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  private val persisted = ArrayBuffer.empty[DataFrame]
-
-  /** Free every block this module pinned (same lifecycle contract as
-    * `Dedup.releaseIntermediates` — Bench/Verify call it between
+  /** Free every frame this module cut or kept outside any open
+    * [[Lineage.scope]] — the same root release as
+    * `Dedup.releaseIntermediates` (Bench/Verify call both between
     * queries). */
-  def releaseIntermediates(): Unit = persisted.synchronized {
-    persisted.foreach(Lineage.free) // handles cut frames too (see Dedup)
-    persisted.clear()
-  }
+  def releaseIntermediates(): Unit = Lineage.releaseRoot()
 
   /** PageRank mass by fixed-round power iteration on the UNDIRECTED
     * graph (edges are symmetrized and deduplicated; random-walk
@@ -68,14 +63,13 @@ object Graph {
     // deg keeps its groupBy partitioning (same key), so the update join
     // against the gather output (also agg-partitioned by id) is
     // exchange-free.
-    val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val sym = Lineage.keep(edges
+      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .distinct()
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
+    val deg = Lineage.keep(sym.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("deg")))
     // (1 − 7/8)·unit is exact: 10^q is divisible by 8 for q >= 3
     val baseUnits = unit / 8L
     var state = deg.select(col("id"), col("deg"), lit(unit).as("mu"))
@@ -103,15 +97,6 @@ object Graph {
       // a plain derived frame, for which free degrades to a no-op.
       if (i > 0) Lineage.free(prev)
       i += 1
-    }
-    // register the FINAL cut too (same contract as Dedup's labels/edges
-    // registration): without it, releaseIntermediates can never reclaim
-    // the last round's checkpoint blocks — or, in reliable mode, its
-    // files — and each pageRankMass call leaks one block set for the
-    // session. The between-queries release cadence bounds the returned
-    // frame's lifetime, exactly as for the duplicate-component labels.
-    persisted.synchronized {
-      persisted += sym; persisted += deg; persisted += state
     }
     state.select(col("id"), (col("mu") / lit(unit.toDouble)).as("m"))
   }
@@ -160,11 +145,11 @@ object Graph {
   private def lpaCore(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, track: Boolean): (DataFrame, Seq[Long]) = {
     require(iters >= 1, "iters must be >= 1")
-    val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val sym = Lineage.keep(edges
+      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .distinct()
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     var state = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lab"))
     val changed = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -190,7 +175,6 @@ object Graph {
       if (i > 0) Lineage.free(prev)
       i += 1
     }
-    persisted.synchronized { persisted += sym; persisted += state }
     (state.select(col("id").as("node"), col("lab").as("label")),
       changed.toSeq)
   }

@@ -37,18 +37,18 @@ object Retrieval {
     val id = col(idCol)
     val words = df.select(id,
       explode(split(trim(col(textCol)), "\\s+")).as("word"))
-    // doc length in words + corpus stats. dl PERSISTS (tracked — one
+    // doc length in words + corpus stats. dl PERSISTS (kept — one
     // narrow (id, long) row per doc): stats, the scoring join, and a
     // naive re-derivation would otherwise each re-scan the corpus TEXT
     // column just to recount words — the 100 TB cost is the text scan,
     // not the 16-byte cache row.
-    val dl = Dedup.tracked(df.select(id,
+    val dl = Lineage.keep(df.select(id,
       size(split(trim(col(textCol)), "\\s+")).cast("long").as("dl")))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
     // tf PERSISTS too (bounded: only docs hitting a probe term, one
     // row per (doc, term)) — df-counting and scoring both read it
-    val tf = Dedup.tracked(words.where(col("word").isin(queryTerms: _*))
+    val tf = Lineage.keep(words.where(col("word").isin(queryTerms: _*))
       .groupBy(id, col("word")).agg(count(lit(1)).as("tf")))
     val dfc = tf.groupBy("word").agg(count(lit(1)).as("dfc"))
     val idf = dfc.crossJoin(broadcast(stats)).select(col("word"),
@@ -115,15 +115,15 @@ object Retrieval {
     val vocab = probes.select(col("term").as("word")).distinct()
     val words = df.select(id,
       explode(split(trim(col(textCol)), "\\s+")).as("word"))
-    // dl and tf persist (tracked) for the same reason as [[bm25TopK]]:
+    // dl and tf persist (kept) for the same reason as [[bm25TopK]]:
     // the corpus TEXT must scan exactly twice (word stream + lengths),
     // never once more per derived aggregate — dl is a narrow
     // (id, long) row per doc, tf is bounded by probe-vocabulary hits
-    val dl = Dedup.tracked(df.select(id,
+    val dl = Lineage.keep(df.select(id,
       size(split(trim(col(textCol)), "\\s+")).cast("long").as("dl")))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    val tf = Dedup.tracked(words
+    val tf = Lineage.keep(words
       .join(broadcast(vocab), Seq("word"), "left_semi")
       .groupBy(id, col("word")).agg(count(lit(1)).as("tf")))
     val dfc = tf.groupBy("word").agg(count(lit(1)).as("dfc"))

@@ -153,7 +153,7 @@ object Sampling {
     * bounded job collects a single long per partition, the prefix
     * offsets broadcast back, and the second pass emits cumulative
     * weights partition-locally. The sorted frame persists between the
-    * two passes (tracked — released with the operator pool), so the
+    * two passes (kept — released with the caller's scope), so the
     * sort runs once. Same RDD discipline as
     * [[Analytics.distributedRank]] / `EnergySeries.ldc`.
     */
@@ -174,7 +174,7 @@ object Sampling {
     require(shardWeight > 0, s"shardWeight must be > 0 (got $shardWeight)")
     require(startWeight >= 0,
       s"startWeight must be >= 0 (got $startWeight)")
-    assignSorted(Dedup.tracked(df
+    assignSorted(Lineage.keep(df
       .select(col(idCol), col(weightCol).cast("long").as(weightCol))
       .withColumn("__k",
         md5(concat(col(idCol).cast("string"), lit(salt))))
@@ -214,7 +214,7 @@ object Sampling {
     require(shardWeight > 0, s"shardWeight must be > 0 (got $shardWeight)")
     require(startWeight >= 0,
       s"startWeight must be >= 0 (got $startWeight)")
-    assignSorted(Dedup.tracked(df
+    assignSorted(Lineage.keep(df
       .select(col(idCol), col(weightCol).cast("long").as(weightCol),
         col(orderCol))
       .orderBy(col(orderCol), col(idCol))
@@ -566,7 +566,7 @@ object Sampling {
     val spark = seqs.sparkSession
     import spark.implicits._
     // ONE execution of the (two-aggregate) packSequences plan: a lazy
-    // tracked PERSIST — the emptiness probe computes (and caches) the
+    // kept PERSIST — the emptiness probe computes (and caches) the
     // first partitions, the write completes the cache reusing the
     // probe's shuffle stages, and the meta aggregate reads cached
     // blocks. Round 20 swapped the previous EAGER lineage cut for
@@ -575,7 +575,7 @@ object Sampling {
     // materialization — guide §1.2/§5). Probing the raw plan would
     // still run both shuffles once for the probe and again for the
     // write — the persist is what prevents that.
-    val cut = Dedup.tracked(seqs)
+    val cut = Lineage.keep(seqs)
     try {
       // loud on empty: a poll where nothing newly closed has nothing
       // to land (an empty parquet dir would also brick later reads,
@@ -1027,15 +1027,15 @@ object Sampling {
   /** The [[shardAssign]] two-pass running sum over an arbitrary
     * summary frame: sort by `sortCols`, collect ONE long per partition
     * (the bounded job), broadcast the prefix offsets back, emit the
-    * cumulative sum-before as `__start`. The frame is persisted
-    * between the passes via the operator pool (released with
-    * [[Dedup.releaseIntermediates]]) so the sort runs once. */
+    * cumulative sum-before as `__start`. The frame is kept between the
+    * passes ([[Lineage.keep]], released with the caller's scope) so the
+    * sort runs once. */
   private def runningStarts(counts: DataFrame,
       sortCols: Seq[String]): DataFrame = {
     val spark = counts.sparkSession
     val cols0 = counts.columns.toSeq
     val nIdx = cols0.indexOf("__n")
-    val sorted = Dedup.tracked(counts.orderBy(sortCols.map(col): _*))
+    val sorted = Lineage.keep(counts.orderBy(sortCols.map(col): _*))
     val rdd = sorted.rdd
     val partTotals = rdd.mapPartitionsWithIndex { case (i, it) =>
       var s = 0L; it.foreach(r => s += r.getLong(nIdx)); Iterator((i, s))

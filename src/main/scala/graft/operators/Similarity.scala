@@ -419,9 +419,8 @@ object Similarity {
       dim: Int = 64, seed: Long = 42L, multiProbe: Boolean = false)
       : DataFrame = {
     // persisted because both join sides read it (columnar cache beats
-    // localCheckpoint's row blocks 6×); release path =
-    // Dedup.releaseIntermediates() after the pairs are consumed
-    // (Bench/Verify do).
+    // localCheckpoint's row blocks 6×); released with the caller's
+    // Lineage scope after the pairs are consumed.
     // Candidate generation carries IDS ONLY: the bucket equi-join and the
     // multi-table/multi-probe duplicate collapse (`distinct`) shuffle
     // 16-byte (a, b) rows, never the vectors. Shipping both 64-float
@@ -435,7 +434,7 @@ object Similarity {
     // persist the narrow (id, bkt0..bktN) projection: both key
     // generators below read it, and it holds the numPlanes×numTables
     // dot products — computed once per row, not once per probe key
-    val buckets = Dedup.tracked(
+    val buckets = Lineage.keep(
       withB.select(col(idCol).as("id") +: bNames.map(col): _*))
     val bucketed = buckets.select(col("id"), indexKeys(bNames).as("tb"))
     // multiProbe expands ONE side to Hamming-1 buckets ((1+numPlanes)x
@@ -542,7 +541,7 @@ object Similarity {
     // join sides, and the join itself all reuse that partitioning (the
     // cached post-window rows are already cell-partitioned)
     val cw = Window.partitionBy("cell").orderBy(col("id").asc)
-    val mv = Dedup.tracked(df.select(col(idCol).as("id"),
+    val mv = Lineage.keep(df.select(col(idCol).as("id"),
         col(vecCol).as("v"), l2Norm(col(vecCol)).as("n"),
         explode(slice(sortedCells, 1, math.max(1, nassign))).as("cell"))
       .withColumn("__rk", row_number().over(cw)))
@@ -683,7 +682,7 @@ object Similarity {
     // window's cell-keyed exchange is where vectors move — nassign·n
     // rows, linear in the corpus — and the candidate join reuses the
     // cached cell-partitioned rows on both sides
-    val assigned = Dedup.tracked(df.select(col(idCol).as("id"),
+    val assigned = Lineage.keep(df.select(col(idCol).as("id"),
         col(vecCol).as("v"), l2Norm(col(vecCol)).as("n"))
       .select(col("id"), col("v"), col("n"), sortedCells.as("sc"))
       .select(col("id"), col("v"), col("n"),
@@ -952,7 +951,7 @@ object Similarity {
     require(stored.columns.toSet == Set("cell", "keeper", "kv", "kn",
       "kok"), "keepers must be a writeSemDedupArtifacts table; got " +
       stored.columns.mkString(","))
-    val assigned = Dedup.tracked(semAssign(newDf, idCol, vecCol,
+    val assigned = Lineage.keep(semAssign(newDf, idCol, vecCol,
       centroids, keepFarthest, nassign, withOk = true))
     val crossRemoved = semCrossTail(assigned.drop("ok"), stored,
       threshold).select(col("id"))

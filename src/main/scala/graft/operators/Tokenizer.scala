@@ -87,7 +87,7 @@ object Tokenizer {
     val words = df
       .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
     val shim = org.apache.spark.sql.graftshim.ColumnShim
-    Dedup.tracked(
+    Lineage.keep(
       if (byteFallback)
         words.where(length(col("w")) > 0)
           .groupBy("w").agg(count(lit(1)).as("cnt"))
@@ -139,7 +139,7 @@ object Tokenizer {
   private final class VocabChain(var vocab: DataFrame) {
     private var lastCut: Option[DataFrame] = None
     private def cutNow(): Unit = {
-      val c = Dedup.tracked(Lineage.cut(vocab))
+      val c = Lineage.keep(Lineage.cut(vocab))
       lastCut.foreach(Lineage.free)
       lastCut = Some(c)
       vocab = c
@@ -236,7 +236,7 @@ object Tokenizer {
     // decision only needs "<= 2^21 rows or not", so probe with a
     // bounded limit instead of a full count — on the >2^21 distributed
     // path the old count was a pure extra full-vocabulary pass; on the
-    // local path the collect below completes the tracked persist.
+    // local path the collect below completes the kept persist.
     val n = vocab0.limit(LocalLearnMaxVocab.toInt + 1).count()
     val learned: Seq[(Int, String, String, String, Long)] =
       if (n <= LocalLearnMaxVocab) {
@@ -755,7 +755,7 @@ object Tokenizer {
     // distinct once, COUNT it (a bounded aggregate that materializes
     // the cache and can never OOM the driver), refuse past the cap,
     // then collect from the cache — one full job plus one cache scan.
-    val snap = baseDf.persist()
+    val snap = Lineage.keep(baseDf)
     val base = try {
       val n = snap.count()
       require(n <= (1 << 21),
@@ -764,7 +764,7 @@ object Tokenizer {
           "row per distinct OOV word — use byteFallback = true for a " +
           "closed, alphabet-bounded vocabulary")
       snap.collect().map(_.getString(0))
-    } finally snap.unpersist()
+    } finally Lineage.free(snap)
     def u8cmp(a: String, b: String): Boolean = {
       val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)

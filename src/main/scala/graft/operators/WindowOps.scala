@@ -181,7 +181,7 @@ object WindowOps {
     val parts = if (rangeParts > 0) rangeParts
       else spark.sessionState.conf.numShufflePartitions
     val keyCols = partitionCols.map(col)
-    val ranged = Dedup.tracked(
+    val ranged = Lineage.keep(
       df.repartitionByRange(parts, (partitionCols ++ orderCols).map(col): _*)
         .withColumn("__pid", spark_partition_id()))
     // (partition, key) row counts -> per-(partition, key) start offsets

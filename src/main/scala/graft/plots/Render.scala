@@ -317,14 +317,14 @@ object Render {
       colorbar: Boolean = true, axisOff: Boolean = false,
       xlabel: Option[String] = None,
       ylabel: Option[String] = None): Array[Byte] = {
-    val (m, stepSeconds) = collectMatrix(es, periodLength)
+    val (ms, stepSeconds) = collectMatrices(es, periodLength)
     val (xl, yl) =
       if (axisOff) (None, None)
       else {
         val (dx, dy) = axisLabels(stepSeconds, periodLength)
         (Some(xlabel.getOrElse(dx)), Some(ylabel.getOrElse(dy)))
       }
-    renderMatrix(m, vmin, vmax, vcenter, cellW, cellH, colorbar,
+    renderMatrix(ms.head, vmin, vmax, vcenter, cellW, cellH, colorbar,
       title = es.name, unitsLabel = es.units.map(_.raw),
       xlabel = xl, ylabel = yl)
   }
@@ -341,8 +341,9 @@ object Render {
       colorbar: Boolean = true, axisOff: Boolean = false): Array[Byte] = {
     val cols = ef.valueCols
     require(cols.nonEmpty, "frame has no value columns")
-    val collected = cols.map(c => collectMatrix(ef(c), periodLength))
-    val mats = collected.map(_._1)
+    // one step inference and one pivot for every column
+    val (mats, stepSeconds) = collectMatrices(
+      ef(cols.head).copy(df = ef.df), periodLength, cols)
     val nS = mats.map(_.map(_.length).max).max
     val nP = mats.map(_.length).max
     val flat = mats.iterator.flatMap(_.iterator.flatten.flatten)
@@ -366,7 +367,7 @@ object Render {
     val unitsLabel = ef.unitsMap.values.headOption.map(_.raw)
     val labels =
       if (axisOff) None
-      else Some(axisLabels(collected.head._2, periodLength))
+      else Some(axisLabels(stepSeconds, periodLength))
     val left = if (labels.isDefined) YLabelW + YTickW else 0
     val cbW = if (colorbar) 18 else 0
     val cbGap = if (colorbar) 8 else 0
@@ -637,13 +638,13 @@ object Render {
       cellW: Int = 8, plotH: Int = 96,
       kind: String = "polygon"): Array[Byte] = kind match {
     case "polygon" =>
-      renderRidges(collectMatrix(es, periodLength)._1, vmin, vmax, cellW,
-        plotH, title = es.name)
+      renderRidges(collectMatrices(es, periodLength)._1.head, vmin, vmax,
+        cellW, plotH, title = es.name)
     case "surface" =>
-      renderSurface(collectMatrix(es, periodLength)._1, vmin, vmax,
+      renderSurface(collectMatrices(es, periodLength)._1.head, vmin, vmax,
         title = es.name)
     case "contour" =>
-      renderContour(collectMatrix(es, periodLength)._1, vmin, vmax,
+      renderContour(collectMatrices(es, periodLength)._1.head, vmin, vmax,
         title = es.name)
     case other =>
       throw new IllegalArgumentException(
@@ -709,19 +710,24 @@ object Render {
       Some(p)
     }
 
-  /** Distributed unstack → driver collect of the plot-sized matrix,
-    * with the step seconds the unstack inferred. The rows sort by period
-    * on the driver (nulls first, as `orderBy` would): the collect is
-    * plot-bounded, and a distributed sort would add a range-sampling
-    * job. */
-  private def collectMatrix(es: EnergySeries,
-      periodLength: Int): (Array[Array[Option[Double]]], Long) = {
-    val (pm, stepSeconds) = es.periodMatrix(periodLength)
+  /** Distributed unstack → driver collect of the plot-sized matrix of
+    * each of `cols` (value columns of `es.df`; by default just
+    * `es.valueCol`) from ONE pivot, with the step seconds the unstack
+    * inferred. The rows sort by period on the driver (nulls first, as
+    * `orderBy` would): the collect is plot-bounded, and a distributed
+    * sort would add a range-sampling job. */
+  private def collectMatrices(es: EnergySeries, periodLength: Int,
+      cols: Seq[String] = Nil): (Seq[Array[Array[Option[Double]]]], Long) = {
+    val valueCols = if (cols.isEmpty) Seq(es.valueCol) else cols
+    val (pm, stepSeconds) = es.periodMatrix(periodLength, valueCols)
     val rows = pm.collect()
       .sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-    (rows.map { r =>
-      (1 until r.length).map(i =>
-        if (r.isNullAt(i)) None else Some(r.getDouble(i))).toArray
-    }, stepSeconds)
+    val n = valueCols.size
+    (valueCols.indices.map(j => rows.map { r =>
+      (0 until (r.length - 1) / n).map { slot =>
+        val i = 1 + slot * n + j
+        if (r.isNullAt(i)) None else Some(r.getDouble(i))
+      }.toArray
+    }), stepSeconds)
   }
 }

@@ -116,9 +116,23 @@ object SequenceLake {
       idCol: String = "doc_id", posCol: String = "pos",
       tokenCol: String = "token",
       verifyCoverage: Boolean = true): Option[(Long, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val layout = new Path(s"$layoutRoot/layout")
+    val layoutDirs = LakeDir.live(
+      layout.getFileSystem(spark.sparkContext.hadoopConfiguration), layout)
+    require(layoutDirs.nonEmpty,
+      s"$layoutRoot/layout holds no increments — run appendIncrement")
+    pollLive(spark, layoutRoot, layoutDirs, seqRoot, seqLen, sep,
+      idCol, posCol, tokenCol, verifyCoverage)
+  }
+
+  /** [[pollLandedShards]] over the layout's already-resolved live
+    * increments `layoutDirs` (non-empty). */
+  private[streaming] def pollLive(spark: SparkSession,
+      layoutRoot: String, layoutDirs: Seq[String], seqRoot: String,
+      seqLen: Long, sep: Option[String], idCol: String, posCol: String,
+      tokenCol: String, verifyCoverage: Boolean): Option[(Long, Long)] = {
     val seqRootP = new Path(seqRoot)
-    val fs = seqRootP.getFileSystem(conf)
+    val fs = seqRootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // watermark = max shard landed in the lake + 1 (0 on a fresh
     // lake) — shard= names under each increment's sequences/ table.
     // Only increments whose META write COMMITTED count (_SUCCESS —
@@ -133,9 +147,6 @@ object SequenceLake {
       .map(d => s"$d/sequences"))
     val from = if (landedShards.isEmpty) 0L else landedShards.max + 1
     // open shard of the LAYOUT (same metadata-only read)
-    val layoutDirs = LakeDir.live(fs, new Path(s"$layoutRoot/layout"))
-    require(layoutDirs.nonEmpty,
-      s"$layoutRoot/layout holds no increments — run appendIncrement")
     val open = StreamShardLayout.openShard(fs, layoutDirs)
     if (open <= from) None
     else {

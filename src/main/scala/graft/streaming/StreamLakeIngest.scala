@@ -154,9 +154,10 @@ object StreamLakeIngest {
     * property the spec pins. Returns the admitted (filtered) rows,
     * eagerly materialized; also writes them to
     * `admittedDir/inc_b<batchId>` so the admitted corpus is itself a
-    * directory-of-increments parquet table. The caller owns the
-    * returned frame's [[Lineage.free]] and the operators'
-    * `releaseIntermediates` (the [[ingest]] loop does both). */
+    * directory-of-increments parquet table. Every intermediate it
+    * materializes (the returned frame included) belongs to the
+    * caller's [[Lineage.scope]] — the [[ingest]] loop runs each batch
+    * in one. */
   def curateIncrement(batch: DataFrame, lakeRoot: String,
       admittedDir: String, textCol: String, idCol: String,
       vecCol: String, batchId: Long, p: Params = Params()): DataFrame = {
@@ -170,74 +171,59 @@ object StreamLakeIngest {
   /** Stages 1-5 without the admitted write — the shared core of
     * [[curateIncrement]] and [[curateIncrementFull]].
     *
-    * FOLD-IN OVERLAP (round 20, guide §2.6): each stage's lake fold-in
-    * write (hash increment, signature increment, keeper snapshot) only
-    * feeds the NEXT BATCH — this batch's later stages never read it —
-    * so the write runs on a driver side thread while the next stage's
-    * survivors materialize on the main thread, and is awaited exactly
-    * before the blocks it reads are freed. Failure semantics are the
-    * crash-replay ones the layout already guarantees: a fold-in that
-    * fails after a later stage started leaves only batch-id-derived
+    * FOLD-IN OVERLAP (guide §2.6): each stage's lake fold-in write
+    * (hash increment, signature increment, keeper snapshot) only feeds
+    * the NEXT BATCH — this batch's later stages never read it — so each
+    * fold runs beside the next stage in one [[DriverPool.both]] call.
+    * The stage frames stay live until the caller's scope ends, so a
+    * fold always reads them, whatever the plan shapes. Failure
+    * semantics are the crash-replay ones the layout already
+    * guarantees: a fold-in that fails leaves only batch-id-derived
     * Overwrite directories behind, which the replayed batch rewrites
-    * verbatim. When a stage throws, every fold-in already started is
-    * drained before the exception escapes, so a caller that replays
-    * the batch never races a still-running fold over the same
-    * directories. Results are byte-identical to the sequential form. */
+    * verbatim; when a stage throws, the fold beside it has finished
+    * before the exception escapes, so a caller that replays the batch
+    * never races a still-running fold over the same directories.
+    * Results are byte-identical to the sequential form. */
   private def fiveStages(batch: DataFrame, lakeRoot: String,
       textCol: String, idCol: String, vecCol: String, batchId: Long,
       p: Params): DataFrame = {
     val spark = batch.sparkSession
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      // 1. decontamination — stateless probe of the immutable artifact
-      val contaminated = Dedup.contaminatedDocsFromArtifact(batch,
-          LakeRead.parquet(spark, s"$lakeRoot/bench_windows"), textCol, idCol,
-          p.windowLen)
-        .select(col("id").as(idCol))
-      val s1 = batch.join(contaminated, Seq(idCol), "left_anti")
-      // 2. exact dedup vs the hash lake, fold survivors' hashes in
-      val (s2, fold2) = Dedup.exactLakeStepDeferred(s1,
-        visibleIncrements(spark, s"$lakeRoot/hashes", batchId),
-        textCol, idCol, LakeDir.inc(s"$lakeRoot/hashes", batchId))
-      val f2 = Future(fold2())
-      // 3. near-dup dedup vs the signature lake, fold signatures in
-      val (s3, fold3) = Dedup.minhashLshLakeStepDeferred(s2,
+    // 1. decontamination — stateless probe of the immutable artifact
+    val contaminated = Dedup.contaminatedDocsFromArtifact(batch,
+        LakeRead.parquet(spark, s"$lakeRoot/bench_windows"), textCol, idCol,
+        p.windowLen)
+      .select(col("id").as(idCol))
+    val s1 = batch.join(contaminated, Seq(idCol), "left_anti")
+    // 2. exact dedup vs the hash lake, fold survivors' hashes in
+    val (s2, fold2) = Dedup.exactLakeStepDeferred(s1,
+      visibleIncrements(spark, s"$lakeRoot/hashes", batchId),
+      textCol, idCol, LakeDir.inc(s"$lakeRoot/hashes", batchId))
+    // 3. near-dup dedup vs the signature lake, fold signatures in
+    val (_, (s3, fold3)) = DriverPool.both(fold2(),
+      Dedup.minhashLshLakeStepDeferred(s2,
         visibleIncrements(spark, s"$lakeRoot/sigs", batchId),
         textCol, idCol, LakeDir.inc(s"$lakeRoot/sigs", batchId),
         SaveMode.Overwrite, p.shingleLen, p.bands, p.rowsPerBand,
-        p.minEstJaccard, p.bucketCap, dedupWithinIncrement = true)
-      Await.result(f2, Duration.Inf) // fold2 reads s2's blocks
-      Lineage.free(s2)
-      val f3 = Future(fold3())
-      // 4. semantic dedup vs the latest keeper snapshot, rewrite a new
-      // one (a FRESH versioned snapshot dir — the deferred form's
-      // requirement)
-      val semDir = s"$lakeRoot/sem"
-      val (s4, fold4) = Similarity.semDedupLakeStepDeferred(s3, idCol,
+        p.minEstJaccard, p.bucketCap, dedupWithinIncrement = true))
+    // 4. semantic dedup vs the latest keeper snapshot, rewrite a new
+    // one (a FRESH versioned snapshot dir — the deferred form's
+    // requirement)
+    val semDir = s"$lakeRoot/sem"
+    val (_, (s4, fold4)) = DriverPool.both(fold3(),
+      Similarity.semDedupLakeStepDeferred(s3, idCol,
         vecCol, Similarity.readSemCodebook(spark, semDir),
         LakeRead.parquet(spark, keepersBefore(spark, semDir, batchId)),
         s"$semDir/keepers_b$batchId", p.semThreshold,
         keeperCap = p.keeperCap, nassign = p.nassign,
-        dedupWithinIncrement = true)
-      Await.result(f3, Duration.Inf) // fold3 reads s3's blocks
-      Lineage.free(s3)
-      val f4 = Future(fold4())
-      // 5. quality filters — stateless, AFTER the fold-ins (see scaladoc)
-      val admitted = Lineage.cut(s4
-        .withColumn("__r", TextOps.repetitionScores(col(textCol)))
-        .withColumn("__q", TextOps.qualityScore(col(textCol)))
-        .where(col("__q") >= p.minQuality &&
-          col("__r")("top_bigram_frac") <= p.maxTopBigramFrac &&
-          TextOps.langId(col(textCol)) === p.lang)
-        .drop("__r", "__q"))
-      Await.result(f4, Duration.Inf) // fold4 reads s4's blocks
-      Lineage.free(s4)
-      admitted
-    } finally DriverPool.drain(pool)
+        dedupWithinIncrement = true))
+    // 5. quality filters — stateless, AFTER the fold-ins (see scaladoc)
+    DriverPool.both(fold4(), Lineage.cut(s4
+      .withColumn("__r", TextOps.repetitionScores(col(textCol)))
+      .withColumn("__q", TextOps.qualityScore(col(textCol)))
+      .where(col("__q") >= p.minQuality &&
+        col("__r")("top_bigram_frac") <= p.maxTopBigramFrac &&
+        TextOps.langId(col(textCol)) === p.lang)
+      .drop("__r", "__q")))._2
   }
 
   /** Drive a stream of (idCol, textCol, vecCol) rows through the
@@ -250,10 +236,8 @@ object StreamLakeIngest {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val admitted = curateIncrement(batch, lakeRoot, admittedDir,
-          textCol, idCol, vecCol, batchId, p)
-        Lineage.free(admitted)
-        Dedup.releaseIntermediates()
+        Lineage.scope(curateIncrement(batch, lakeRoot, admittedDir,
+          textCol, idCol, vecCol, batchId, p))
       }
       .start()
 
@@ -401,7 +385,6 @@ object StreamLakeIngest {
         sp.tokenBudget)
       .drop("tokens")
     val admitted = Lineage.cut(metered.drop("__prior", "__cum"))
-    Lineage.free(s5)
     // new ledger = prior ∪ this batch's admissions, summed per source
     val ledger = prior.select(col("source"), col("tokens"))
       .unionByName(admitted.groupBy(col(sourceCol).as("source"))
@@ -426,10 +409,8 @@ object StreamLakeIngest {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val admitted = curateIncrementFull(batch, lakeRoot, admittedDir,
-          textCol, idCol, vecCol, sourceCol, batchId, p, sp)
-        Lineage.free(admitted)
-        Dedup.releaseIntermediates()
+        Lineage.scope(curateIncrementFull(batch, lakeRoot, admittedDir,
+          textCol, idCol, vecCol, sourceCol, batchId, p, sp))
       }
       .start()
 
@@ -451,14 +432,14 @@ object StreamLakeIngest {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val admitted = curateIncrementFull(batch, lakeRoot, admittedDir,
-          textCol, idCol, vecCol, sourceCol, batchId, p, sp)
-        val landed = StreamShardLayout.appendIncrement(
-          admitted.select(col(idCol), col("n_tokens")), layoutRoot,
-          idCol, "n_tokens", shardWeight, batchId)
-        Lineage.free(landed)
-        Lineage.free(admitted)
-        Dedup.releaseIntermediates()
+        Lineage.scope {
+          val admitted = curateIncrementFull(batch, lakeRoot,
+            admittedDir, textCol, idCol, vecCol, sourceCol, batchId, p,
+            sp)
+          StreamShardLayout.appendIncrement(
+            admitted.select(col(idCol), col("n_tokens")), layoutRoot,
+            idCol, "n_tokens", shardWeight, batchId)
+        }
       }
       .start()
 }

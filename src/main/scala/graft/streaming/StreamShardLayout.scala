@@ -193,7 +193,7 @@ object StreamShardLayout {
       // them from the LAYOUT batch too — that is the correct fix, and
       // this is the moment it's cheap to apply.
       //
-      // the token stream is evaluated ONCE: a tracked PERSIST whose
+      // the token stream is evaluated ONCE: a kept PERSIST whose
       // cache the coverage aggregate below populates while it runs —
       // the upstream tokenize (a full BPE id-encode in the trainer
       // arc, measured at bench scale as the dominant term of this
@@ -202,7 +202,7 @@ object StreamShardLayout {
       // lineage cut for this lazy persist: same single evaluation,
       // one fewer full pass + driver job per landing (the cut's
       // standalone materialization — guide §1.2/§5).
-      val toksCut = graft.operators.Dedup.tracked(
+      val toksCut = Lineage.keep(
         tokens.select(col(idCol), col(posCol), col(tokenCol)))
       try {
         // BOTH directions in one pass over the distinct token-doc set
@@ -505,10 +505,9 @@ object StreamShardLayout {
     // visible in the pack's executed plan (the O(new) claim stays
     // plan-checkable, LayoutSpec pins it). The cache is increment-
     // bounded (O(newly closed shards) in the steady-state poll) and
-    // registered with the operator-intermediate registry, so the
-    // session's between-queries release reclaims it.
+    // belongs to the caller's Lineage scope.
     val toks =
-      if (verifyCoverage) graft.operators.Dedup.tracked(toksRaw)
+      if (verifyCoverage) Lineage.keep(toksRaw)
       else toksRaw
     // (2) exact per-document coverage (opt-out via verifyCoverage —
     // e.g. a poll loop that trusts the appendTokens-time per-batch
@@ -582,10 +581,8 @@ object StreamShardLayout {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val assigned = appendIncrement(batch, layoutRoot, idCol,
-          weightCol, shardWeight, batchId, salt)
-        Lineage.free(assigned)
-        graft.operators.Dedup.releaseIntermediates()
+        Lineage.scope(appendIncrement(batch, layoutRoot, idCol,
+          weightCol, shardWeight, batchId, salt))
       }
       .start()
 
@@ -606,12 +603,12 @@ object StreamShardLayout {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val assigned = appendIncrement(batch, layoutRoot, idCol,
-          weightCol, shardWeight, batchId, salt)
-        appendTokens(tokenize(batch), assigned, layoutRoot, batchId,
-          idCol, posCol, tokenCol)
-        Lineage.free(assigned)
-        graft.operators.Dedup.releaseIntermediates()
+        Lineage.scope {
+          val assigned = appendIncrement(batch, layoutRoot, idCol,
+            weightCol, shardWeight, batchId, salt)
+          appendTokens(tokenize(batch), assigned, layoutRoot, batchId,
+            idCol, posCol, tokenCol)
+        }
       }
       .start()
 
@@ -662,33 +659,34 @@ object StreamShardLayout {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val assigned = appendIncrement(batch, layoutRoot, idCol,
-          weightCol, shardWeight, batchId, salt)
-        appendTokens(tokenize(batch), assigned, layoutRoot, batchId,
-          idCol, posCol, tokenCol)
-        Lineage.free(assigned)
-        val conf = spark.sparkContext.hadoopConfiguration
-        if ((batchId + 1) % pollEvery == 0) {
-          // skip the poll while the layout holds no increments yet
-          // (a leading run of empty batches) — pollLandedShards
-          // refuses an increment-less layout loudly, which is right
-          // for a direct call but routine here
-          val root = new Path(s"$layoutRoot/layout")
-          val fs = root.getFileSystem(conf)
-          if (LakeDir.live(fs, root).nonEmpty)
-            SequenceLake.pollLandedShards(spark, layoutRoot, seqRoot,
-              seqLen, sep, idCol, posCol, tokenCol)
+        Lineage.scope {
+          val assigned = appendIncrement(batch, layoutRoot, idCol,
+            weightCol, shardWeight, batchId, salt)
+          appendTokens(tokenize(batch), assigned, layoutRoot, batchId,
+            idCol, posCol, tokenCol)
+          val conf = spark.sparkContext.hadoopConfiguration
+          if ((batchId + 1) % pollEvery == 0) {
+            // skip the poll while the layout holds no increments yet
+            // (a leading run of empty batches) — pollLandedShards
+            // refuses an increment-less layout loudly, which is right
+            // for a direct call but routine here
+            val root = new Path(s"$layoutRoot/layout")
+            val layoutDirs = LakeDir.live(root.getFileSystem(conf), root)
+            if (layoutDirs.nonEmpty)
+              SequenceLake.pollLive(spark, layoutRoot,
+                layoutDirs, seqRoot, seqLen, sep, idCol, posCol,
+                tokenCol, verifyCoverage = true)
+          }
+          if (compactEvery > 0 &&
+              (batchId + 1) % (pollEvery.toLong * compactEvery) == 0) {
+            compactLayoutIsolated(spark, layoutRoot)
+            // no sequence lake before the first poll that landed shards
+            val seqP = new Path(seqRoot)
+            if (seqP.getFileSystem(conf).exists(seqP))
+              SequenceLake.compactSequenceLake(spark, seqRoot,
+                groupCol = Some("shard"))
+          }
         }
-        if (compactEvery > 0 &&
-            (batchId + 1) % (pollEvery.toLong * compactEvery) == 0) {
-          compactLayoutIsolated(spark, layoutRoot)
-          // no sequence lake before the first poll that landed shards
-          val seqP = new Path(seqRoot)
-          if (seqP.getFileSystem(conf).exists(seqP))
-            SequenceLake.compactSequenceLake(spark, seqRoot,
-              groupCol = Some("shard"))
-        }
-        graft.operators.Dedup.releaseIntermediates()
       }
       .start()
   }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Lineage, Similarity}
 
 /** Scale probe for the distributed per-query MMR (round 15): the
   * thousand-probe audit shape end to end — 1000 query vectors retrieve
@@ -39,7 +39,7 @@ object ProfMmrPerQuery {
     // retrieve: per-query cosine top-100, materialized (tracked) so
     // the diversify wall below measures ONLY the MMR pass
     val cand = timed("retrieve_top100") {
-      val c = Dedup.tracked(
+      val c = Lineage.keep(
         Similarity.cosineTopK(emb, queries, "vec_id", "embedding",
             k = 100)
           .select(col("query_id"), col("neighbor_id").as("vec_id"),

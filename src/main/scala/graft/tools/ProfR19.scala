@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Sampling, Similarity}
+import graft.operators.{Dedup, Lineage, Sampling, Similarity}
 
 /** Round-19 optimization probe: per-step wall seconds of the bench's
   * most expensive queries (q194 stage-3 split, q264, q270, q208), each
@@ -218,7 +218,7 @@ object ProfR19 {
       graft.streaming.StreamLakeIngest.initLake(hist, bench, "text",
         "doc_id", "embedding", lake, p)
       mark("q208.1_initLake")
-      val admitted = Dedup.tracked(
+      val admitted = Lineage.keep(
         graft.streaming.StreamLakeIngest.curateIncrement(inc, lake,
           s"$lake/admitted", "text", "doc_id", "embedding", 0L, p))
       noop(admitted)

@@ -37,7 +37,7 @@ object ProfR19c {
       println(s"== ppjoin inner (rep $rep)")
       val docs = t("documents").where(col("doc_id") >= 10)
       last = System.nanoTime()
-      val shingled = Dedup.tracked(docs.select(col("doc_id").as("id"),
+      val shingled = Lineage.keep(docs.select(col("doc_id").as("id"),
         array_distinct(Dedup.wordShingles(col("text"), 3)).as("sh")))
       shingled.write.mode("overwrite").format("noop").save()
       mark("pp.1_shingled")
@@ -47,7 +47,7 @@ object ProfR19c {
       val dfreq = ex.groupBy("shingle").agg(count(lit(1)).as("df"))
         .where(col("df") >= 2 && col("df") <= docFreqCap)
       val kept = ex.join(dfreq, "shingle")
-      val perDoc = Dedup.tracked(kept
+      val perDoc = Lineage.keep(kept
         .groupBy("id", "n_sh")
         .agg(array_sort(collect_list(struct(col("df"), col("shingle"))))
           .as("ranked")))

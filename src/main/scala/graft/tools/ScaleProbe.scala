@@ -248,7 +248,7 @@ object ScaleProbe {
         val sel = graft.operators.Curation.dsirSelect(survivors, "text",
           "doc_id", isTarget = col("lang") === "en",
           buckets = 1024, k = 200)
-        val selDocs = Dedup.tracked(
+        val selDocs = graft.operators.Lineage.keep(
           survivors.join(sel.select("doc_id"), Seq("doc_id"),
             "left_semi"))
         val m = graft.operators.Tokenizer.bpeMerges(selDocs, "text",

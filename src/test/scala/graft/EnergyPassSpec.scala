@@ -101,6 +101,24 @@ class EnergyPassSpec extends SparkTestBase {
       "plot2dFrame bytes moved")
   }
 
+  test("plot2dFrame runs two actions for three columns and renders the " +
+      "same PNG bytes") {
+    val f = EnergySeries.rangeSeries(spark, 24 * 5, units = Some("kWh"))
+      .toFrame
+    val ef = f.copy(df = f.df
+      .withColumn("twice", col("value") * 2)
+      .withColumn("tail", when(col("value") > 50, lit(200.0) - col("value"))))
+    var png: Array[Byte] = null
+    assert(executionsDuring { png = Render.plot2dFrame(ef) } == 2)
+    val md5 = java.security.MessageDigest.getInstance("MD5").digest(png)
+      .map("%02x".format(_)).mkString
+    assert(md5 == Plot2dFrame3Md5, "plot2dFrame bytes moved")
+  }
+
+  // digest of the three-column render as produced by one step inference
+  // and one pivot per column
+  private val Plot2dFrame3Md5 = "e742ce06909dc394e439cb3f21658a87"
+
   // digests of the renders above as produced by the multi-action
   // version (a distributed sort plus a separate step inference)
   private val Plot2dMd5 = "2615edf7813783044e57797b65767f3a"
