@@ -101,29 +101,21 @@ final case class EnergySeries(
   }
 
   /** Load-duration curve (`energypandas.py:641-644`): sort descending and
-    * replace the time index with rank 0..n-1.
-    *
-    * Scale note: the rank is assigned with zipWithIndex over the
-    * range-partitioned sort output — a cheap per-partition-count job plus
-    * offset arithmetic, no single-partition window. Survives 100 TB; the
-    * sort itself is Spark's distributed range sort. */
+    * replace the time index with rank 0..n-1 — the 0-based projection
+    * of [[graft.operators.Analytics.distributedRank]], which picks the
+    * physical rank from the plan's size estimate (a single-partition
+    * window for a small series, Spark's range sort plus zipWithIndex
+    * above the broadcast threshold). Ties in value break on the index. */
   def ldc: EnergySeries = {
-    val tieBreak = indexCols.map(col(_).asc)
-    val sorted = df.orderBy(v.desc +: tieBreak: _*).select(v)
-    val spark = df.sparkSession
-    val schema = StructType(Seq(
-      StructField("idx", LongType, nullable = false),
-      StructField(valueCol, sorted.schema(valueCol).dataType)))
-    val withRank = spark.createDataFrame(
-      sorted.rdd.zipWithIndex().map { case (row, i) =>
-        org.apache.spark.sql.Row(i, row.get(0))
-      }, schema)
-    copy(df = withRank, indexCols = Seq("idx"), frequency = None)
+    val order = v.desc +: indexCols.map(col(_).asc)
+    val ranked = graft.operators.Analytics.distributedRank(
+      df.select(idx :+ v: _*), order, rankCol = "__rank")
+    copy(df = ranked.select((col("__rank") - 1L).as("idx"), v),
+      indexCols = Seq("idx"), frequency = None)
   }
 
-  /** ldc for small/oracle-checked inputs: same result via a window —
-    * keeps the whole plan in Catalyst (single-partition window, so only
-    * for driver-verification paths). */
+  /** [[ldc]] forced onto the single-partition window whatever the
+    * size estimate — for driver-verification paths. */
   def ldcWindowed: EnergySeries = {
     val tieBreak = indexCols.map(col(_).asc)
     val w = Window.orderBy(v.desc +: tieBreak: _*)
@@ -283,57 +275,103 @@ final case class EnergySeries(
 
   // ------------------------------------------------------------- reshape
 
-  /** Period matrix (tsam `unstackToPeriods` analog, `energypandas.py:503`,
-    * used by plot2d/plot3d/discretize): reshape the series into
-    * (period × slot). When the frequency is regular the (period, slot)
-    * coordinates are pure timestamp arithmetic — no window, no extra
-    * shuffle beyond the pivot's groupBy. */
-  def toPeriodMatrix(periodLength: Int = 24): DataFrame =
-    periodMatrix(periodLength)._1.orderBy("period")
-
-  /** [[toPeriodMatrix]] unsorted, with the step in seconds that its one
-    * first-two-timestamps action inferred — for driver consumers that
-    * collect the (bounded) matrix and sort it themselves, and need the
-    * step too (plot axis labels). With several `valueCols` (columns of
-    * `df` sharing its time index) one pivot aggregates them all: after
-    * `period`, column `1 + slot * valueCols.size + j` holds column j's
-    * value at that slot. */
-  private[graft] def periodMatrix(periodLength: Int,
-      valueCols: Seq[String] = Seq(valueCol)): (DataFrame, Long) = {
-    val (stepped, stepSeconds) = withStep
-    val firsts = valueCols.map(c => first(col(c)))
-    val pm = stepped
+  /** Period matrix (tsam `unstackToPeriods` analog, `energypandas.py:503`):
+    * reshape the series into (period × slot), one row per period with
+    * columns `0 until periodLength`. When the frequency is regular the
+    * (period, slot) coordinates are pure timestamp arithmetic — no
+    * window, no extra shuffle beyond the pivot's groupBy. Consumers that
+    * collect the matrix anyway use [[unstack]]. */
+  def toPeriodMatrix(periodLength: Int = 24): DataFrame = {
+    val (origin, step) = axis
+    df.withColumn("__step", stepIndex(origin, step))
       .groupBy((col("__step") / periodLength).cast(LongType).as("period"))
       .pivot(pmod(col("__step"), lit(periodLength)), 0 until periodLength)
-      .agg(firsts.head, firsts.tail: _*)
-    (pm, stepSeconds)
+      .agg(first(v))
+      .orderBy("period")
   }
 
-  /** step = ordinal position along the (regular) time axis, derived from
-    * timestamp arithmetic against the series start. The first two sorted
-    * timestamps give BOTH the origin and the step — one driver action,
-    * not an infer-freq action plus a min(ts) aggregate. */
-  private[graft] def withStepColumn: DataFrame = withStep._1
+  /** [[toPeriodMatrix]] built on the driver from ONE collect of
+    * `(ts, valueCols…)` — for consumers that collect the (bounded)
+    * matrix anyway (plots, the local cluster fit), where the pivot would
+    * be a shuffle whose output is collected on the next line. Same
+    * semantics as the pivot: origin and step from the first two
+    * ascending timestamps, `__step` = ((unix_timestamp(ts) − origin) /
+    * step) cast to long, `period` = (`__step` / periodLength) cast to
+    * long, `slot` = pmod(`__step`, periodLength), each cell the first
+    * value (null included) of its (period, slot), periods ascending.
+    * `cells(j)(p)(s)` is column j's value in the p-th period at slot s.
+    * With `maxRows` the collect is a `limit(maxRows + 1)` and a series
+    * longer than that gives None. */
+  private[graft] def unstack(periodLength: Int,
+      valueCols: Seq[String] = Seq(valueCol),
+      maxRows: Option[Int] = None): Option[EnergySeries.Unstacked] = {
+    val ts = indexCols.head
+    val picked = df.select(col(ts) +: valueCols.map(c => col(c).cast(DoubleType)): _*)
+    val rows = maxRows.fold(picked.collect())(m => picked.limit(m + 1).collect())
+    if (maxRows.exists(rows.length > _)) None
+    else {
+      // the first two ascending timestamps, as orderBy(ts).limit(2) sees them
+      val first2 = rows.foldLeft(List.empty[java.sql.Timestamp]) { (acc, r) =>
+        (r.getTimestamp(0) :: acc).sorted(EnergySeries.NullsFirst).take(2)
+      }
+      val (origin, step) = originAndStep(ts, first2)
+      require(step > 0,
+        s"the first two timestamps of '$ts' are equal; no step to infer")
+      val n = valueCols.size
+      // per period: slot-major cells, null = no row seen yet (first wins)
+      val byPeriod = scala.collection.mutable.LongMap.empty[Array[Option[Double]]]
+      rows.foreach { r =>
+        val unix = Math.floorDiv(r.getTimestamp(0).getTime, 1000L)
+        val s = ((unix - origin).toDouble / step).toLong
+        val slot = Math.floorMod(s, periodLength.toLong).toInt
+        val cells = byPeriod.getOrElseUpdate((s.toDouble / periodLength).toLong,
+          new Array[Option[Double]](periodLength * n))
+        var j = 0
+        while (j < n) {
+          val i = slot * n + j
+          if (cells(i) == null)
+            cells(i) = if (r.isNullAt(j + 1)) None else Some(r.getDouble(j + 1))
+          j += 1
+        }
+      }
+      val periods = byPeriod.keys.toArray.sorted
+      val cells = valueCols.indices.map(j => periods.map { p =>
+        val c = byPeriod(p)
+        Array.tabulate(periodLength)(slot => Option(c(slot * n + j)).flatten)
+      })
+      Some(EnergySeries.Unstacked(origin, step, periods, cells))
+    }
+  }
 
-  private def withStep: (DataFrame, Long) = {
-    val ts = idx.head
-    val first2 = df.select(ts).orderBy(ts.asc).limit(2)
-      .collect().map(_.getTimestamp(0).getTime / 1000)
+  /** The ordinal position along the (regular) time axis: `__step` =
+    * ((unix_timestamp(ts) − origin) / step) cast to long. */
+  private[graft] def stepIndex(origin: Long, step: Long): Column =
+    ((unix_timestamp(idx.head) - lit(origin)) / lit(step)).cast(LongType)
+
+  /** (origin, step) in epoch seconds from the first two ascending
+    * timestamps — one driver action, not an infer-freq action plus a
+    * min(ts) aggregate. */
+  private[graft] def axis: (Long, Long) = {
+    val ts = indexCols.head
+    originAndStep(ts, df.select(col(ts)).orderBy(col(ts).asc).limit(2)
+      .collect().map(_.getTimestamp(0)).toList)
+  }
+
+  /** Ascending order puts nulls first, so a null timestamp anywhere in
+    * the series shows up among the first two: raise instead of
+    * dereferencing it. */
+  private def originAndStep(ts: String, first2: List[java.sql.Timestamp])
+      : (Long, Long) = {
+    if (first2.contains(null)) throw new IllegalArgumentException(
+      s"column '$ts' holds a null timestamp; the step cannot be inferred")
     require(first2.length >= 2, "need at least 2 rows to infer frequency")
-    val stepSeconds = first2(1) - first2(0)
-    (df.withColumn("__step",
-      ((unix_timestamp(ts) - lit(first2(0))) / lit(stepSeconds))
-        .cast(LongType)), stepSeconds)
+    val origin = first2.head.getTime / 1000
+    (origin, first2(1).getTime / 1000 - origin)
   }
 
   /** Infer the sampling period from the first timestamps
-    * (`energypandas.py:752-756`) — driver-side, 3-row action. */
-  def inferStepSeconds: Long = {
-    val firstTs = df.select(idx.head).orderBy(idx.head.asc).limit(3)
-      .collect().map(_.getTimestamp(0).getTime / 1000)
-    require(firstTs.length >= 2, "need at least 2 rows to infer frequency")
-    firstTs(1) - firstTs(0)
-  }
+    * (`energypandas.py:752-756`) — driver-side, 2-row action. */
+  def inferStepSeconds: Long = axis._2
 
   /** Positional row slice [start, start+len) in index order — the `iloc`
     * analog (SURVEY §2.2 P2). Declarative sort + OFFSET/LIMIT: Catalyst
@@ -362,6 +400,17 @@ final case class EnergySeries(
 }
 
 object EnergySeries {
+
+  /** A series unstacked on the driver ([[EnergySeries.unstack]]): the
+    * time axis' origin and step in epoch seconds, the periods in
+    * ascending order, and per value column a periods × slots matrix
+    * (None = null or no row). */
+  private[graft] final case class Unstacked(origin: Long, step: Long,
+      periods: Array[Long], cells: Seq[Array[Array[Option[Double]]]])
+
+  /** Spark's ascending timestamp order: nulls first. */
+  private val NullsFirst: Ordering[java.sql.Timestamp] =
+    Ordering.fromLessThan((a, b) => b != null && (a == null || a.before(b)))
 
   /** Hourly (or any fixed-step) time index starting Jan 1 of `baseYear` —
     * `with_timeindex` (`energypandas.py:175-229`). Generated distributed

@@ -204,22 +204,36 @@ object Analytics {
           round(col("__avg_gap") / lit(1000000.0), 6).as("avg_gap_sec")): _*)
   }
 
-  /** Global 1-based rank without a single-partition window: sort
-    * distributed (Spark's range sort), then zipWithIndex — one extra
-    * per-partition-count job plus offset arithmetic, the same pattern as
-    * `EnergySeries.ldc`. Ranks a 100 M-row table without funnelling it
-    * through one task. The caller's `orderCols` must be a total order
-    * (include a tie-break) or the rank is partition-layout-dependent. */
+  /** Global 1-based rank — the one rank primitive of the engine. The
+    * physical plan follows the optimizer's size estimate of `df`:
+    *  - at or below `spark.sql.autoBroadcastJoinThreshold` (the
+    *    session's own bound for "fits one task") a single-partition
+    *    `row_number` window: one exchange, no RDD round trip, and its
+    *    single-partition output lets a caller's sort on the rank run
+    *    without another exchange;
+    *  - above it, or with broadcasts disabled, Spark's distributed range
+    *    sort plus zipWithIndex: one extra per-partition-count job plus
+    *    offset arithmetic, so a 100 M-row table never funnels through
+    *    one task. A plan over an RDD has no estimate and takes this path.
+    * The caller's `orderCols` must be a total order (include a
+    * tie-break) or the rank is layout-dependent on either path. */
   def distributedRank(df: DataFrame, orderCols: Seq[Column],
       rankCol: String = "rank"): DataFrame = {
-    val sorted = df.orderBy(orderCols: _*)
-    val schema = StructType(
-      StructField(rankCol, LongType, nullable = false) +:
-        sorted.schema.fields)
-    df.sparkSession.createDataFrame(
-      sorted.rdd.zipWithIndex().map { case (row, i) =>
-        org.apache.spark.sql.Row.fromSeq((i + 1L) +: row.toSeq)
-      }, schema)
+    val fitsOneTask = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    if (fitsOneTask)
+      df.select(row_number().over(Window.orderBy(orderCols: _*))
+        .cast(LongType).as(rankCol), col("*"))
+    else {
+      val sorted = df.orderBy(orderCols: _*)
+      val schema = StructType(
+        StructField(rankCol, LongType, nullable = false) +:
+          sorted.schema.fields)
+      df.sparkSession.createDataFrame(
+        sorted.rdd.zipWithIndex().map { case (row, i) =>
+          org.apache.spark.sql.Row.fromSeq((i + 1L) +: row.toSeq)
+        }, schema)
+    }
   }
 
   /** Corpus Zipf fit: OLS slope of ln(frequency) on ln(rank) over the

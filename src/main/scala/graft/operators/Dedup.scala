@@ -757,8 +757,9 @@ object Dedup {
     * kernel. The complementary blocking strategy to
     * [[editDistancePairs]]'s anchor equality — near-dups whose keys sort
     * adjacently are caught even when no exact prefix/band matches. Rank
-    * comes from `Analytics.distributedRank` (distributed sort +
-    * zipWithIndex, no single-partition window); the rank-window self-join
+    * comes from `Analytics.distributedRank` (a single-partition window
+    * for a corpus below the broadcast threshold, the distributed sort +
+    * zipWithIndex above it); the rank-window self-join
     * runs as an equi-join on ⌊rank/window⌋ buckets (each left row probes
     * its own and the next bucket — every |Δrank| < window pair falls in
     * one of the two), so the plan is two shuffles and no cartesian. */

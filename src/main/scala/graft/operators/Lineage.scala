@@ -94,9 +94,13 @@ object Lineage {
   }
 
   /** Cache `df` (`MEMORY_AND_DISK`, filled lazily by its first
-    * consumer) for the lifetime of the current scope. */
+    * consumer) for the lifetime of the current scope. A plan that is
+    * cached already — by the caller, or by a frame kept earlier — is
+    * returned as it is and not registered: `Dataset.unpersist` matches
+    * by plan, so releasing it here would drop its owner's cache. */
   def keep(df: DataFrame): DataFrame =
-    register(df.persist(StorageLevel.MEMORY_AND_DISK))
+    if (df.storageLevel != StorageLevel.NONE) df
+    else register(df.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Release one SUPERSEDED frame before its scope ends (the iterative
     * loops' previous round) and drop it from the current scope. Only

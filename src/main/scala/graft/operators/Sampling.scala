@@ -154,8 +154,8 @@ object Sampling {
     * offsets broadcast back, and the second pass emits cumulative
     * weights partition-locally. The sorted frame persists between the
     * two passes (kept — released with the caller's scope), so the
-    * sort runs once. Same RDD discipline as
-    * [[Analytics.distributedRank]] / `EnergySeries.ldc`.
+    * sort runs once. Same count-plus-offset discipline as the RDD rank
+    * of [[Analytics.distributedRank]].
     */
   def shardAssign(df: DataFrame, idCol: String, weightCol: String,
       shardWeight: Long, salt: String = "graft",
@@ -723,7 +723,9 @@ object Sampling {
     * across shard boundaries, so a distributed loader still reads
     * whole shards sequentially. `shard_rank` ranks the DISTINCT shard
     * set ([[Analytics.distributedRank]]: one narrow row per shard,
-    * never the data, no single-partition window); `seq_rank` is one
+    * never the data — a single-partition window while that set is
+    * below the broadcast threshold, the range-sort rank above it);
+    * `seq_rank` is one
     * shard-keyed window over shard-BOUNDED partitions. The schedule
     * is a pure function of (shard, seq, epoch, salt) — same epoch ⇒
     * same order on any cluster and in any engine that can md5, which

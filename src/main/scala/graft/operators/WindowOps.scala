@@ -113,8 +113,8 @@ object WindowOps {
     *     and a driver-side prefix sum over the (partition × key) count
     *     matrix (bounded by parts × |keys|, the operator's premise)
     *     supplies each partition's starting offset, broadcast back.
-    *     The same count-plus-offset idiom as the load-duration curve,
-    *     expressed with windows instead of zipWithIndex.
+    *     The same count-plus-offset idiom as the RDD rank of
+    *     [[Analytics.distributedRank]], expressed with windows.
     *  2. bucket rows by `ordinal DIV bucketRows` and REPLICATE each
     *     bucket's last `n` rows into the next bucket as context, so
     *     every trailing `ROWS n PRECEDING` frame is complete inside
@@ -226,28 +226,17 @@ object WindowOps {
   }
 
   /** Equal-frequency (quantile) binning: every bin gets n/k consecutive
-    * rows of the value order. The global ascending rank is assigned with
-    * zipWithIndex over the range-partitioned sort output (per-partition
-    * counts + offset arithmetic — no single-partition window, same idiom
-    * as the load-duration curve), then `bin = rank·k / n` in exact long
-    * arithmetic. Two jobs (count + sort) and one shuffle each; survives
-    * any n. Ties must be broken unique by `tieCols` for determinism. */
+    * rows of the value order. The global ascending rank comes from
+    * [[Analytics.distributedRank]], then `bin = (rank−1)·k / n` in exact
+    * long arithmetic. Ties must be broken unique by `tieCols` for
+    * determinism. */
   def equalFrequencyBins(df: DataFrame, valueCol: String,
       tieCols: Seq[String], k: Int): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = df.sparkSession
     val n = df.count()
-    val sorted = df
-      .orderBy(col(valueCol).asc +: tieCols.map(col(_).asc): _*)
-      .select(col(valueCol))
-    val schema = StructType(Seq(
-      StructField("bin", LongType, nullable = false),
-      StructField(valueCol, sorted.schema(valueCol).dataType)))
-    val binned = spark.createDataFrame(
-      sorted.rdd.zipWithIndex().map { case (row, i) =>
-        org.apache.spark.sql.Row(i * k / n, row.get(0))
-      }, schema)
-    binned.groupBy(col("bin"))
+    val ranked = Analytics.distributedRank(
+      df.select((valueCol +: tieCols).map(col): _*),
+      col(valueCol).asc +: tieCols.map(col(_).asc), rankCol = "__rank")
+    ranked.groupBy(expr(s"(__rank - 1) * ${k}L div ${n}L").as("bin"))
       .agg(count(lit(1)).as("n_rows"),
         min(col(valueCol)).as("bin_min"), max(col(valueCol)).as("bin_max"),
         DetAgg.detSum(col(valueCol)).as("bin_sum"))

@@ -16,14 +16,18 @@ import graft.core.{EnergyFrame, EnergySeries}
   * `java.awt.image.BufferedImage` + `ImageIO` — headless, zero
   * dependencies beyond the JDK.
   *
-  * Division of labor at scale: everything DATA-side is the existing
-  * distributed matrix layer ([[EnergySeries.toPeriodMatrix]] — the tsam
-  * `unstackToPeriods` analog, one pivot aggregate), which reduces any
-  * input to a periods × periodLength matrix. Rendering collects THAT
-  * matrix — already aggregation-bounded (a year of hours is 365 × 24
-  * doubles) — so the driver action is plot-sized, never corpus-sized;
-  * a loud `require` enforces the bound. This mirrors the reference,
-  * where matplotlib receives the stacked matrix, not the raw series.
+  * Division of labor at scale: the plot is plot-sized by contract —
+  * a year of hours is 365 × 24 cells, and a loud `require` bounds every
+  * renderer at `MaxCells`. The series is collected ONCE as `(ts,
+  * values…)` and unstacked into the periods × periodLength matrix on
+  * the driver ([[EnergySeries.unstack]], the tsam `unstackToPeriods`
+  * analog with [[EnergySeries.toPeriodMatrix]]'s pivot semantics): the
+  * collect holds as many values as the matrix does, so a distributed
+  * pivot would only add a shuffle in front of the same collect. Inputs
+  * beyond plot size are aggregated first (`resample`, `monthly`,
+  * [[plot3dBy]]'s day × hour aggregate) — the distributed part. This
+  * mirrors the reference, where matplotlib receives the stacked matrix,
+  * not the raw series.
   *
   * Deviations from matplotlib (documented, deterministic): the RdBu
   * ramp interpolates the 11 ColorBrewer RdBu anchor colors (the same
@@ -302,15 +306,15 @@ object Render {
     out.toByteArray
   }
 
-  /** Series `plot2d`: unstack to the period matrix (distributed pivot),
-    * collect the plot-sized result, render. Mirrors
+  /** Series `plot2d`: unstack to the period matrix on the driver,
+    * render. Mirrors
     * `energypandas.py:679-800` (title defaults to the series name,
     * colorbar labeled with the units, axis tick numbers + the
     * RESOLUTION_NAME xlabel/ylabel drawn unless `axisOff` — the
     * reference's `axis_off=False` default at `:685`; explicit
     * `xlabel`/`ylabel` override the derived defaults as in the
     * reference). The labels take the step that the unstack already
-    * inferred, so the whole plot runs two Spark actions. */
+    * inferred, so the whole plot runs one Spark action. */
   def plot2d(es: EnergySeries, periodLength: Int = 24,
       vmin: Option[Double] = None, vmax: Option[Double] = None,
       vcenter: Option[Double] = None, cellW: Int = 8, cellH: Int = 8,
@@ -341,7 +345,7 @@ object Render {
       colorbar: Boolean = true, axisOff: Boolean = false): Array[Byte] = {
     val cols = ef.valueCols
     require(cols.nonEmpty, "frame has no value columns")
-    // one step inference and one pivot for every column
+    // one collect for every column
     val (mats, stepSeconds) = collectMatrices(
       ef(cols.head).copy(df = ef.df), periodLength, cols)
     val nS = mats.map(_.map(_.length).max).max
@@ -628,7 +632,7 @@ object Render {
     out.toByteArray
   }
 
-  /** Series `plot3d`: distributed unstack → render of the plot-sized
+  /** Series `plot3d`: driver-side unstack → render of the plot-sized
     * matrix, dispatching on `kind` exactly like the reference
     * (`energypandas.py:483-560`): "polygon" (default) → ridge stack,
     * "surface" → hillshaded relief, "contour" → level bands; anything
@@ -710,24 +714,15 @@ object Render {
       Some(p)
     }
 
-  /** Distributed unstack → driver collect of the plot-sized matrix of
-    * each of `cols` (value columns of `es.df`; by default just
-    * `es.valueCol`) from ONE pivot, with the step seconds the unstack
-    * inferred. The rows sort by period on the driver (nulls first, as
-    * `orderBy` would): the collect is plot-bounded, and a distributed
-    * sort would add a range-sampling job. */
+  /** The plot-sized matrix of each of `cols` (value columns of
+    * `es.df`; by default just `es.valueCol`) and the step seconds of the
+    * time axis, unstacked on the driver from ONE collect of
+    * `(ts, cols…)` ([[EnergySeries.unstack]]). */
   private def collectMatrices(es: EnergySeries, periodLength: Int,
       cols: Seq[String] = Nil): (Seq[Array[Array[Option[Double]]]], Long) = {
     val valueCols = if (cols.isEmpty) Seq(es.valueCol) else cols
-    val (pm, stepSeconds) = es.periodMatrix(periodLength, valueCols)
-    val rows = pm.collect()
-      .sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-    val n = valueCols.size
-    (valueCols.indices.map(j => rows.map { r =>
-      (0 until (r.length - 1) / n).map { slot =>
-        val i = 1 + slot * n + j
-        if (r.isNullAt(i)) None else Some(r.getDouble(i))
-      }.toArray
-    }), stepSeconds)
+    // unbounded, so always Some: the cell bound is each renderer's require
+    val u = es.unstack(periodLength, valueCols).get
+    (u.cells, u.step)
   }
 }

@@ -106,6 +106,28 @@ class LineageSpec extends SparkTestBase {
     assert(!held(kept) && !held(jobCut))
   }
 
+  test("keep leaves a caller's own cache to the caller: a cached series " +
+      "passed through discretize in a scope is still cached after it") {
+    val es = graft.core.EnergySeries.rangeSeries(spark, 24 * 4 + 5)
+    val cached = es.copy(df = es.df.cache())
+    try {
+      assert(cached.df.count() == 24 * 4 + 5)
+      Lineage.scope {
+        assert(graft.operators.Discretize.discretize(cached, 2).df.count() ==
+          24 * 4 + 5)
+      }
+      assert(held(cached.df), "the scope dropped the caller's cache")
+      // a frame kept twice is released once, by the scope that took it
+      var kept: DataFrame = null
+      Lineage.scope {
+        kept = Lineage.keep(spark.range(0, 31).toDF("x"))
+        Lineage.scope(Lineage.keep(spark.range(0, 31).toDF("x")).count())
+        assert(held(kept))
+      }
+      assert(!held(kept))
+    } finally cached.df.unpersist()
+  }
+
   test("materialization has one owner: no persist, cache or checkpoint " +
       "outside Lineage, and no root release in graft.streaming") {
     val materialize =

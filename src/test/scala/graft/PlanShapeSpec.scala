@@ -96,16 +96,34 @@ class PlanShapeSpec extends SparkTestBase {
       s"the doc-summary window must partition by the group:\n$p")
   }
 
-  test("consumeEpoch never creates a single-partition stage: the " +
-      "schedule's window partitions by shard, the shard-rank side " +
-      "never touches the data") {
+  test("consumeEpoch keeps the data off one partition; its window " +
+      "partitions by shard") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
     val seqs = spark.range(200).select(
       (col("id") / 10).cast("long").as("shard"),
       pmod(col("id"), lit(10)).cast("long").as("seq"))
-    val p = plan(graft.operators.Sampling.consumeEpoch(seqs, 1L,
-      Some(graft.operators.Sampling.LoaderCursor(1L, 2L, 3L))))
-    assert(!p.contains("SinglePartition"),
-      s"no global single-partition stage in the consumed stream:\n$p")
+    val consumed = graft.operators.Sampling.consumeEpoch(seqs, 1L,
+      Some(graft.operators.Sampling.LoaderCursor(1L, 2L, 3L)))
+    val p = plan(consumed)
+    // the shard-rank side ranks the distinct shard set, one narrow row
+    // per shard, and reaches the data only as a broadcast; below the
+    // broadcast threshold that rank is a single-partition window
+    def dataSide(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => dataSide(a.executedPlan)
+      case _: BroadcastExchangeExec => Nil
+      case other => other +: other.children.flatMap(dataSide)
+    }
+    val funnels = dataSide(consumed.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+    }
+    assert(funnels.isEmpty,
+      s"no single-partition stage on the data side of the stream:\n$p")
+    assert(p.contains("BroadcastExchange"),
+      s"the shard ranks must reach the data as a broadcast:\n$p")
     assert(p.contains("hashpartitioning(shard"),
       s"the intra-shard window must partition by shard:\n$p")
   }
