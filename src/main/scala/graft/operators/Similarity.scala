@@ -765,7 +765,7 @@ object Similarity {
     * (doc, assigned cell) carrying (vector, norm[, keep-priority]) —
     * the shared front of [[semDedup]]/[[semDedupCross]] and the
     * artifact write/read paths. */
-  private def semAssign(df: DataFrame, idCol: String, vecCol: String,
+  private[graft] def semAssign(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], keepFarthest: Boolean, nassign: Int,
       withOk: Boolean): DataFrame = {
     val sortedCells = sortedCellStructs(col("v"), centroids)
@@ -837,11 +837,12 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/keepers")
   }
 
-  /** Load the fitted codebook back (bounded: nlist rows). */
+  /** Load the fitted codebook back (bounded: nlist rows, sorted on the
+    * driver — a Spark sort would cost a range-sample job). */
   def readSemCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Seq[Double]] =
-    LakeRead.parquet(spark, s"$path/codebook").orderBy(col("cell"))
-      .collect().map(_.getSeq[Double](1).toSeq).toSeq
+    LakeRead.parquet(spark, s"$path/codebook").collect()
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toSeq).toSeq
 
   /** Job 3 of the incremental SemDeDup contract: fold an increment's
     * SURVIVORS into the keeper table, so the next increment dedups
@@ -850,25 +851,21 @@ object Similarity {
     * build→dedup→append cycle for the embedding column. The codebook
     * is read back from the lake itself (geometry is fixed at write
     * time — the contract), only the survivors pay an assignment pass,
-    * and the lake's vectors are never re-assigned or re-ranked from
-    * the corpus: the merge works entirely on the CAPPED keeper table.
+    * and the lake's vectors are never re-assigned from the corpus.
     *
     * Unlike the hash and signature lakes, keepers cannot be blind-
     * appended: `keeperCap` ranks by the GLOBAL priority key (distance
     * to centroid, id), so a high-priority survivor must displace a
     * stored keeper beyond the cap, not queue behind it. The fold-in is
-    * therefore a rank-merge REWRITE: union the stored keepers with the
-    * survivors' cap-candidate rows, re-rank per cell by `kok`, keep
-    * the top `keeperCap`, and overwrite the table. That preserves the
-    * build invariant — append(write(A), survivors(B)) produces exactly
-    * the keeper table write(A ∪ survivors(B)) would under the same
-    * codebook (spec-pinned) — and it stays O(keeper table), which the
-    * cap bounds at nlist × keeperCap rows regardless of corpus size
-    * (the rewrite never scales with the lake's documents, only with
-    * its cells). `dropDuplicates(cell, keeper)` makes re-appends
-    * idempotent (a duplicate row must not burn a cap slot). The merged
-    * table is materialized eagerly ([[graft.operators.Lineage.cut]])
-    * before the overwrite — its plan reads the path it replaces.
+    * therefore the capped rank-merge of [[mergeKeepers]] followed by an
+    * overwrite of the table. That preserves the build invariant —
+    * append(write(A), survivors(B)) produces exactly the keeper table
+    * write(A ∪ survivors(B)) would under the same codebook (spec-pinned)
+    * — and it stays O(keeper table), which the cap bounds at nlist ×
+    * keeperCap rows regardless of corpus size. Re-appends are
+    * idempotent: a key already stored keeps its stored row. The merged
+    * table is cut ([[graft.operators.Lineage.cut]]) before the
+    * overwrite — its plan reads the path it replaces.
     * CALLERS carry the same duty: any still-lazy frame whose plan
     * reads the keeper table (the increment's removal set, survivors
     * derived from it) must be materialized BEFORE this call — the
@@ -882,14 +879,10 @@ object Similarity {
     val spark = survivors.sparkSession
     val centroids = readSemCodebook(spark, path)
     val stored = LakeRead.parquet(spark, s"$path/keepers")
-    require(stored.columns.toSet == Set("cell", "keeper", "kv", "kn",
-      "kok"), "keepers must be a writeSemDedupArtifacts table; got " +
-      stored.columns.mkString(","))
-    val incoming = semAssign(survivors, idCol, vecCol, centroids,
-        keepFarthest, nassign, withOk = true)
-      .select(col("cell"), col("id").as("keeper"), col("v").as("kv"),
-        col("n").as("kn"), col("ok").as("kok"))
-    overwriteMergedKeepers(stored, incoming, keeperCap,
+    requireKeeperTable(stored)
+    val incoming = keeperRows(semAssign(survivors, idCol, vecCol,
+      centroids, keepFarthest, nassign, withOk = true))
+    overwriteKeepers(mergeKeepers(stored, incoming, keeperCap),
       s"$path/keepers")
   }
 
@@ -911,30 +904,29 @@ object Similarity {
     val spark = newDf.sparkSession
     val centroids = readSemCodebook(spark, path)
     val stored = LakeRead.parquet(spark, s"$path/keepers")
-    val (survivors, fold) = semDedupLakeStepDeferred(newDf, idCol,
-      vecCol, centroids, stored, s"$path/keepers", threshold,
-      keepFarthest, keeperCap, nassign)
-    fold()
+    val (survivors, merged) = semDedupLakeStepDeferred(newDf, idCol,
+      vecCol, centroids, stored, threshold, keepFarthest, keeperCap,
+      nassign)
+    overwriteKeepers(merged, s"$path/keepers")
     survivors
   }
 
-  /** The fused semantic step against an EXPLICIT stored-keeper frame
-    * and an EXPLICIT output snapshot directory, with the keeper-snapshot
-    * rewrite returned as a deferred thunk — the micro-batch form used
-    * by [[graft.streaming.StreamLakeIngest]]: because the keeper table
-    * is a capped rank-merge REWRITE (not an append), the streaming
-    * layout versions it as one snapshot per micro-batch; the caller
+  /** The fused semantic step against an EXPLICIT stored-keeper frame,
+    * returning the survivors (cut) and the merged keeper table
+    * ([[mergeKeepers]]) as a lazy frame for the caller to write — the
+    * micro-batch form used by
+    * [[graft.streaming.StreamLakeIngest]]: the streaming layout versions
+    * the keeper table as one snapshot per micro-batch, so the caller
     * passes the latest snapshot OLDER than the current batch as
-    * `stored` and the batch's own snapshot directory as `outDir`, so a
-    * replay recomputes from the same visible state and rewrites its
-    * own snapshot (exactly-once without a transaction log; the
-    * snapshot is O(nlist × keeperCap) regardless of corpus size, so a
-    * per-batch rewrite never scales with the lake). The thunk's merge
-    * plan reads `stored` and the survivors' cut blocks, so it must
-    * complete before the caller frees the survivors or rewrites
-    * `stored`'s directory; the in-place batch form
-    * [[semDedupLakeStep]] (read keepers, same keepers dir) therefore
-    * runs it at once.
+    * `stored` and writes the merged frame straight to the batch's own
+    * snapshot directory — its plan reads `stored` and this batch's
+    * frames, never the path it writes. A replay recomputes from the
+    * same visible state and rewrites its own snapshot (exactly-once
+    * without a transaction log; the snapshot is O(nlist × keeperCap)
+    * regardless of corpus size). The merged plan reads the survivors'
+    * cut blocks, so its write must complete before the caller frees
+    * them; the in-place batch form [[semDedupLakeStep]] (read keepers,
+    * same keepers dir) cuts it before the overwrite.
     *
     * `dedupWithinIncrement` additionally removes WITHIN-increment
     * near-dups (larger id of every same-cell pair at `threshold`
@@ -944,13 +936,10 @@ object Similarity {
     * .minhashLshLakeStepDeferred]] for the rationale. */
   private[graft] def semDedupLakeStepDeferred(newDf: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[Seq[Double]],
-      stored: DataFrame, outDir: String, threshold: Double,
-      keepFarthest: Boolean = true, keeperCap: Int = 1000,
-      nassign: Int = 1, dedupWithinIncrement: Boolean = false)
-      : (DataFrame, () => Unit) = {
-    require(stored.columns.toSet == Set("cell", "keeper", "kv", "kn",
-      "kok"), "keepers must be a writeSemDedupArtifacts table; got " +
-      stored.columns.mkString(","))
+      stored: DataFrame, threshold: Double, keepFarthest: Boolean = true,
+      keeperCap: Int = 1000, nassign: Int = 1,
+      dedupWithinIncrement: Boolean = false): (DataFrame, DataFrame) = {
+    requireKeeperTable(stored)
     val assigned = Lineage.keep(semAssign(newDf, idCol, vecCol,
       centroids, keepFarthest, nassign, withOk = true))
     val crossRemoved = semCrossTail(assigned.drop("ok"), stored,
@@ -969,27 +958,65 @@ object Similarity {
     val survivors = graft.operators.Lineage.cut(
       newDf.join(removed.select(col("id").as(idCol)), Seq(idCol),
         "left_anti"))
-    val incoming = assigned
-      .join(survivors.select(col(idCol).as("id")), Seq("id"),
-        "left_semi")
-      .select(col("cell"), col("id").as("keeper"), col("v").as("kv"),
-        col("n").as("kn"), col("ok").as("kok"))
-    (survivors,
-      () => overwriteMergedKeepers(stored, incoming, keeperCap, outDir))
+    // the survivor ids reach the assigned rows as a broadcast, so no
+    // exchange carries `v` into the merge
+    val incoming = keeperRows(assigned.join(
+      broadcast(survivors.select(col(idCol).as("id"))), Seq("id"),
+      "left_semi"))
+    (survivors, mergeKeepers(stored, incoming, keeperCap))
   }
 
-  /** Shared fold-in tail: rank-merge incoming keeper-candidate rows
-    * against the stored table under `keeperCap`, materialize eagerly
-    * (the plan reads the table being replaced), overwrite, free. */
-  private def overwriteMergedKeepers(stored: DataFrame,
-      incoming: DataFrame, keeperCap: Int, outDir: String): Unit = {
-    val w = Window.partitionBy("cell").orderBy(col("kok").asc)
-    val merged = stored.unionByName(incoming)
-      .dropDuplicates("cell", "keeper")
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= keeperCap).drop("rk")
+  private def requireKeeperTable(stored: DataFrame): Unit =
+    require(stored.columns.toSet == Set("cell", "keeper", "kv", "kn",
+      "kok"), "keepers must be a writeSemDedupArtifacts table; got " +
+      stored.columns.mkString(","))
+
+  /** Assigned rows (with `ok`) as keeper-table rows. */
+  private[graft] def keeperRows(assigned: DataFrame): DataFrame =
+    assigned.select(col("cell"), col("id").as("keeper"),
+      col("v").as("kv"), col("n").as("kn"), col("ok").as("kok"))
+
+  /** The capped rank-merge of incoming keeper-candidate rows into a
+    * stored keeper table, planned so that no exchange carries a vector.
+    * It relies on the stored table's invariant — only
+    * [[writeSemDedupArtifacts]] and this fold write it, so it is unique
+    * on (cell, keeper) and holds at most `keeperCap` rows per cell:
+    *  - `fresh` is the incoming rows whose (cell, keeper) is not stored,
+    *    one row per key: a stored key keeps its stored row
+    *    (DEVIATIONS #26). The key set reaches the incoming rows as a
+    *    broadcast, and the increment-sized remainder dedups in one
+    *    partition;
+    *  - a cell's cutoff is the `keeperCap`-th smallest `kok` of stored ∪
+    *    fresh, ranked over a (cell, kok) projection — the one exchange;
+    *  - a row lands iff its cell has no cutoff or `kok ≤ cutoff`. `kok` =
+    *    (o1, keeper) totally orders a cell, so this is exactly
+    *    `row_number() ≤ keeperCap` over stored ∪ fresh.
+    * The result keeps the stored scan's partition count (a narrow
+    * coalesce), so the table's file count does not grow fold by fold. */
+  private[graft] def mergeKeepers(stored: DataFrame, incoming: DataFrame,
+      keeperCap: Int): DataFrame = {
+    val fresh = incoming
+      .join(broadcast(stored.select("cell", "keeper")),
+        Seq("cell", "keeper"), "left_anti")
+      .coalesce(1).dropDuplicates("cell", "keeper")
+    val cutoffs = stored.select("cell", "kok")
+      .unionByName(fresh.select("cell", "kok"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("cell").orderBy(col("kok").asc)))
+      .where(col("rk") === keeperCap)
+      .select(col("cell"), col("kok").as("cutoff"))
+    stored.unionByName(fresh)
+      .join(broadcast(cutoffs), Seq("cell"), "left")
+      .where(col("cutoff").isNull || col("kok") <= col("cutoff"))
+      .drop("cutoff")
+      .coalesce(math.max(1, stored.rdd.getNumPartitions))
+  }
+
+  /** In-place fold-in tail: the merged plan reads the table it
+    * replaces, so cut it, overwrite, free. */
+  private def overwriteKeepers(merged: DataFrame, path: String): Unit = {
     val cut = graft.operators.Lineage.cut(merged)
-    cut.write.mode("overwrite").parquet(outDir)
+    cut.write.mode("overwrite").parquet(path)
     graft.operators.Lineage.free(cut)
   }
 
@@ -1005,9 +1032,7 @@ object Similarity {
   def semDedupCrossFromArtifacts(newDf: DataFrame, keepers: DataFrame,
       centroids: Seq[Seq[Double]], idCol: String, vecCol: String,
       threshold: Double, nassign: Int = 1): DataFrame = {
-    require(keepers.columns.toSet == Set("cell", "keeper", "kv", "kn",
-      "kok"), "keepers must be a writeSemDedupArtifacts table; got " +
-      keepers.columns.mkString(","))
+    requireKeeperTable(keepers)
     semCrossTail(semAssign(newDf, idCol, vecCol, centroids,
       keepFarthest = true, nassign = nassign, withOk = false),
       keepers, threshold)

@@ -38,10 +38,14 @@ import graft.operators.{Curation, Dedup, DriverPool, LakeRead, Lineage,
   *   sem/keepers_b<id>/     ... versioned snapshot per micro-batch
   * }}}
   * The hash/signature lakes grow by O(increment) subdirs; the keeper
-  * table is a capped rank-merge REWRITE (O(nlist × keeperCap) rows,
-  * corpus-independent), so it is versioned whole — one snapshot per
-  * batch, superseded snapshots pruned as soon as no replay can read
-  * them.
+  * table is capped per cell (O(nlist × keeperCap) rows,
+  * corpus-independent), so a batch's fold can displace stored keepers
+  * and the table is versioned whole — one snapshot per batch, written
+  * by a narrow rank-merge of the previous snapshot with the batch's
+  * survivors ([[graft.operators.Similarity.mergeKeepers]]: only keys
+  * and priorities cross an exchange, the file count stays the
+  * previous snapshot's), superseded snapshots pruned as soon as no
+  * replay can read them.
   *
   * EXACTLY-ONCE: Structured Streaming re-executes a failed micro-batch
   * with the SAME batch id. Every write here is to a batch-id-derived
@@ -205,19 +209,20 @@ object StreamLakeIngest {
         textCol, idCol, LakeDir.inc(s"$lakeRoot/sigs", batchId),
         SaveMode.Overwrite, p.shingleLen, p.bands, p.rowsPerBand,
         p.minEstJaccard, p.bucketCap, dedupWithinIncrement = true))
-    // 4. semantic dedup vs the latest keeper snapshot, rewrite a new
-    // one (a FRESH versioned snapshot dir — the deferred form's
-    // requirement)
+    // 4. semantic dedup vs the latest keeper snapshot; the merged
+    // table lands as this batch's own snapshot, a directory its plan
+    // never reads
     val semDir = s"$lakeRoot/sem"
-    val (_, (s4, fold4)) = DriverPool.both(fold3(),
+    val (_, (s4, keepers)) = DriverPool.both(fold3(),
       Similarity.semDedupLakeStepDeferred(s3, idCol,
         vecCol, Similarity.readSemCodebook(spark, semDir),
         LakeRead.parquet(spark, keepersBefore(spark, semDir, batchId)),
-        s"$semDir/keepers_b$batchId", p.semThreshold,
-        keeperCap = p.keeperCap, nassign = p.nassign,
+        p.semThreshold, keeperCap = p.keeperCap, nassign = p.nassign,
         dedupWithinIncrement = true))
     // 5. quality filters — stateless, AFTER the fold-ins (see scaladoc)
-    DriverPool.both(fold4(), Lineage.cut(s4
+    DriverPool.both(
+      keepers.write.mode("overwrite").parquet(s"$semDir/keepers_b$batchId"),
+      Lineage.cut(s4
       .withColumn("__r", TextOps.repetitionScores(col(textCol)))
       .withColumn("__q", TextOps.qualityScore(col(textCol)))
       .where(col("__q") >= p.minQuality &&
@@ -352,7 +357,7 @@ object StreamLakeIngest {
     val modelPath = LakeDir.versionBefore(spark, s"$lakeRoot/dsir",
       "model", batchId)
     val model = LakeRead.parquet(spark, modelPath)
-      .select(col("b"), col("lr_micro")).orderBy("b").collect()
+      .select(col("b"), col("lr_micro")).collect().sortBy(_.getLong(0))
     require(model.length == sp.dsirBuckets &&
       model.head.getLong(0) == 0L,
       s"$modelPath is not a dense ${sp.dsirBuckets}-bucket DSIR model")
