@@ -102,6 +102,18 @@ object Lineage {
     if (df.storageLevel != StorageLevel.NONE) df
     else register(df.persist(StorageLevel.MEMORY_AND_DISK))
 
+  /** The bytes a frame returned by [[cut]] holds in executor storage,
+    * when it is a local cut: its real size, where the optimizer's
+    * estimate of a cut is its plan's (upstream joins can inflate that
+    * past any bound). None for a reliable cut or any other frame. */
+  private[graft] def cutBytes(df: DataFrame): Option[Long] =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        df.sparkSession.sparkContext.getRDDStorageInfo
+          .find(_.id == lr.rdd.id).map(i => i.memSize + i.diskSize)
+      case _ => None
+    }
+
   /** Release one SUPERSEDED frame before its scope ends (the iterative
     * loops' previous round) and drop it from the current scope. Only
     * call once every consumer has materialized: a freed cut frame

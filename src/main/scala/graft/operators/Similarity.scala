@@ -880,10 +880,14 @@ object Similarity {
     val centroids = readSemCodebook(spark, path)
     val stored = LakeRead.parquet(spark, s"$path/keepers")
     requireKeeperTable(stored)
-    val incoming = keeperRows(semAssign(survivors, idCol, vecCol,
-      centroids, keepFarthest, nassign, withOk = true))
-    overwriteKeepers(mergeKeepers(stored, incoming, keeperCap),
-      s"$path/keepers")
+    Lineage.scope {
+      // cut: the survivors' assignment runs once, in their own
+      // partitions, before the merge's one-partition dedup reads it
+      val incoming = Lineage.cut(keeperRows(semAssign(survivors, idCol,
+        vecCol, centroids, keepFarthest, nassign, withOk = true)))
+      overwriteKeepers(mergeKeepers(stored, incoming, keeperCap),
+        s"$path/keepers")
+    }
   }
 
   /** Jobs 2+3 of the semantic lake contract FUSED — the
@@ -959,10 +963,13 @@ object Similarity {
       newDf.join(removed.select(col("id").as(idCol)), Seq(idCol),
         "left_anti"))
     // the survivor ids reach the assigned rows as a broadcast, so no
-    // exchange carries `v` into the merge
+    // exchange carries `v`, when the survivors' stored rows fit the
+    // session's broadcast bound
+    val ids = survivors.select(col(idCol).as("id"))
+    val fits = Lineage.cutBytes(survivors).exists(_ <=
+      newDf.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
     val incoming = keeperRows(assigned.join(
-      broadcast(survivors.select(col(idCol).as("id"))), Seq("id"),
-      "left_semi"))
+      if (fits) broadcast(ids) else ids, Seq("id"), "left_semi"))
     (survivors, mergeKeepers(stored, incoming, keeperCap))
   }
 
@@ -983,18 +990,22 @@ object Similarity {
     * on (cell, keeper) and holds at most `keeperCap` rows per cell:
     *  - `fresh` is the incoming rows whose (cell, keeper) is not stored,
     *    one row per key: a stored key keeps its stored row
-    *    (DEVIATIONS #26). The key set reaches the incoming rows as a
-    *    broadcast, and the increment-sized remainder dedups in one
-    *    partition;
+    *    (DEVIATIONS #26). The key set (at most nlist × `keeperCap` rows)
+    *    reaches the incoming rows as a broadcast, and the remainder
+    *    dedups in ONE task: `incoming` must be an increment small enough
+    *    for one task, and materialized (cut or kept and filled) — the
+    *    narrow `coalesce(1)` would otherwise pull its whole upstream
+    *    plan into that task, once per branch below;
     *  - a cell's cutoff is the `keeperCap`-th smallest `kok` of stored ∪
     *    fresh, ranked over a (cell, kok) projection — the one exchange;
     *  - a row lands iff its cell has no cutoff or `kok ≤ cutoff`. `kok` =
     *    (o1, keeper) totally orders a cell, so this is exactly
     *    `row_number() ≤ keeperCap` over stored ∪ fresh.
-    * The result keeps the stored scan's partition count (a narrow
-    * coalesce), so the table's file count does not grow fold by fold. */
+    * The result is coalesced (narrow) to the stored table's file
+    * count, so the table's file count does not grow fold by fold. */
   private[graft] def mergeKeepers(stored: DataFrame, incoming: DataFrame,
       keeperCap: Int): DataFrame = {
+    require(keeperCap >= 1, s"keeperCap must be >= 1; got $keeperCap")
     val fresh = incoming
       .join(broadcast(stored.select("cell", "keeper")),
         Seq("cell", "keeper"), "left_anti")
@@ -1009,7 +1020,7 @@ object Similarity {
       .join(broadcast(cutoffs), Seq("cell"), "left")
       .where(col("cutoff").isNull || col("kok") <= col("cutoff"))
       .drop("cutoff")
-      .coalesce(math.max(1, stored.rdd.getNumPartitions))
+      .coalesce(math.max(1, stored.inputFiles.length))
   }
 
   /** In-place fold-in tail: the merged plan reads the table it

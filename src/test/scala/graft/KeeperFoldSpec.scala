@@ -96,6 +96,9 @@ class KeeperFoldSpec extends SparkTestBase {
     assertSameRows(Similarity.mergeKeepers(stored, none, cap), stored)
     assertSameRows(Similarity.mergeKeepers(stored, none, cap),
       windowMerge(stored, none, cap))
+    // a cap below one would keep every row, where the build keeps none
+    intercept[IllegalArgumentException](
+      Similarity.mergeKeepers(stored, incoming, 0))
   }
 
   // three directions, uneven cluster sizes: with nlist 3 and keeperCap 3
@@ -180,11 +183,40 @@ class KeeperFoldSpec extends SparkTestBase {
     Dedup.releaseIntermediates()
   }
 
+  test("an in-place fold keeps a one-file snapshot at one file when " +
+      "its scan splits the file") {
+    val path = freshLake("graft_keepfold_f")
+    def dataFiles(): Int = new java.io.File(s"$path/keepers").listFiles()
+      .count(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet"))
+    assert(dataFiles() == 1)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "512")
+    try {
+      assert(spark.read.parquet(s"$path/keepers").rdd.getNumPartitions > 1)
+      Similarity.appendSemKeepers(inc, "vec_id", "embedding", path,
+        keeperCap = 3, nassign = 1)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(dataFiles() == 1, s"the snapshot grew to ${dataFiles()} files")
+    Dedup.releaseIntermediates()
+  }
+
   test("the versioned fold's final plan moves no vector through a " +
-      "shuffle exchange") {
+      "shuffle exchange, with or without a size estimate of the " +
+      "increment") {
+    // an RDD-backed increment has no estimate (a streamed micro-batch's
+    // is inflated by its upstream joins), so no join broadcasts it
+    val unsized = spark.createDataFrame(inc.rdd, inc.schema)
+    assert(unsized.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(spark.sessionState.conf.autoBroadcastJoinThreshold))
+    for (rows <- Seq(inc, unsized)) assertNarrowFold(rows)
+  }
+
+  private def assertNarrowFold(rows: DataFrame): Unit = {
     val path = freshLake("graft_keepfold_p")
     // nothing is removed, so AQE cannot prune the increment's branch
-    val (_, merged) = Similarity.semDedupLakeStepDeferred(inc,
+    val (_, merged) = Similarity.semDedupLakeStepDeferred(rows,
       "vec_id", "embedding", Similarity.readSemCodebook(spark, path),
       spark.read.parquet(s"$path/keepers"), threshold = 1.01,
       keeperCap = 3, nassign = 2, dedupWithinIncrement = true)
