@@ -281,9 +281,9 @@ object Curation {
     * threshold meets the target (run a wider sweep, don't guess). */
   def pickCalibratedThreshold(spark: org.apache.spark.sql.SparkSession,
       path: String, minWeightFrac: Double): Double = {
-    val ok = LakeRead.parquet(spark, path)
-      .select(col("threshold"), col("weight_frac")).collect()
-      .filter(_.getDouble(1) >= minWeightFrac).map(_.getDouble(0))
+    val ok = LakeRead.rows(spark, path)
+      .map(r => (r.getAs[Double]("threshold"), r.getAs[Double]("weight_frac")))
+      .filter(_._2 >= minWeightFrac).map(_._1)
     require(ok.nonEmpty,
       s"no calibrated threshold retains >= $minWeightFrac of weight")
     ok.max
@@ -464,9 +464,10 @@ object Curation {
       dstPath: String): Unit = {
     val spark = incDf.sparkSession
     import spark.implicits._
-    val stored = LakeRead.parquet(spark, srcPath)
-      .select(col("b"), col("rc"), col("tc")).orderBy(col("b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val stored = LakeRead.rows(spark, srcPath)
+      .map(r => (r.getAs[Long]("b"), r.getAs[Long]("rc"),
+        r.getAs[Long]("tc")))
+      .sortBy(_._1)
     val buckets = stored.length
     require(buckets > 0 && stored.head._1 == 0L,
       s"$srcPath is not a dense writeDsirModel artifact")

@@ -4,10 +4,15 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
+import org.apache.spark.sql.graftshim.SchemaShim
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** Parquet reads of lake artifacts that build their plan WITHOUT a
@@ -26,8 +31,13 @@ import scala.util.Try
   * every error (e.g. "unable to infer schema" on a `_SUCCESS`-only
   * directory) is the one the plain read raises.
   *
+  * Control records — metas, manifests, cursors, models: one-row or
+  * codebook-sized tables a caller collects — go through [[rows]],
+  * which reads them on the driver with no Spark job at all.
+  *
   * Every lake read in `graft.operators` and `graft.streaming` goes
-  * through here (a spec scans the sources for stray reads).
+  * through here (a spec scans the sources for stray reads, and for a
+  * `collect()` chained onto [[parquet]]).
   */
 object LakeRead {
 
@@ -51,6 +61,90 @@ object LakeRead {
     }
   }
 
+  /** `spark.read.parquet(dir).collect()` for a small flat control
+    * table, read on the driver with no Spark job: the same files the
+    * plain read scans (names starting `_` or `.` skipped, empty files
+    * skipped, larger files first), decoded by Spark's own Parquet
+    * reader under the Spark schema stored in the footer of the file
+    * the plain read infers from (the first by path),
+    * made nullable as the plain read makes it. The rows carry that
+    * schema. A directory holding subdirectories (a partitioned
+    * table), a footer without a Spark schema, and a directory with no
+    * data file fall back to the plain read, so the columns and every
+    * error (a `_SUCCESS`-only or missing directory) are the plain
+    * read's. Every row is held on the driver: keep it to tables whose
+    * size is bounded by their meaning, never by the data. */
+  def rows(spark: SparkSession, dir: String): Seq[Row] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = flatDataFiles(conf, dir)
+    val first = files.map(_.getPath).sortBy(_.toString).headOption
+    first.flatMap(footerSchema(conf, _)) match {
+      case Some(stored) =>
+        val schema = SchemaShim.asNullable(stored)
+        val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+          spark, schema, new StructType(), schema, Nil,
+          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          new Configuration(conf))
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        files.flatMap { f =>
+          val it = read(PartitionedFile(InternalRow.empty,
+            SparkPath.fromPath(f.getPath), 0L, f.getLen, Array.empty[String],
+            f.getModificationTime, f.getLen))
+          try it.map(r => toRow(r).asInstanceOf[Row]).toVector
+          finally it match {
+            case c: java.io.Closeable => c.close()
+            case _ => ()
+          }
+        }
+      case None => spark.read.parquet(dir).collect().toSeq
+    }
+  }
+
+  /** The values `v` of the `column=v` partition directories directly
+    * under `dir` whose data files' footers count at least one row —
+    * the distinct values of that column in `spark.read.parquet(dir)`,
+    * from file metadata alone (no Spark job, no row read). Empty when
+    * `dir` does not exist. */
+  def nonEmptyPartitions(spark: SparkSession, dir: String,
+      column: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    val prefix = s"$column="
+    if (!fs.exists(path)) Seq.empty
+    else fs.listStatus(path).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .filter(s => flatDataFiles(conf, s.getPath.toString)
+        .exists(f => footerRowCount(conf, f.getPath) > 0))
+      .map(_.getPath.getName.stripPrefix(prefix))
+  }
+
+  /** The files the plain read of a FLAT directory scans, largest
+    * first (Spark's split order): visible (no `_`/`.` prefix) and
+    * non-empty. A single file is itself; a missing path, or a
+    * directory with a visible subdirectory, yields none. */
+  private def flatDataFiles(conf: Configuration,
+      dir: String): Seq[FileStatus] = {
+    val path = new Path(dir)
+    Try {
+      val fs = path.getFileSystem(conf)
+      val st = fs.getFileStatus(path)
+      if (!st.isDirectory) Seq(st)
+      else {
+        val (dirs, files) = fs.listStatus(path).toSeq.filter(visible)
+          .partition(_.isDirectory)
+        if (dirs.nonEmpty) Seq.empty
+        else files.filter(_.getLen > 0)
+          .sortBy(f => (-f.getLen, f.getPath.getName))
+      }
+    }.getOrElse(Seq.empty)
+  }
+
+  private def visible(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
   /** The first data file under `paths`, in path order, depth-first
     * with each directory's files before its subdirectories. Names
     * starting with `_` or `.` are skipped below the given paths, as
@@ -59,10 +153,6 @@ object LakeRead {
     * vanishes mid-listing yields no file. */
   private def firstDataFile(conf: Configuration,
       paths: Seq[String]): Option[Path] = {
-    def visible(s: FileStatus): Boolean = {
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
     def walk(fs: FileSystem, s: FileStatus): Option[Path] =
       if (!s.isDirectory) Some(s.getPath)
       else {
@@ -89,4 +179,9 @@ object LakeRead {
       .flatMap(Option(_))
       .flatMap(json => Try(DataType.fromJson(json)).toOption)
       .collect { case s: StructType => s }
+
+  private def footerRowCount(conf: Configuration, file: Path): Long =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, conf),
+        ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum
 }

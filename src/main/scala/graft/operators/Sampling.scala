@@ -605,7 +605,7 @@ object Sampling {
       // the landing call, SCALE.md round 19)
       val m = cut
         .agg(count(lit(1)).as("n"), sum(col("n_ids")).as("t"),
-          sequencesFold().as("d"))
+          sequencesFold(col("ids_digest")).as("d"))
         .collect().head
       Seq((m.getLong(0), m.getLong(1), m.getString(2), FoldAlgo))
         .toDF("n_sequences", "n_ids", "digest", "fold_algo")
@@ -627,6 +627,14 @@ object Sampling {
     * short-lived xor, so v1 is the first tagged format). */
   private[graft] val FoldAlgo = "sum60v1"
 
+  /** The fold tag a `sequences_meta` row was attested under; a meta
+    * landed before the tag existed reads as untagged, so it refuses
+    * with the version diagnosis rather than a missing-field error. */
+  private[graft] def foldAlgoOf(meta: org.apache.spark.sql.Row): String =
+    if (meta.schema.fieldNames.contains("fold_algo"))
+      meta.getAs[String]("fold_algo")
+    else "(untagged pre-v1)"
+
   /** Order-insensitive artifact digest: SUM (exact, DECIMAL(38)) of
     * the per-row digests' first 15 hex digits (60 bits each; 10^9
     * rows stay under 10^28 << 10^38, so the sum never overflows) —
@@ -637,9 +645,10 @@ object Sampling {
     * (count, n_ids, fold) for any non-adversarial corruption — torn
     * writes, dropped/duplicated rows, bit-flipped ids (the row digest
     * is md5, so a flipped id moves the prefix); see DEVIATIONS #19. */
-  private def sequencesFold(): org.apache.spark.sql.Column =
-    expr("cast(sum(cast(conv(substring(ids_digest, 1, 15), 16, 10) " +
-      "AS DECIMAL(38,0))) AS STRING)")
+  private def sequencesFold(
+      digest: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    sum(conv(substring(digest, 1, 15), 16, 10)
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0))).cast("string")
 
   /** Read back a [[writeSequences]] artifact, count- and
     * digest-verified against its meta row (a torn or hand-edited
@@ -647,71 +656,80 @@ object Sampling {
     * different batch set). */
   def readSequences(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    readSequencesBatched(spark, Seq(path))
+    readSequencesBatched(spark, Seq(path)).rows
+
+  /** A verified read of one or more [[writeSequences]] artifacts: their
+    * rows as one union, and the `shard` values that hold rows (sorted;
+    * empty when the artifacts are not partitioned by `shard`). */
+  private[graft] final case class VerifiedSequences(rows: DataFrame,
+      shards: Seq[Long])
 
   /** Read back SEVERAL [[writeSequences]] artifacts as one union, each
     * verified against its own meta row — the SAME three checks
     * [[readSequences]] runs per artifact (exactly one meta row, fold
-    * algo tag, count+ids+digest equality), batched into TWO jobs total
-    * (one meta-union collect, one dir-grouped verify aggregate)
-    * instead of two jobs PER artifact (guide §1.2: the sequence lake's
-    * per-poll artifact count made the 2-jobs-each verification the
-    * dominant fixed cost of every lake read at bench scale). */
+    * algo tag, count+ids+digest equality) — in ONE Spark job for the
+    * whole set: the one-row metas are read on the driver
+    * ([[LakeRead.rows]]), and every artifact's count, id total and
+    * digest fold ride one `observe` over the union, run into the
+    * `noop` sink. The live shard set comes from the `shard=N`
+    * directories' Parquet footers ([[LakeRead.nonEmptyPartitions]]):
+    * a shard whose files hold no row is not live. It equals the
+    * verified rows' distinct shards, since the verify pass scans the
+    * same files. */
   private[graft] def readSequencesBatched(
       spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String]): DataFrame = {
+      paths: Seq[String]): VerifiedSequences = {
     require(paths.nonEmpty, "readSequencesBatched needs >= 1 artifact")
-    // metas: one narrow union collect (each meta is a one-row table).
-    // The fold-algo column is resolved per artifact BEFORE the union
-    // (schema-only — a legacy untagged artifact must refuse with the
-    // version diagnosis, not break the union's analysis).
     val metas = paths.map { p =>
-      val m = LakeRead.parquet(spark, s"$p/sequences_meta")
-      val algo =
-        if (m.columns.contains("fold_algo")) col("fold_algo")
-        else lit("(untagged pre-v1)")
-      m.select(lit(p).as("__dir"), col("n_sequences"), col("n_ids"),
-        col("digest"), algo.as("fold_algo"))
-    }.reduce(_.unionByName(_)).collect()
-    val metaByDir = metas.groupBy(_.getString(0))
-    paths.foreach { p =>
-      val rows = metaByDir.getOrElse(p, Array.empty)
+      val rows = LakeRead.rows(spark, s"$p/sequences_meta")
       require(rows.length == 1,
         s"sequences meta must hold exactly one row (got ${rows.length}" +
           s") at $p/sequences_meta")
       // algorithm tag first: a fold-format mismatch is a VERSION
       // problem, not corruption — refuse with the right diagnosis
-      val storedAlgo = rows.head.getAs[String]("fold_algo")
+      val m = rows.head
+      val storedAlgo = foldAlgoOf(m)
       require(storedAlgo == FoldAlgo,
         s"sequences meta was attested with fold '$storedAlgo' but this " +
           s"reader verifies '$FoldAlgo' — re-land the artifact (or " +
           "read it with the matching engine version); this is a format " +
           "version mismatch, not corruption")
+      (m.getAs[Long]("n_sequences"), m.getAs[Long]("n_ids"),
+        m.getAs[String]("digest"))
     }
-    // one dir-tagged verify aggregate over every artifact's rows. A
-    // dir whose data directory holds ZERO rows produces no group —
-    // read back as (0, 0, "(empty)"), the same refusal the per-
-    // artifact aggregate's coalesced nulls produced.
-    def seqsOf(p: String) = LakeRead.parquet(spark, s"$p/sequences")
-    val got = paths.map(p => seqsOf(p)
-        .select(lit(p).as("__dir"), col("n_ids"), col("ids_digest")))
+    // one pass over every artifact's rows: per artifact i, the count,
+    // the id total and the digest fold of the rows tagged i. An
+    // artifact whose data holds ZERO rows reads back as
+    // (0, 0, "(empty)") and refuses like any other mismatch.
+    val seqs = paths.map(p => LakeRead.parquet(spark, s"$p/sequences"))
+    val checks = paths.indices.flatMap { i =>
+      val mine = col("__i") === i
+      Seq(count(when(mine, 1)).as(s"n$i"),
+        coalesce(sum(when(mine, col("n_ids"))), lit(0L)).as(s"t$i"),
+        coalesce(sequencesFold(when(mine, col("ids_digest"))),
+          lit("(empty)")).as(s"d$i"))
+    }
+    val obs = org.apache.spark.sql.Observation(
+      s"graft_sequences_verify_${java.util.UUID.randomUUID()}")
+    seqs.zipWithIndex
+      .map { case (df, i) =>
+        df.select(lit(i).as("__i"), col("n_ids"), col("ids_digest")) }
       .reduce(_.unionByName(_))
-      .groupBy(col("__dir"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("n_ids")), lit(0L)).as("t"),
-        coalesce(sequencesFold(), lit("(empty)")).as("d"))
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getString(3))).toMap
-    paths.foreach { p =>
-      val meta = metaByDir(p).head
-      val (n, t, d) = got.getOrElse(p, (0L, 0L, "(empty)"))
-      require(n == meta.getLong(1) && t == meta.getLong(2) &&
-        d == meta.getAs[String]("digest"),
-        s"sequences artifact corrupt: stored (n=${meta.getLong(1)}," +
-          s" ids=${meta.getLong(2)}, digest=${meta.getString(3)})" +
-          s" vs read (n=$n, ids=$t, digest=$d) at $p")
+      .observe(obs, checks.head, checks.tail: _*)
+      .write.format("noop").mode("overwrite").save()
+    val got = obs.get
+    paths.zip(metas).zipWithIndex.foreach {
+      case ((p, (mn, mt, md)), i) =>
+        val n = got(s"n$i").asInstanceOf[Long]
+        val t = got(s"t$i").asInstanceOf[Long]
+        val d = got(s"d$i").asInstanceOf[String]
+        require(n == mn && t == mt && d == md,
+          s"sequences artifact corrupt: stored (n=$mn, ids=$mt, " +
+            s"digest=$md) vs read (n=$n, ids=$t, digest=$d) at $p")
     }
-    paths.map(seqsOf).reduce(_.unionByName(_))
+    VerifiedSequences(seqs.reduce(_.unionByName(_)),
+      paths.flatMap(p => LakeRead.nonEmptyPartitions(spark,
+        s"$p/sequences", "shard")).map(_.toLong).distinct.sorted)
   }
 
   /** Deterministic EPOCH SCHEDULE over packed training sequences —
@@ -801,15 +819,23 @@ object Sampling {
   def writeEpochManifest(seqs: DataFrame, path: String, epoch: Long,
       salt: String = "graft",
       shardCol: String = "shard"): EpochManifest = {
-    val spark = seqs.sparkSession
-    import spark.implicits._
     val shards = seqs.select(col(shardCol).cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    val mf = EpochManifest(epoch, salt, ScheduleAlgo, shards)
-    shards.toDF("shard")
-      .withColumn("epoch", lit(epoch))
-      .withColumn("salt", lit(salt))
-      .withColumn("schedule_algo", lit(ScheduleAlgo))
+    writeEpochManifest(seqs.sparkSession, path,
+      EpochManifest(epoch, salt, ScheduleAlgo, shards))
+  }
+
+  /** Persist an epoch manifest whose shard set is already known (the
+    * sequence lake's footer shard set) — the write of the form above,
+    * without its distinct job. */
+  private[graft] def writeEpochManifest(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      mf: EpochManifest): EpochManifest = {
+    import spark.implicits._
+    mf.shards.toDF("shard")
+      .withColumn("epoch", lit(mf.epoch))
+      .withColumn("salt", lit(mf.salt))
+      .withColumn("schedule_algo", lit(mf.scheduleAlgo))
       .coalesce(1).write.mode("overwrite").parquet(path)
     mf
   }
@@ -819,12 +845,10 @@ object Sampling {
     * inconsistent row set (identity columns must agree across rows). */
   def readEpochManifest(spark: org.apache.spark.sql.SparkSession,
       path: String): EpochManifest = {
-    val rows = LakeRead.parquet(spark, path)
-      .select(col("shard"), col("epoch"), col("salt"),
-        col("schedule_algo")).collect()
+    val rows = LakeRead.rows(spark, path)
     require(rows.nonEmpty, s"$path holds no epoch-manifest rows")
-    val ids = rows.map(r => (r.getLong(1), r.getString(2),
-      r.getString(3))).distinct
+    val ids = rows.map(r => (r.getAs[Long]("epoch"),
+      r.getAs[String]("salt"), r.getAs[String]("schedule_algo"))).distinct
     require(ids.length == 1,
       s"$path mixes epoch/salt/algo identities: ${ids.mkString(", ")}")
     val (epoch, salt, algo) = ids.head
@@ -834,7 +858,7 @@ object Sampling {
         "(or run the matching engine version); this is a format " +
         "version mismatch, not corruption")
     EpochManifest(epoch, salt, algo,
-      rows.map(_.getLong(0)).sorted.toSeq)
+      rows.map(_.getAs[Long]("shard")).sorted)
   }
 
   /** md5 hex digest of a UTF-8 string — the driver-side twin of
@@ -884,7 +908,8 @@ object Sampling {
     * over the manifest's shard set — shard ranks computed in the
     * DRIVER from the pinned set (same md5-hex order as the
     * distributed rank; the set is one long per shard, codebook-sized)
-    * and broadcast-joined onto the rows, which both filters the lake
+    * and looked up per row in a map literal, which both
+    * filters the lake
     * to exactly the pinned shards AND replaces the unpinned distinct+
     * rank job, so the pinned plan is never more expensive than the
     * unpinned one. Shards landed after the pin are excluded (they
@@ -895,47 +920,70 @@ object Sampling {
   def consumeEpoch(seqs: DataFrame, epoch: Long,
       cursor: Option[LoaderCursor] = None, salt: String = "graft",
       shardCol: String = "shard", seqCol: String = "seq",
-      pinned: Option[EpochManifest] = None): DataFrame = {
+      pinned: Option[EpochManifest] = None): DataFrame =
+    consumeEpochOver(seqs, None, epoch, cursor, salt, shardCol, seqCol,
+      pinned)
+
+  /** [[consumeEpoch]] over rows whose shard set `live` is already
+    * known (the sequence lake's footer shard set, sorted): the pin is
+    * checked against it and the shards are ranked on the driver —
+    * pinned or not, since an unpinned epoch ranks exactly the live
+    * set — so no distinct job runs. `None` finds the set with one. */
+  private[graft] def consumeEpochOver(seqs: DataFrame,
+      live: Option[Seq[Long]], epoch: Long, cursor: Option[LoaderCursor],
+      salt: String, shardCol: String, seqCol: String,
+      pinned: Option[EpochManifest]): DataFrame = {
     cursor.foreach { c =>
       require(c.epoch <= epoch,
         s"loader cursor is at epoch ${c.epoch}, past the requested " +
           s"epoch $epoch — re-consuming a finished epoch would " +
           "double-train its sequences; request epoch >= the cursor's")
     }
-    val sched = pinned match {
+    // the shard set this epoch ranks: the pinned one, checked against
+    // the live shards, or the live one when it is known
+    val ranked: Option[Seq[Long]] = pinned match {
       case Some(mf) =>
         require(mf.epoch == epoch && mf.salt == salt,
           s"epoch manifest pins (epoch ${mf.epoch}, salt " +
             s"'${mf.salt}') but consumption asked for (epoch $epoch," +
             s" salt '$salt') — an epoch consumes its OWN manifest")
-        val spark = seqs.sparkSession
-        import spark.implicits._
-        // live shard set: one narrow distinct, one row per shard —
-        // the same bounded pass the unpinned rank job pays
-        val live = seqs.select(col(shardCol).cast("long")).distinct()
-          .collect().map(_.getLong(0)).toSet
-        val missing = mf.shards.filterNot(live)
+        // live shard set: given, or one narrow distinct, one row per
+        // shard — the same bounded pass the unpinned rank job pays
+        val liveSet = live.getOrElse(
+          seqs.select(col(shardCol).cast("long")).distinct()
+            .collect().map(_.getLong(0)).toSeq).toSet
+        val missing = mf.shards.filterNot(liveSet)
         require(missing.isEmpty,
           s"epoch manifest pins shard(s) ${missing.mkString(",")} " +
             "absent from the live sequence rows — the lake lost " +
             "data since the pin (or this manifest belongs to a " +
             "different lake); refusing a silently partial epoch")
-        // driver-side ranks over the PINNED set — the exact
-        // (md5 asc, shard-string asc) order epochSchedule's
-        // distributed rank lands, stable no matter what lands later
-        val ranked = mf.shards
+        Some(mf.shards)
+      case None => live.filter(_.nonEmpty)
+    }
+    val sched = ranked match {
+      case Some(shards) =>
+        // driver-side ranks over the set — the exact (md5 asc,
+        // shard-string asc) order epochSchedule's distributed rank
+        // lands, stable no matter what lands later. They reach the
+        // rows as a map literal, one entry per shard (a broadcast join
+        // of a local table would run a job to collect it)
+        val rankOf = typedLit(shards
           .map(sh => (sh, md5Hex(s"$sh|$epoch|$salt")))
           .sortBy { case (sh, k) => (k, sh.toString) }
-          .zipWithIndex.map { case ((sh, _), i) => (sh, i + 1L) }
-        val ranks = broadcast(ranked.toDF(shardCol, "shard_rank"))
+          .zipWithIndex.map { case ((sh, _), i) => (sh, i + 1L) }.toMap)
         val w = Window.partitionBy(col(shardCol))
           .orderBy(md5(concat(col(shardCol).cast("string"), lit("|"),
             col(seqCol).cast("string"), lit("|"),
             lit(epoch.toString), lit("|"), lit(salt))).asc,
             col(seqCol).asc)
-        // the inner join IS the pin filter (unpinned shards drop out)
+        // a null rank IS the pin filter (unpinned shards drop out);
+        // the columns keep the join's order: shard first
+        val rest = seqs.columns.filterNot(_ == shardCol).map(col)
         seqs.withColumn(shardCol, col(shardCol).cast("long"))
-          .join(ranks, Seq(shardCol))
+          .withColumn("shard_rank", try_element_at(rankOf, col(shardCol)))
+          .where(col("shard_rank").isNotNull)
+          .select((col(shardCol) +: rest :+ col("shard_rank")): _*)
           .withColumn("seq_rank", row_number().over(w).cast("long"))
           .withColumn("epoch", lit(epoch))
       case None =>
@@ -1016,13 +1064,12 @@ object Sampling {
         Some(path) // legacy single-dir snapshot (pre-versioning)
       else None
     snapshot.map { dir =>
-      val rows = LakeRead.parquet(spark, dir)
-        .select(col("epoch"), col("shard_rank"), col("seq_rank"))
-        .collect()
+      val rows = LakeRead.rows(spark, dir)
       require(rows.length == 1,
         s"$dir is not a one-row loader cursor (${rows.length} rows)")
-      LoaderCursor(rows.head.getLong(0), rows.head.getLong(1),
-        rows.head.getLong(2))
+      val r = rows.head
+      LoaderCursor(r.getAs[Long]("epoch"), r.getAs[Long]("shard_rank"),
+        r.getAs[Long]("seq_rank"))
     }
   }
 

@@ -676,8 +676,10 @@ object Similarity {
     // meet in any shared cell, and the top-priority member of every
     // CONNECTED near-dup component survives (nothing outranks it).
     // Lexicographic struct compare: smaller okey = higher keep priority.
+    // Spark 4.1 drops aliases inside `struct`, naming the fields
+    // `col1` and `id`; the names below are the ones it produces.
     def okey(d2c: Column, id: Column): Column =
-      struct((if (keepFarthest) -d2c else d2c).as("o1"), id.as("o2"))
+      struct((if (keepFarthest) -d2c else d2c).as("col1"), id.as("id"))
     // membership rows carry (vector, norm, priority): the keeper
     // window's cell-keyed exchange is where vectors move — nassign·n
     // rows, linear in the corpus — and the candidate join reuses the
@@ -764,13 +766,17 @@ object Similarity {
   /** Cell assignment of a corpus against a fixed codebook: one row per
     * (doc, assigned cell) carrying (vector, norm[, keep-priority]) —
     * the shared front of [[semDedup]]/[[semDedupCross]] and the
-    * artifact write/read paths. */
+    * artifact write/read paths. The keep-priority `ok` is
+    * `struct<col1: double, id: bigint>`: the signed distance to the
+    * first cell's centroid, then the document id. Keeper tables store
+    * it as `kok` under those field names; the fold's `unionByName`
+    * relies on them. */
   private[graft] def semAssign(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], keepFarthest: Boolean, nassign: Int,
       withOk: Boolean): DataFrame = {
     val sortedCells = sortedCellStructs(col("v"), centroids)
     def okey(d2c: Column, id: Column): Column =
-      struct((if (keepFarthest) -d2c else d2c).as("o1"), id.as("o2"))
+      struct((if (keepFarthest) -d2c else d2c).as("col1"), id.as("id"))
     val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
         l2Norm(col(vecCol)).as("n"))
       .select(col("id"), col("v"), col("n"), sortedCells.as("sc"))
@@ -999,7 +1005,8 @@ object Similarity {
     *  - a cell's cutoff is the `keeperCap`-th smallest `kok` of stored ∪
     *    fresh, ranked over a (cell, kok) projection — the one exchange;
     *  - a row lands iff its cell has no cutoff or `kok ≤ cutoff`. `kok` =
-    *    (o1, keeper) totally orders a cell, so this is exactly
+    *    (col1, id) = (signed distance to the centroid, keeper) totally
+    *    orders a cell, so this is exactly
     *    `row_number() ≤ keeperCap` over stored ∪ fresh.
     * The result is coalesced (narrow) to the stored table's file
     * count, so the table's file count does not grow fold by fold. */

@@ -914,11 +914,10 @@ object Tokenizer {
     * to re-deriving max(token_id) + 1. */
   def readBpeSpecials(spark: org.apache.spark.sql.SparkSession,
       path: String): BpeSpecials = {
-    val metaDf = LakeRead.parquet(spark, s"$path/vocab_meta")
-    val meta = metaDf.collect()
+    val meta = LakeRead.rows(spark, s"$path/vocab_meta")
     require(meta.length == 1,
       s"vocab meta must hold exactly one row (got ${meta.length})")
-    require(metaDf.columns.contains("n_specials") &&
+    require(meta.head.schema.fieldNames.contains("n_specials") &&
       meta.head.getAs[Long]("n_specials") > 0L,
       s"vocabulary artifact at $path has NO special-token registry — " +
         "it was landed with the legacy no-specials writeBpeVocab. " +
@@ -927,23 +926,18 @@ object Tokenizer {
         "max(token_id) + 1 (a stale derivation collides with real " +
         "vocabulary ids)")
     val nSpecials = meta.head.getAs[Long]("n_specials")
-    // the registry read and the vocab max are INDEPENDENT bounded
-    // jobs — overlapped (round 20, guide §2.6): readBpeSpecials runs
-    // once per artifact consumer and its three sequential driver round
-    // trips were pure fixed cost
-    val two = graft.operators.DriverPool.all[AnyRef](Seq(
-      () => LakeRead.parquet(spark, s"$path/specials")
-        .select(col("name"), col("token_id")).orderBy("token_id")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq,
-      () => java.lang.Long.valueOf(LakeRead.parquet(spark, s"$path/vocab")
-        .agg(max(col("token_id"))).collect().head.getLong(0))))
-    val reserved = two.head.asInstanceOf[Seq[(String, Long)]]
+    // the registry is a control table (driver read, no job); the
+    // vocab max is the one Spark job
+    val reserved = LakeRead.rows(spark, s"$path/specials")
+      .map(r => (r.getAs[String]("name"), r.getAs[Long]("token_id")))
+      .sortBy(_._2)
     val stored = meta.head.getAs[String]("specials_digest")
     val computed = specialsDigest(reserved)
     require(reserved.size.toLong == nSpecials && stored == computed,
       s"special-token registry corrupt: stored n=$nSpecials/" +
         s"digest=$stored, read n=${reserved.size}/digest=$computed")
-    val maxVocabId = two(1).asInstanceOf[java.lang.Long].longValue()
+    val maxVocabId = LakeRead.parquet(spark, s"$path/vocab")
+      .agg(max(col("token_id"))).collect().head.getLong(0)
     val ids = reserved.map(_._2)
     require(ids.min == maxVocabId + 1 &&
       ids.max == maxVocabId + reserved.size,
@@ -976,7 +970,7 @@ object Tokenizer {
       .select(col("token_id"), col("token"), col("is_base"))
       .orderBy("token_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
-    val meta = LakeRead.parquet(spark, s"$path/vocab_meta").collect()
+    val meta = LakeRead.rows(spark, s"$path/vocab_meta")
     require(meta.length == 1,
       s"vocab meta must hold exactly one row (got ${meta.length})")
     val stored = meta.head.getString(1)
@@ -1077,8 +1071,7 @@ object Tokenizer {
     val merges = LakeRead.parquet(spark, s"$path/merges")
       .orderBy("step").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val metaDf = LakeRead.parquet(spark, s"$path/meta")
-    val meta = metaDf.collect()
+    val meta = LakeRead.rows(spark, s"$path/meta")
     require(meta.length == 1,
       s"bpe model meta must hold exactly one row (got ${meta.length})")
     val m = meta.head
@@ -1090,7 +1083,7 @@ object Tokenizer {
         "n_merges")}/digest=$stored, read n=${merges.size}/" +
         s"digest=$computed")
     // pre-round-19 artifacts have no pretok column — class-run mode
-    val pretok = metaDf.columns.contains("pretok") &&
+    val pretok = m.schema.fieldNames.contains("pretok") &&
       m.getAs[Boolean]("pretok")
     BpeModel(merges, m.getAs[Boolean]("unicode"),
       m.getAs[Boolean]("byte_fallback"), stored, pretok)

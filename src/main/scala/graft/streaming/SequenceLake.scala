@@ -77,18 +77,21 @@ object SequenceLake {
     * ([[graft.operators.Sampling.readSequences]]'s count + digest
     * re-check) before the union. O(1 + polls-since-compaction)
     * parquet roots at any lake age. */
-  def readSequenceLake(spark: SparkSession, root: String): DataFrame = {
+  def readSequenceLake(spark: SparkSession, root: String): DataFrame =
+    readLive(spark, root).rows
+
+  /** [[readSequenceLake]] plus the lake's live shard set. The per-
+    * artifact meta checks run as ONE Spark job across the whole live
+    * set: at bench scale the per-job fixed cost of the verification
+    * jobs was the dominant term of every lake read (guide §1.2). */
+  private def readLive(spark: SparkSession,
+      root: String): Sampling.VerifiedSequences = {
     val rootP = new Path(root)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs = LakeDir.live(fs, rootP)
     require(dirs.nonEmpty,
       s"$root holds no landed sequence artifacts — land one with " +
         "appendSequences")
-    // BATCHED verification (round 20, guide §1.2): the same per-
-    // artifact meta checks as before, but two jobs TOTAL across the
-    // live set instead of two per artifact — at bench scale the
-    // per-job fixed cost of the 2k verification jobs was the dominant
-    // term of every lake read (ProfTrainerLoop readback slices).
     Sampling.readSequencesBatched(spark, dirs)
   }
 
@@ -180,33 +183,34 @@ object SequenceLake {
     * md5 rank and the cursor silently re-reads/skips whole shards.
     * Pinned, the epoch covers exactly the manifest's shards — growth
     * joins the NEXT epoch — and a resume is exactly-once no matter
-    * what landed in between (spec'd across a mid-epoch poll). */
+    * what landed in between (spec'd across a mid-epoch poll).
+    *
+    * The pin is checked against the lake's footer shard set, and the
+    * shards are ranked on the driver, so the read runs no distinct
+    * job. */
   def consume(spark: SparkSession, root: String, epoch: Long,
       cursor: Option[Sampling.LoaderCursor] = None,
       salt: String = "graft",
       pinned: Option[Sampling.EpochManifest] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    Sampling.consumeEpoch(
-      readSequenceLake(spark, root)
-        .withColumn("shard", col("shard").cast("long")),
-      epoch, cursor, salt, pinned = pinned)
+    val lake = readLive(spark, root)
+    Sampling.consumeEpochOver(
+      lake.rows.withColumn("shard", col("shard").cast("long")),
+      Some(lake.shards), epoch, cursor, salt, "shard", "seq", pinned)
   }
 
-  /** Pin THIS epoch's shard set from the live lake — one narrow
-    * distinct over the digest-verified lake read, persisted at
+  /** Pin THIS epoch's shard set from the live lake — the digest-
+    * verified lake read's footer shard set, persisted at
     * `manifestPath` ([[graft.operators.Sampling.writeEpochManifest]])
     * — the epoch-start step of the growth-safe loader protocol: pin,
     * then consume every (re)start of the epoch under the SAME
     * manifest ([[graft.operators.Sampling.readEpochManifest]] on
     * restart), checkpointing cursors as usual. */
   def pinEpoch(spark: SparkSession, root: String, manifestPath: String,
-      epoch: Long, salt: String = "graft"): Sampling.EpochManifest = {
-    import org.apache.spark.sql.functions.col
-    Sampling.writeEpochManifest(
-      readSequenceLake(spark, root)
-        .withColumn("shard", col("shard").cast("long")),
-      manifestPath, epoch, salt)
-  }
+      epoch: Long, salt: String = "graft"): Sampling.EpochManifest =
+    Sampling.writeEpochManifest(spark, manifestPath,
+      Sampling.EpochManifest(epoch, salt, Sampling.ScheduleAlgo,
+        readLive(spark, root).shards))
 
   /** READER-ISOLATED compaction of closed poll artifacts — the
     * [[LakeDir.compact]] `_live_v<k>` staged-fold protocol, with the
@@ -233,31 +237,25 @@ object SequenceLake {
           .reduce(_.unionByName(_))
       },
       (df, path) => {
-        // source metas: ONE union collect across the folded dirs
-        // (round 20 — each is a one-row table; the per-dir collects
-        // were one driver job apiece, pure fixed cost, guide §1.2)
-        val metaRows = srcDirs.map { d =>
-          import org.apache.spark.sql.functions.{col, lit}
-          LakeRead.parquet(spark, s"$d/sequences_meta")
-            .select(lit(d).as("__dir"), col("n_sequences"),
-              col("n_ids"), col("digest"), col("fold_algo"))
-        }.reduce(_.unionByName(_)).collect()
-        val byDir = metaRows.groupBy(_.getString(0))
+        // source metas: one-row tables, read on the driver (no job)
         val metas = srcDirs.map { d =>
-          val rows = byDir.getOrElse(d, Array.empty)
+          val rows = LakeRead.rows(spark, s"$d/sequences_meta")
           require(rows.length == 1,
             s"$d/sequences_meta must hold exactly one row " +
               s"(got ${rows.length})")
           rows.head
         }
-        metas.foreach(m => require(
-          m.getString(4) == Sampling.FoldAlgo,
-          s"sequence-lake fold: increment attested with fold " +
-            s"'${m.getString(4)}' but this engine folds " +
-            s"'${Sampling.FoldAlgo}' — format version mismatch"))
-        val expN = metas.map(_.getLong(1)).sum
-        val expIds = metas.map(_.getLong(2)).sum
-        val expD = metas.map(m => BigInt(m.getString(3))).sum.toString
+        metas.foreach { m =>
+          val algo = Sampling.foldAlgoOf(m)
+          require(algo == Sampling.FoldAlgo,
+            s"sequence-lake fold: increment attested with fold " +
+              s"'$algo' but this engine folds " +
+              s"'${Sampling.FoldAlgo}' — format version mismatch")
+        }
+        val expN = metas.map(_.getAs[Long]("n_sequences")).sum
+        val expIds = metas.map(_.getAs[Long]("n_ids")).sum
+        val expD = metas.map(m => BigInt(m.getAs[String]("digest")))
+          .sum.toString
         // land the folded generation; writeSequences re-attests its
         // meta from the MATERIALIZED fold rows (one aggregate over its
         // lineage cut — a torn write of the files themselves is caught

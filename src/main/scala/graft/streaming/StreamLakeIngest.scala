@@ -45,7 +45,10 @@ import graft.operators.{Curation, Dedup, DriverPool, LakeRead, Lineage,
   * survivors ([[graft.operators.Similarity.mergeKeepers]]: only keys
   * and priorities cross an exchange, the file count stays the
   * previous snapshot's), superseded snapshots pruned as soon as no
-  * replay can read them.
+  * replay can read them. A snapshot row is (cell, keeper, kv, kn,
+  * kok), with the priority `kok` stored as
+  * `struct<col1: double, id: bigint>` (signed centroid distance,
+  * keeper id).
   *
   * EXACTLY-ONCE: Structured Streaming re-executes a failed micro-batch
   * with the SAME batch id. Every write here is to a batch-id-derived
@@ -356,12 +359,12 @@ object StreamLakeIngest {
     // 6. DSIR gate against the newest model snapshot this batch may see
     val modelPath = LakeDir.versionBefore(spark, s"$lakeRoot/dsir",
       "model", batchId)
-    val model = LakeRead.parquet(spark, modelPath)
-      .select(col("b"), col("lr_micro")).collect().sortBy(_.getLong(0))
-    require(model.length == sp.dsirBuckets &&
-      model.head.getLong(0) == 0L,
+    val model = LakeRead.rows(spark, modelPath)
+      .map(r => (r.getAs[Long]("b"), r.getAs[Long]("lr_micro")))
+      .sortBy(_._1)
+    require(model.length == sp.dsirBuckets && model.head._1 == 0L,
       s"$modelPath is not a dense ${sp.dsirBuckets}-bucket DSIR model")
-    val lr = model.map(_.getLong(1))
+    val lr = model.map(_._2).toArray
     val s6 = s5.withColumn("iw_micro",
         Curation.dsirScoreMicro(col(textCol), lr, sp.dsirSalt))
       .where(col("iw_micro") >= sp.minMicro)

@@ -56,11 +56,10 @@ object StreamShardLayout {
   }
 
   private def readCursor(spark: SparkSession, path: String): Long = {
-    val rows = LakeRead.parquet(spark, path).select(col("total_weight"))
-      .collect()
+    val rows = LakeRead.rows(spark, path)
     require(rows.length == 1,
       s"$path is not a one-row cursor snapshot (${rows.length} rows)")
-    rows.head.getLong(0)
+    rows.head.getAs[Long]("total_weight")
   }
 
   /** One micro-batch appended to the layout. Pure function of (batch

@@ -147,6 +147,22 @@ class KeeperFoldSpec extends SparkTestBase {
     assert(o1s.distinct.length < o1s.length, "no distance tie")
   }
 
+  test("keeper tables store kok as struct<col1: double, id: bigint>, " +
+      "from the artifact write and from the fold") {
+    import org.apache.spark.sql.types._
+    def kok(dir: String): Seq[(String, DataType)] =
+      spark.read.parquet(dir).schema("kok").dataType
+        .asInstanceOf[StructType].fields.map(f => (f.name, f.dataType))
+        .toSeq
+    val stored = Seq("col1" -> DoubleType, "id" -> LongType)
+    val path = freshLake("graft_keepfold_kok")
+    assert(kok(s"$path/keepers") == stored)
+    Similarity.appendSemKeepers(inc, "vec_id", "embedding", path,
+      keeperCap = 3, nassign = 1)
+    assert(kok(s"$path/keepers") == stored)
+    Dedup.releaseIntermediates()
+  }
+
   test("appendSemKeepers (in place) equals the window formulation, " +
       "for an increment and for an empty one") {
     for (rows <- Seq(inc, inc.limit(0))) {

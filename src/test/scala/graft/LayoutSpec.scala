@@ -1390,4 +1390,167 @@ class LayoutSpec extends SparkTestBase {
     assert(scan.contains("PartitionFilters") &&
       (scan.contains("bucket_day#") || scan.contains("bucket_day =")))
   }
+
+  /** A sequence lake of two polls over disjoint shards: poll 0 lands
+    * shards 0..3, poll 1 shards 4..5, three documents a shard. */
+  private def twoPollLake(tag: String): String = {
+    import graft.operators.Sampling
+    import graft.streaming.SequenceLake
+    val root = java.nio.file.Files.createTempDirectory(tag).toString
+    def poll(shards: Range) = shards.map { sh =>
+      val ids = (sh * 3 until sh * 3 + 3).flatMap(d => (1L to 4L).map(p =>
+        (d.toLong, p, (d * 100 + p).toString)))
+        .toDF("doc_id", "pos", "token").withColumn("shard", lit(sh.toLong))
+      Sampling.packSequences(
+        Sampling.packTokens(ids, seqLen = 4L, groupCol = Some("shard")),
+        groupCol = Some("shard"))
+    }.reduce(_.unionByName(_))
+    SequenceLake.appendSequences(poll(0 until 4), root, 0L,
+      groupCol = Some("shard"))
+    SequenceLake.appendSequences(poll(4 until 6), root, 1L,
+      groupCol = Some("shard"))
+    root
+  }
+
+  test("loader read: pinEpoch plus a pinned consume runs at most 5 " +
+      "Spark jobs and returns what the distinct-job path returns") {
+    import graft.operators.Sampling
+    import graft.streaming.SequenceLake
+    val root = twoPollLake("graft_loaderjobs")
+    val mfP = java.nio.file.Files.createTempDirectory("graft_loadermf")
+      .toString + "/mf"
+    // warm the session's code paths so the count is the steady state
+    SequenceLake.consume(spark, root, 0L).collect()
+    var mf: Sampling.EpochManifest = null
+    var got = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsDuring {
+      mf = SequenceLake.pinEpoch(spark, root, mfP, epoch = 1L)
+      got = SequenceLake.consume(spark, root, 1L, pinned = Some(mf))
+        .collect()
+    }
+    assert(jobs <= 5, s"$jobs jobs")
+    assert(mf.shards == (0L until 6L))
+    assert(Sampling.readEpochManifest(spark, mfP) == mf)
+    // the public DataFrame forms (distinct jobs included) agree
+    val lake = SequenceLake.readSequenceLake(spark, root)
+      .withColumn("shard", col("shard").cast("long"))
+    val mfDf = Sampling.writeEpochManifest(lake, mfP + "_df", epoch = 1L)
+    assert(mfDf == mf)
+    def key(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getAs[Long]("shard"), r.getAs[Long]("seq"),
+        r.getAs[Long]("shard_rank"), r.getAs[Long]("seq_rank"),
+        r.getAs[String]("ids_digest"))).sorted.toSeq
+    val want = Sampling.consumeEpoch(lake, 1L, pinned = Some(mfDf))
+    assert(got.head.schema == want.schema)
+    assert(key(got) == key(want.collect()))
+    // unpinned: the driver-ranked schedule equals epochSchedule's
+    val unpinned = SequenceLake.consume(spark, root, 1L)
+    val viaRank = Sampling.consumeEpoch(lake, 1L)
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => (f.name, f.dataType))
+    assert(cols(unpinned) == cols(viaRank))
+    assert(key(unpinned.collect()) == key(viaRank.collect()))
+    graft.operators.Dedup.releaseIntermediates()
+  }
+
+  test("sequence lake shard set: the footer shard set equals the " +
+      "verified distinct(shard); a zero-row shard directory is not " +
+      "live") {
+    import graft.operators.Sampling
+    import graft.streaming.{LakeDir, SequenceLake}
+    val root = twoPollLake("graft_footershards")
+    // shard=9 of poll 1 holds one schema-only file and no row
+    val seqSchema = spark.read.parquet(s"$root/inc_b1/sequences")
+      .drop("shard").schema
+    spark.createDataFrame(spark.sparkContext
+        .emptyRDD[org.apache.spark.sql.Row], seqSchema)
+      .coalesce(1).write.parquet(s"$root/inc_b1/sequences/shard=9")
+    assert(new java.io.File(s"$root/inc_b1/sequences/shard=9")
+      .listFiles().exists(_.getName.endsWith(".parquet")))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val read = Sampling.readSequencesBatched(spark,
+      LakeDir.live(fs, new org.apache.hadoop.fs.Path(root)))
+    val verified = read.rows.select(col("shard").cast("long")).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(read.shards == verified)
+    assert(read.shards == (0L until 6L))
+    val mf = SequenceLake.pinEpoch(spark, root, s"$root/../" +
+      new java.io.File(root).getName + "_mf", epoch = 1L)
+    assert(mf.shards == (0L until 6L))
+    // a pinned shard the lake lost refuses against the footer set
+    fs.delete(new org.apache.hadoop.fs.Path(
+      s"$root/inc_b1/sequences/shard=5"), true)
+    intercept[IllegalArgumentException] {
+      SequenceLake.consume(spark, root, 1L, pinned = Some(mf)).collect()
+    }
+    graft.operators.Dedup.releaseIntermediates()
+  }
+
+  test("a legacy sequences meta without fold_algo refuses with the " +
+      "version diagnosis, at read and at compaction") {
+    import graft.operators.Sampling
+    import graft.streaming.SequenceLake
+    val root = twoPollLake("graft_legacymeta")
+    SequenceLake.appendSequences(
+      spark.read.parquet(s"$root/inc_b1/sequences").where(col("shard") === 5)
+        .withColumn("shard", lit(7L)),
+      root, 2L, groupCol = Some("shard"))
+    val metaP = s"$root/inc_b0/sequences_meta"
+    val legacy = spark.read.parquet(metaP)
+      .select("n_sequences", "n_ids", "digest").collect().toSeq
+    spark.createDataFrame(spark.sparkContext.parallelize(legacy, 1),
+        org.apache.spark.sql.types.StructType(
+          spark.read.parquet(metaP).schema.fields.take(3)))
+      .write.mode("overwrite").parquet(metaP)
+    for (body <- Seq(
+        () => Sampling.readSequences(spark, s"$root/inc_b0"),
+        () => SequenceLake.readSequenceLake(spark, root),
+        () => SequenceLake.compactSequenceLake(spark, root,
+          groupCol = Some("shard")))) {
+      val e = intercept[IllegalArgumentException](body())
+      assert(e.getMessage.contains("format version mismatch"),
+        e.getMessage)
+      assert(e.getMessage.contains("untagged"), e.getMessage)
+    }
+    graft.operators.Dedup.releaseIntermediates()
+  }
+
+  test("writeSequences attests what a recompute gives: the meta row, " +
+      "an uncached re-evaluation of the same plan and the read-back " +
+      "fold agree after the landing's cache is gone") {
+    import graft.operators.Sampling
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_seqrecompute").toString
+    // a multi-partition token stream through both pack shuffles
+    val ids = (0L until 40L).flatMap(d => (1L to 7L).map(p =>
+      (d, p, ((d * 31 + p * 7) % 97).toString)))
+      .toDF("doc_id", "pos", "token").repartition(5)
+    val plan = Sampling.packSequences(Sampling.packTokens(ids, seqLen = 8L))
+    val m = Sampling.writeSequences(plan, path)
+    def fold(df: org.apache.spark.sql.DataFrame): (Long, Long, String) = {
+      val r = df.agg(count(lit(1)), sum(col("n_ids")),
+        expr("cast(sum(cast(conv(substring(ids_digest, 1, 15), 16, 10) " +
+          "AS DECIMAL(38,0))) AS STRING)")).collect().head
+      (r.getLong(0), r.getLong(1), r.getString(2))
+    }
+    // the landing freed its cache: the plan re-evaluates from scratch,
+    // here under a different shuffle fan-out
+    assert(plan.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    val recomputed = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", "7")
+      try fold(plan) finally
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val meta = graft.operators.LakeRead.rows(spark, s"$path/sequences_meta")
+      .head
+    val stored = (meta.getAs[Long]("n_sequences"), meta.getAs[Long]("n_ids"),
+      meta.getAs[String]("digest"))
+    assert(stored == (m.nSequences, m.nIds, m.digest))
+    assert(recomputed == stored)
+    assert(fold(spark.read.parquet(s"$path/sequences")) == stored)
+    assert(stored._1 > 10L)
+    graft.operators.Dedup.releaseIntermediates()
+  }
 }
