@@ -12,7 +12,6 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.graftshim.SchemaShim
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** Parquet reads of lake artifacts that build their plan WITHOUT a
@@ -100,25 +99,6 @@ object LakeRead {
     }
   }
 
-  /** The values `v` of the `column=v` partition directories directly
-    * under `dir` whose data files' footers count at least one row —
-    * the distinct values of that column in `spark.read.parquet(dir)`,
-    * from file metadata alone (no Spark job, no row read). Empty when
-    * `dir` does not exist. */
-  def nonEmptyPartitions(spark: SparkSession, dir: String,
-      column: String): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
-    val prefix = s"$column="
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .filter(s => flatDataFiles(conf, s.getPath.toString)
-        .exists(f => footerRowCount(conf, f.getPath) > 0))
-      .map(_.getPath.getName.stripPrefix(prefix))
-  }
-
   /** The files the plain read of a FLAT directory scans, largest
     * first (Spark's split order): visible (no `_`/`.` prefix) and
     * non-empty. A single file is itself; a missing path, or a
@@ -179,9 +159,4 @@ object LakeRead {
       .flatMap(Option(_))
       .flatMap(json => Try(DataType.fromJson(json)).toOption)
       .collect { case s: StructType => s }
-
-  private def footerRowCount(conf: Configuration, file: Path): Long =
-    ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, conf),
-        ParquetMetadataConverter.NO_FILTER)
-      .getBlocks.asScala.map(_.getRowCount).sum
 }

@@ -659,10 +659,11 @@ object Sampling {
     readSequencesBatched(spark, Seq(path)).rows
 
   /** A verified read of one or more [[writeSequences]] artifacts: their
-    * rows as one union, and the `shard` values that hold rows (sorted;
-    * empty when the artifacts are not partitioned by `shard`). */
+    * rows as one union, and, when the read was asked for a shard
+    * column, the distinct values of that column over those rows
+    * (sorted). */
   private[graft] final case class VerifiedSequences(rows: DataFrame,
-      shards: Seq[Long])
+      shards: Option[Seq[Long]])
 
   /** Read back SEVERAL [[writeSequences]] artifacts as one union, each
     * verified against its own meta row — the SAME three checks
@@ -671,14 +672,15 @@ object Sampling {
     * whole set: the one-row metas are read on the driver
     * ([[LakeRead.rows]]), and every artifact's count, id total and
     * digest fold ride one `observe` over the union, run into the
-    * `noop` sink. The live shard set comes from the `shard=N`
-    * directories' Parquet footers ([[LakeRead.nonEmptyPartitions]]):
-    * a shard whose files hold no row is not live. It equals the
-    * verified rows' distinct shards, since the verify pass scans the
-    * same files. */
+    * `noop` sink. Given `shardCol`, the same pass also observes the
+    * set of that column's values (one long per shard), so a caller
+    * that needs the live shard set runs no `distinct` job for it; a
+    * shard whose files hold no row is not in it, whatever the layout
+    * (`shard=N` directories or a data column). */
   private[graft] def readSequencesBatched(
       spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String]): VerifiedSequences = {
+      paths: Seq[String],
+      shardCol: Option[String] = None): VerifiedSequences = {
     require(paths.nonEmpty, "readSequencesBatched needs >= 1 artifact")
     val metas = paths.map { p =>
       val rows = LakeRead.rows(spark, s"$p/sequences_meta")
@@ -708,12 +710,13 @@ object Sampling {
         coalesce(sum(when(mine, col("n_ids"))), lit(0L)).as(s"t$i"),
         coalesce(sequencesFold(when(mine, col("ids_digest"))),
           lit("(empty)")).as(s"d$i"))
-    }
+    } ++ shardCol.map(_ => collect_set(col("__shard")).as("shards"))
     val obs = org.apache.spark.sql.Observation(
       s"graft_sequences_verify_${java.util.UUID.randomUUID()}")
     seqs.zipWithIndex
       .map { case (df, i) =>
-        df.select(lit(i).as("__i"), col("n_ids"), col("ids_digest")) }
+        df.select(Seq(lit(i).as("__i"), col("n_ids"), col("ids_digest")) ++
+          shardCol.map(c => col(c).cast("long").as("__shard")): _*) }
       .reduce(_.unionByName(_))
       .observe(obs, checks.head, checks.tail: _*)
       .write.format("noop").mode("overwrite").save()
@@ -728,8 +731,8 @@ object Sampling {
             s"digest=$md) vs read (n=$n, ids=$t, digest=$d) at $p")
     }
     VerifiedSequences(seqs.reduce(_.unionByName(_)),
-      paths.flatMap(p => LakeRead.nonEmptyPartitions(spark,
-        s"$p/sequences", "shard")).map(_.toLong).distinct.sorted)
+      shardCol.map(_ => got("shards").asInstanceOf[scala.collection.Seq[_]]
+        .map(_.asInstanceOf[Long]).toSeq.sorted))
   }
 
   /** Deterministic EPOCH SCHEDULE over packed training sequences —
@@ -826,7 +829,7 @@ object Sampling {
   }
 
   /** Persist an epoch manifest whose shard set is already known (the
-    * sequence lake's footer shard set) — the write of the form above,
+    * sequence lake's observed shard set) — the write of the form above,
     * without its distinct job. */
   private[graft] def writeEpochManifest(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -908,11 +911,11 @@ object Sampling {
     * over the manifest's shard set — shard ranks computed in the
     * DRIVER from the pinned set (same md5-hex order as the
     * distributed rank; the set is one long per shard, codebook-sized)
-    * and looked up per row in a map literal, which both
-    * filters the lake
-    * to exactly the pinned shards AND replaces the unpinned distinct+
-    * rank job, so the pinned plan is never more expensive than the
-    * unpinned one. Shards landed after the pin are excluded (they
+    * and looked up per row (an array literal indexed by shard, or a
+    * broadcast join when the shard ids are sparse), which both filters
+    * the lake to exactly the pinned shards AND replaces the unpinned
+    * distinct+rank job, so the pinned plan is never more expensive
+    * than the unpinned one. Shards landed after the pin are excluded (they
     * join the next epoch); a pinned shard MISSING from the live rows
     * refuses loudly (the lake lost data, or the manifest belongs to
     * another lake). On an un-grown lake the pinned schedule equals
@@ -924,8 +927,13 @@ object Sampling {
     consumeEpochOver(seqs, None, epoch, cursor, salt, shardCol, seqCol,
       pinned)
 
+  /** A ranked shard set whose id span is at most this many times its
+    * size (plus 64) looks its ranks up in a dense array literal;
+    * a sparser one broadcast-joins them. */
+  private val DenseRankSlack = 2L
+
   /** [[consumeEpoch]] over rows whose shard set `live` is already
-    * known (the sequence lake's footer shard set, sorted): the pin is
+    * known (observed by the sequence lake's verify pass): the pin is
     * checked against it and the shards are ranked on the driver —
     * pinned or not, since an unpinned epoch ranks exactly the live
     * set — so no distinct job runs. `None` finds the set with one. */
@@ -963,27 +971,50 @@ object Sampling {
     }
     val sched = ranked match {
       case Some(shards) =>
+        val spark = seqs.sparkSession
+        import spark.implicits._
         // driver-side ranks over the set — the exact (md5 asc,
         // shard-string asc) order epochSchedule's distributed rank
-        // lands, stable no matter what lands later. They reach the
-        // rows as a map literal, one entry per shard (a broadcast join
-        // of a local table would run a job to collect it)
-        val rankOf = typedLit(shards
+        // lands, stable no matter what lands later
+        val rankOf = shards
           .map(sh => (sh, md5Hex(s"$sh|$epoch|$salt")))
           .sortBy { case (sh, k) => (k, sh.toString) }
-          .zipWithIndex.map { case ((sh, _), i) => (sh, i + 1L) }.toMap)
-        val w = Window.partitionBy(col(shardCol))
-          .orderBy(md5(concat(col(shardCol).cast("string"), lit("|"),
+          .zipWithIndex.map { case ((sh, _), i) => (sh, i + 1L) }
+        // never empty: a manifest pins >= 1 shard, an empty live set
+        // takes epochSchedule
+        val lo = shards.min
+        val span = shards.max - lo + 1
+        val sh = col(shardCol)
+        val w = Window.partitionBy(sh)
+          .orderBy(md5(concat(sh.cast("string"), lit("|"),
             col(seqCol).cast("string"), lit("|"),
             lit(epoch.toString), lit("|"), lit(salt))).asc,
             col(seqCol).asc)
-        // a null rank IS the pin filter (unpinned shards drop out);
-        // the columns keep the join's order: shard first
-        val rest = seqs.columns.filterNot(_ == shardCol).map(col)
-        seqs.withColumn(shardCol, col(shardCol).cast("long"))
-          .withColumn("shard_rank", try_element_at(rankOf, col(shardCol)))
-          .where(col("shard_rank").isNotNull)
-          .select((col(shardCol) +: rest :+ col("shard_rank")): _*)
+        val longShards = seqs.withColumn(shardCol, sh.cast("long"))
+        // either way an unranked shard drops out: that IS the pin filter
+        val ranked =
+          if (span <= DenseRankSlack * shards.size + 64) {
+            // shard ids are assigned contiguously, so the ranks fit an
+            // array literal indexed by shard - lo: an O(1) lookup a row
+            // and no job (the literal ships in the stage's task binary,
+            // once per executor, as a broadcast would). A shard outside
+            // the set reads rank 0; the coalesce keeps the column
+            // non-nullable, as the join's is. Columns keep the join's
+            // order: shard first
+            val byShard = rankOf.toMap.withDefaultValue(0L)
+            val dense = typedLit((lo until lo + span).map(byShard))
+            val rest = seqs.columns.filterNot(_ == shardCol).map(col)
+            longShards
+              .withColumn("shard_rank", coalesce(
+                when(sh.between(lo, lo + span - 1),
+                  element_at(dense, (sh - lo + 1).cast("int"))), lit(0L)))
+              .where(col("shard_rank") > 0L)
+              .select((sh +: rest :+ col("shard_rank")): _*)
+          } else
+            // a sparse set joins a broadcast table (one job collects it)
+            longShards.join(broadcast(rankOf.toDF(shardCol, "shard_rank")),
+              Seq(shardCol))
+        ranked
           .withColumn("seq_rank", row_number().over(w).cast("long"))
           .withColumn("epoch", lit(epoch))
       case None =>

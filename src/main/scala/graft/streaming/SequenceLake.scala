@@ -78,21 +78,22 @@ object SequenceLake {
     * re-check) before the union. O(1 + polls-since-compaction)
     * parquet roots at any lake age. */
   def readSequenceLake(spark: SparkSession, root: String): DataFrame =
-    readLive(spark, root).rows
+    readLive(spark, root, None).rows
 
-  /** [[readSequenceLake]] plus the lake's live shard set. The per-
-    * artifact meta checks run as ONE Spark job across the whole live
-    * set: at bench scale the per-job fixed cost of the verification
-    * jobs was the dominant term of every lake read (guide §1.2). */
-  private def readLive(spark: SparkSession,
-      root: String): Sampling.VerifiedSequences = {
+  /** [[readSequenceLake]], plus the lake's live `shard` set when
+    * `shardCol` names it. The per-artifact meta checks run as ONE
+    * Spark job across the whole live set: at bench scale the per-job
+    * fixed cost of the verification jobs was the dominant term of
+    * every lake read (guide §1.2). */
+  private def readLive(spark: SparkSession, root: String,
+      shardCol: Option[String]): Sampling.VerifiedSequences = {
     val rootP = new Path(root)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs = LakeDir.live(fs, rootP)
     require(dirs.nonEmpty,
       s"$root holds no landed sequence artifacts — land one with " +
         "appendSequences")
-    Sampling.readSequencesBatched(spark, dirs)
+    Sampling.readSequencesBatched(spark, dirs, shardCol)
   }
 
   /** One SELF-CONTAINED trainer poll, restartable with NO side
@@ -185,22 +186,22 @@ object SequenceLake {
     * joins the NEXT epoch — and a resume is exactly-once no matter
     * what landed in between (spec'd across a mid-epoch poll).
     *
-    * The pin is checked against the lake's footer shard set, and the
-    * shards are ranked on the driver, so the read runs no distinct
-    * job. */
+    * The pin is checked against the shard set the verify pass
+    * observes, and the shards are ranked on the driver, so the read
+    * runs no distinct job. */
   def consume(spark: SparkSession, root: String, epoch: Long,
       cursor: Option[Sampling.LoaderCursor] = None,
       salt: String = "graft",
       pinned: Option[Sampling.EpochManifest] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val lake = readLive(spark, root)
+    val lake = readLive(spark, root, Some("shard"))
     Sampling.consumeEpochOver(
       lake.rows.withColumn("shard", col("shard").cast("long")),
-      Some(lake.shards), epoch, cursor, salt, "shard", "seq", pinned)
+      lake.shards, epoch, cursor, salt, "shard", "seq", pinned)
   }
 
-  /** Pin THIS epoch's shard set from the live lake — the digest-
-    * verified lake read's footer shard set, persisted at
+  /** Pin THIS epoch's shard set from the live lake — the shard set
+    * the digest-verified lake read observes, persisted at
     * `manifestPath` ([[graft.operators.Sampling.writeEpochManifest]])
     * — the epoch-start step of the growth-safe loader protocol: pin,
     * then consume every (re)start of the epoch under the SAME
@@ -210,7 +211,7 @@ object SequenceLake {
       epoch: Long, salt: String = "graft"): Sampling.EpochManifest =
     Sampling.writeEpochManifest(spark, manifestPath,
       Sampling.EpochManifest(epoch, salt, Sampling.ScheduleAlgo,
-        readLive(spark, root).shards))
+        readLive(spark, root, Some("shard")).shards.get))
 
   /** READER-ISOLATED compaction of closed poll artifacts — the
     * [[LakeDir.compact]] `_live_v<k>` staged-fold protocol, with the

@@ -169,27 +169,6 @@ class LakeReadSpec extends SparkTestBase {
     }
   }
 
-  test("nonEmptyPartitions: the footer partition set equals the " +
-      "distinct column of the read, a zero-row partition excluded") {
-    val root = tmp("parts")
-    val d = s"$root/sequences"
-    Seq((1L, 0), (2L, 0), (3L, 2)).toDF("seq", "shard")
-      .write.partitionBy("shard").parquet(d)
-    // shard=5 holds one schema-only file with zero rows
-    Seq.empty[Long].toDF("seq").write.parquet(s"$d/shard=5")
-    new java.io.File(s"$d/shard=5/_SUCCESS").delete()
-    val want = spark.read.parquet(d).select(col("shard").cast("long"))
-      .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    var got = Seq.empty[String]
-    assert(jobsDuring {
-      got = LakeRead.nonEmptyPartitions(spark, d, "shard")
-    } == 0)
-    assert(got.map(_.toLong).sorted == want)
-    assert(want == Seq(0L, 2L))
-    assert(LakeRead.nonEmptyPartitions(spark, s"$root/nope", "shard")
-      .isEmpty)
-  }
-
   test("a parquet file without Spark row metadata falls back to the " +
       "plain read") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory

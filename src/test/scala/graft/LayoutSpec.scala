@@ -1453,12 +1453,41 @@ class LayoutSpec extends SparkTestBase {
     graft.operators.Dedup.releaseIntermediates()
   }
 
-  test("sequence lake shard set: the footer shard set equals the " +
+  test("pinned consumeEpoch ranks a dense shard set through an array " +
+      "literal and a sparse one through a broadcast join; both equal " +
+      "the unpinned schedule") {
+    import graft.operators.Sampling
+    for ((ids, broadcasts) <- Seq(
+        (Seq(3L, 4L, 5L, 7L, 8L), false),
+        (Seq(0L, 1000000000L, 3000000007L), true))) {
+      val seqs = ids.flatMap(sh => (0L until 4L).map(q => (sh, q,
+          s"d$sh-$q"))).toDF("shard", "seq", "ids_digest")
+        .repartition(3)
+      val mf = Sampling.EpochManifest(1L, "graft", Sampling.ScheduleAlgo,
+        ids)
+      val pinned = Sampling.consumeEpoch(seqs, 1L, pinned = Some(mf))
+      val plan = pinned.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastExchange") == broadcasts, plan)
+      val unpinned = Sampling.consumeEpoch(seqs, 1L)
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getAs[Long]("shard"), r.getAs[Long]("seq"),
+          r.getAs[Long]("shard_rank"), r.getAs[Long]("seq_rank"))).sorted
+          .toSeq
+      assert(pinned.schema == unpinned.schema)
+      assert(key(pinned) == key(unpinned))
+      // a pin of a subset drops the other shards
+      val sub = Sampling.consumeEpoch(seqs, 1L, pinned = Some(
+        mf.copy(shards = ids.take(2))))
+      assert(key(sub).map(_._1).distinct.sorted == ids.take(2))
+    }
+  }
+
+  test("sequence lake shard set: the observed shard set equals the " +
       "verified distinct(shard); a zero-row shard directory is not " +
       "live") {
     import graft.operators.Sampling
     import graft.streaming.{LakeDir, SequenceLake}
-    val root = twoPollLake("graft_footershards")
+    val root = twoPollLake("graft_observedshards")
     // shard=9 of poll 1 holds one schema-only file and no row
     val seqSchema = spark.read.parquet(s"$root/inc_b1/sequences")
       .drop("shard").schema
@@ -1469,21 +1498,61 @@ class LayoutSpec extends SparkTestBase {
       .listFiles().exists(_.getName.endsWith(".parquet")))
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val read = Sampling.readSequencesBatched(spark,
-      LakeDir.live(fs, new org.apache.hadoop.fs.Path(root)))
+    val dirs = LakeDir.live(fs, new org.apache.hadoop.fs.Path(root))
+    assert(Sampling.readSequencesBatched(spark, dirs).shards.isEmpty)
+    val read = Sampling.readSequencesBatched(spark, dirs, Some("shard"))
     val verified = read.rows.select(col("shard").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    assert(read.shards == verified)
-    assert(read.shards == (0L until 6L))
+    assert(read.shards.contains(verified))
+    assert(verified == (0L until 6L))
     val mf = SequenceLake.pinEpoch(spark, root, s"$root/../" +
       new java.io.File(root).getName + "_mf", epoch = 1L)
     assert(mf.shards == (0L until 6L))
-    // a pinned shard the lake lost refuses against the footer set
+    // a pinned shard the lake lost refuses against the observed set
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$root/inc_b1/sequences/shard=5"), true)
     intercept[IllegalArgumentException] {
       SequenceLake.consume(spark, root, 1L, pinned = Some(mf)).collect()
     }
+    graft.operators.Dedup.releaseIntermediates()
+  }
+
+  test("sequence lake shard set: a lake landed without groupCol (shard " +
+      "a data column, no shard=N directories) pins and consumes what " +
+      "the distinct-job forms give") {
+    import graft.operators.Sampling
+    import graft.streaming.SequenceLake
+    val root = java.nio.file.Files.createTempDirectory("graft_flatlake")
+      .toString
+    def poll(shards: Range) = {
+      val ids = shards.flatMap(sh => (sh * 3 until sh * 3 + 3).flatMap(d =>
+        (1L to 4L).map(p => (d.toLong, p, (d * 100 + p).toString,
+          sh.toLong))))
+        .toDF("doc_id", "pos", "token", "shard")
+      Sampling.packSequences(
+        Sampling.packTokens(ids, seqLen = 4L, groupCol = Some("shard")),
+        groupCol = Some("shard"))
+    }
+    SequenceLake.appendSequences(poll(0 until 3), root, 0L)
+    SequenceLake.appendSequences(poll(3 until 5), root, 1L)
+    assert(!new java.io.File(s"$root/inc_b0/sequences").listFiles()
+      .exists(_.getName.startsWith("shard=")))
+    val mfP = s"$root/../" + new java.io.File(root).getName + "_mf"
+    val mf = SequenceLake.pinEpoch(spark, root, mfP, epoch = 2L)
+    assert(mf.shards == (0L until 5L))
+    val lake = SequenceLake.readSequenceLake(spark, root)
+      .withColumn("shard", col("shard").cast("long"))
+    assert(Sampling.writeEpochManifest(lake, mfP + "_df", epoch = 2L) == mf)
+    def key(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Long]("shard"), r.getAs[Long]("seq"),
+        r.getAs[Long]("shard_rank"), r.getAs[Long]("seq_rank"),
+        r.getAs[String]("ids_digest"))).sorted.toSeq
+    val pinned = key(SequenceLake.consume(spark, root, 2L,
+      pinned = Some(mf)))
+    assert(pinned.map(_._1).distinct.sorted == (0L until 5L))
+    assert(pinned == key(Sampling.consumeEpoch(lake, 2L, pinned = Some(mf))))
+    assert(key(SequenceLake.consume(spark, root, 2L)) ==
+      key(Sampling.consumeEpoch(lake, 2L)))
     graft.operators.Dedup.releaseIntermediates()
   }
 
