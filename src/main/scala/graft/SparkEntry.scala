@@ -2409,7 +2409,7 @@ object SparkEntry {
     // ---- NEAR-DUP lake lifecycle through the FUSED step
     // (Dedup.minhashLshLakeStep: jobs 2+3 in one pass — each increment
     // is signed ONCE for both the probe and the fold-in; the two-job
-    // q200 signs twice, ~40% of its append per ProfLakeCycle).
+    // q200 signs twice, ~40% of its append per SCALE.md round 13).
     // Certified doc-level: the cycle's removed third-2 docs cover the
     // exact should-remove set (q200's gate set projected to its
     // third-2 doc). SIDE-EFFECTING.

@@ -230,8 +230,8 @@ object Dedup {
     // the ref side's banded signatures feed exactly ONE consumer (the
     // bucket join) — no persist: caching a single-use frame is pure
     // serialization overhead (measured 14% of this operator's wall at
-    // sf0.1, ProfQ190). Cross-increment reuse is the artifact path's
-    // job ([[writeBandedSignatures]]), not an in-job cache's.
+    // sf0.1, SCALE.md round 13). Cross-increment reuse is the artifact
+    // path's job ([[writeBandedSignatures]]), not an in-job cache's.
     crossJoinTail(newDf, bandedSignatures(refDf, textCol, idCol,
         shingleLen, bands, rowsPerBand, Some(bucketCap)),
       textCol, idCol, shingleLen, bands, rowsPerBand, minEstJaccard)
@@ -315,10 +315,11 @@ object Dedup {
     * back in, and return the survivors. The two-job composition
     * ([[minhashLshCrossFromArtifacts]] then
     * [[appendBandedSignatures]]) signs every increment twice — once to
-    * probe, once to append — which the 100× ProfLakeCycle probe
-    * measured at ~40% of the append's wall; here the banded rows are
-    * persisted across both consumers (a justified multi-consumer
-    * persist, unlike the single-use ones round 13 removed). Results
+    * probe, once to append — which the 100× lake fold-in cycle
+    * (SCALE.md round 13) measured at ~40% of the append's wall; here
+    * the banded rows are persisted across both consumers (a justified
+    * multi-consumer persist, unlike the single-use ones round 13
+    * removed). Results
     * are spec-pinned identical to the two-job path: same survivors,
     * same lake contents, same lifetime `bucketCap` accounting.
     * SIDE-EFFECTING (the append); the returned survivors frame is

@@ -754,8 +754,9 @@ object Similarity {
       LocalKMeans.fit(sample, nlist, seed)._2.toSeq.map(_.toSeq)
     // no persist on the ref assignment: it feeds exactly one consumer
     // (the keeper rank → the cell join) — single-use caching is pure
-    // overhead (the minhashLshCross finding, ProfQ190); cross-increment
-    // reuse belongs to the artifact path ([[writeSemDedupArtifacts]])
+    // overhead (the minhashLshCross finding, SCALE.md round 13);
+    // cross-increment reuse belongs to the artifact path
+    // ([[writeSemDedupArtifacts]])
     val keepers = semKeeperRank(
       semAssign(refDf, idCol, vecCol, centroids, keepFarthest, nassign,
         withOk = true), keeperCap)

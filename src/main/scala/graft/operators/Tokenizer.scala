@@ -34,8 +34,9 @@ object Tokenizer {
     * NOT training-corpus fertility — pretok pieces refine whitespace
     * words, so its merge space is a strict subset of class-run's and
     * at equal merge budget its fertility is equal or worse (the
-    * round-18 conjecture to the contrary is refuted by the ProfPretok
-    * A/B; byte-fallback class-run is the fertility-optimal default).
+    * round-18 conjecture to the contrary is refuted by the SCALE.md
+    * round-19 pretok A/B; byte-fallback class-run is the
+    * fertility-optimal default).
     * It buys the properties GPT-2 published it for: a BOUNDED piece
     * inventory, semantically-aligned boundaries (`'t` is the same
     * piece in don't/won't/can't by construction), and held-out
@@ -130,12 +131,6 @@ object Tokenizer {
   private val CutEvery = 32
   private val CutRounds = 8
 
-  /** Probe-visible counter: rounds where the collected prefix
-    * exhausted before `batch` disjoint picks and the exact per-pick
-    * argmax fallback ran (each fallback pick costs one extra full
-    * pair-count aggregate — the data-shape term in the learn wall). */
-  private[graft] val exhaustFallbacks =
-    new java.util.concurrent.atomic.AtomicLong(0)
   private final class VocabChain(var vocab: DataFrame) {
     private var lastCut: Option[DataFrame] = None
     private def cutNow(): Unit = {
@@ -563,11 +558,8 @@ object Tokenizer {
       // exact fallback: the prefix was full AND exhausted before
       // `batch` disjoint picks — continue the greedy with the
       // exclusion in the plan (one bounded argmax per remaining pick;
-      // each such pick is a FULL extra pair-count aggregate, so the
-      // probe-visible counter below is how a rising s/round trend is
-      // attributed to data shape vs plan cost)
+      // each such pick is a FULL extra pair-count aggregate)
       if (picks.length < batch && prefix.length == prefixN) {
-        exhaustFallbacks.incrementAndGet()
         prefixN = math.min(prefixN * 2, 65536)
         var more = true
         while (picks.length < batch && more) {

@@ -305,9 +305,8 @@ object StreamLakeIngest {
         s"$lakeRoot/budget/used_init")))
   }
 
-  /** The budget ledger's schema in one place: (source, tokens). Public
-    * so probe tooling initializes ledgers the gate can actually read. */
-  def writeEmptyLedger(spark: SparkSession, path: String): Unit =
+  /** The budget ledger's schema in one place: (source, tokens). */
+  private def writeEmptyLedger(spark: SparkSession, path: String): Unit =
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(

@@ -110,7 +110,14 @@ object StreamShardLayout {
 
   /** The shared landing tail of both append forms: cursor read,
     * assignment, layout + manifest increment writes, cursor write —
-    * all batch-id-derived Overwrite (replay-idempotent). */
+    * all batch-id-derived Overwrite (replay-idempotent).
+    *
+    * Precondition: `batch` is deterministic. `nRows` and `batchWeight`
+    * (the emptiness test and the next cursor) come from the pass
+    * inside `assign`, which runs before `Lineage.cut(asg)` evaluates
+    * the plan again to land the rows; the two agree only when both
+    * evaluations see the same rows. Every caller passes such a batch:
+    * a `foreachBatch` frame of a replayable source. */
   private def landIncrement(batch: DataFrame, layoutRoot: String,
       idCol: String, weightCol: String, batchId: Long,
       assign: Long => (DataFrame, Long, Long)): DataFrame = {
@@ -408,7 +415,7 @@ object StreamShardLayout {
     * newly closed shards must use [[appendTokens]] at ingest time +
     * [[packLandedShards]], whose token side reads the same pruned
     * `shard=N/` partitions as the layout side — O(new) on BOTH join
-    * sides (measured: ProfPackClosed / SCALE.md round 17). Calling
+    * sides (measured: SCALE.md round 17, the incremental pack at 100×). Calling
     * THIS form with a watermark (`fromShard > 0` — the poll-loop
     * shape) on a layout that HAS landed tokens is therefore always a
     * mistake (the caller pays O(corpus) per poll for nothing) and is

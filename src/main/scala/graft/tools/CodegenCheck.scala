@@ -6,11 +6,13 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * the FINAL adaptive plan (pre-execution formatted plans hide it). */
 object CodegenCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .withExtensions(new graft.GraftExtensions)
       .config("spark.sql.codegen.maxFields",
         sys.env.getOrElse("SPARK_GRAFT_MAXFIELDS", "512"))
-      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -14,10 +14,12 @@ import graft.operators.{Dedup, Similarity}
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .withExtensions(new graft.GraftExtensions)
       .config("spark.sql.codegen.maxFields", "512")
-      .config("spark.sql.shuffle.partitions", 8)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -15,7 +15,8 @@ object RunQuery {
       sys.error("usage: RunQuery <queryName> [sfDir] [maxRows]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val maxRows = args.lift(2).map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.GraftExtensions)

@@ -44,7 +44,8 @@ object ScaleGen {
     val out = args.lift(1).getOrElse("/tmp/sfx1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
     val tables = args.lift(3).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -104,65 +105,6 @@ object ScaleGen {
               / 1000.0 - 0.5) * 0.2)).cast("float")))
       shift("vec_id")(emb, r)
     }, 4)
-    // Zipf-vocabulary corpus for the BPE learning-wall probe
-    // (ProfBpeLearn): 50k docs x 100 tokens, each token a rank drawn
-    // log-uniformly in [1, 50k] (P(rank j) ~ 1/j — Zipf s=1), the rank
-    // spelled as digit->syllable words ("ta ne ri ..."), so words
-    // share rich subword structure (common syllable pairs merge
-    // first), frequent words are short, and the ~50k-word vocabulary
-    // does NOT saturate batched learning at the 31-word synthetic
-    // corpus's ~90-merge wall. Pure column expressions, no RNG.
-    write("zipfdocs", {
-      val V = 50000.0
-      val T = 100
-      def word(t: org.apache.spark.sql.Column) = {
-        val u = pmod(xxhash64(col("doc_id"), t), lit(1000000))
-          .cast("double") / 1000000.0
-        val j = floor(exp(u * math.log(V))).cast("long").cast("string")
-        Seq("ta", "ne", "ri", "so", "lu", "me", "ka", "do", "vi", "pu")
-          .zipWithIndex.foldLeft(j) { case (e, (s, d)) =>
-            regexp_replace(e, d.toString, s)
-          }
-      }
-      spark.range(0, 50000L).select(col("id").as("doc_id"))
-        .select(col("doc_id"),
-          array_join(transform(sequence(lit(1), lit(T)), t => word(t)),
-            " ").as("text"))
-    }, 16)
-    // MULTILINGUAL Zipf corpus (round-16 directive #7): the zipfdocs
-    // construction with the rank vocabulary PARTITIONED across four
-    // scripts by rank hash (a word is always one script) — Latin
-    // syllables, Cyrillic syllables, CJK (1-2 code points per word:
-    // the short-word regime whose merge dynamics differ), and digit
-    // strings. All four classes are unicode-mode words ([\p{L}\p{N}]),
-    // so the probe measures learn wall + fertility per script on one
-    // mixed corpus.
-    write("multidocs", {
-      val V = 50000.0
-      val T = 100
-      def word(t: org.apache.spark.sql.Column) = {
-        val u = pmod(xxhash64(col("doc_id"), t), lit(1000000))
-          .cast("double") / 1000000.0
-        val js = floor(exp(u * math.log(V))).cast("long").cast("string")
-        val scr = pmod(xxhash64(js), lit(4))
-        val latin = Seq("ta", "ne", "ri", "so", "lu", "me", "ka", "do",
-          "vi", "pu").zipWithIndex.foldLeft(js) { case (e, (s, d)) =>
-            regexp_replace(e, d.toString, s)
-          }
-        val cyr = Seq("та", "не", "ри", "со", "лу", "ме", "ка", "до",
-          "ви", "пу").zipWithIndex.foldLeft(js) { case (e, (s, d)) =>
-            regexp_replace(e, d.toString, s)
-          }
-        val cjk = translate(substring(js, -2, 2), "0123456789",
-          "数据模型训练语言文本")
-        when(scr === 0, latin).when(scr === 1, cyr)
-          .when(scr === 2, cjk).otherwise(js)
-      }
-      spark.range(0, 50000L).select(col("id").as("doc_id"))
-        .select(col("doc_id"),
-          array_join(transform(sequence(lit(1), lit(T)), t => word(t)),
-            " ").as("text"))
-    }, 16)
     // adversarial id-layout variant: SAME vectors, ids renumbered so id
     // order tracks a dominant embedding direction (dim 0) — the
     // id-clustered corpus (crawl-time/shard-correlated ids) on which a

@@ -43,7 +43,8 @@ object ScaleProbe {
       "op_simhash", "op_ngram",
       "op_ppjoin", "op_ivf_neardup", "op_semdedup", "op_crosssemdedup",
       "op_streamsemdedup", "op_streamdecon")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.GraftExtensions)

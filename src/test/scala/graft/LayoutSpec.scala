@@ -1622,4 +1622,79 @@ class LayoutSpec extends SparkTestBase {
     assert(stored._1 > 10L)
     graft.operators.Dedup.releaseIntermediates()
   }
+
+  test("appendTokens lands what a recompute gives: the kept token " +
+      "stream, evicted between the coverage check and the landing, " +
+      "re-evaluates, and the landed rows equal an uncached evaluation") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+      RepartitionByExpression}
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types._
+    import graft.streaming.StreamShardLayout
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_tokrecompute").toString
+    // 40 docs x 7 tokens over 5 partitions; every evaluation of the
+    // token stream counts its rows
+    val evals = spark.sparkContext.longAccumulator("token rows")
+    val rows = (0L until 40L).flatMap(d => (1L to 7L).map(p =>
+      Row(d, p, ((d * 31 + p * 7) % 97).toString)))
+    val toks = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 5).map { r => evals.add(1L); r },
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField("pos", LongType), StructField("token", StringType))))
+    val docs = (0L until 40L).map(i => (i, 7L)).toDF("doc_id", "n_tokens")
+    StreamShardLayout.initLayout(spark, root)
+    val a = StreamShardLayout.appendIncrement(docs, root, "doc_id",
+      "n_tokens", shardWeight = 28L, batchId = 0L)
+    // the landing's plan is the only one of the call that repartitions
+    // the kept stream: drop its cached blocks there, once, on the
+    // driver thread before that plan runs (the storage level stays, as
+    // after a lost executor)
+    var evicted = 0
+    val evict = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (evicted == 0 &&
+            plan.exists(_.isInstanceOf[RepartitionByExpression]))
+          plan.foreach {
+            case r: InMemoryRelation
+                if r.output.exists(_.name == "token") =>
+              val cached = r.cacheBuilder.cachedColumnBuffers
+              val level = cached.getStorageLevel
+              cached.unpersist(blocking = true)
+              cached.persist(level)
+              evicted += 1
+            case _ => ()
+          }
+        plan
+      }
+    }
+    val before = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = before :+ evict
+    try StreamShardLayout.appendTokens(toks, a, root, batchId = 0L)
+    finally spark.experimental.extraOptimizations = before
+    assert(evicted == 1)
+    // the coverage check filled the cache; the landing found it gone
+    // and evaluated the stream again
+    assert(evals.value == 2L * rows.length)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id"), col("pos"), col("token"),
+          col("shard").cast("long"), col("offset").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+          r.getLong(3), r.getLong(4))).toSeq.sorted
+    val landed = sorted(spark.read.parquet(s"$root/tokens/inc_b0"))
+    val recomputed = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", "7")
+      try sorted(toks.join(a.select(col("doc_id"),
+          col("shard").cast("long").as("shard"), col("offset")),
+        Seq("doc_id")))
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    assert(landed.length == rows.length)
+    assert(landed.map(_._4).distinct.length == 10)
+    assert(landed == recomputed)
+    graft.operators.Dedup.releaseIntermediates()
+  }
 }
